@@ -1,82 +1,112 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+import org.apache.spark.scheduler.{SparkListener,
+  SparkListenerStageCompleted, StageInfo}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.graftbridge.Bridge
 
-/** Benchmark main: runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line
-  * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
+/** The measurement main. With no arguments it runs every SparkEntry query
+  * against SPARK_GRAFT_SF_DIR and prints ONE JSON line
+  * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`
+  * plus a compact summary line, the two lines a stdout parser reads.
+  *
+  * Three modes serve one-off measurement, each under the same session
+  * rule, [[Graft.prepare]] step and sf0.001 warm-up as the suite; an
+  * empty query list means every query:
+  *   - `time [--dirs=a,b] q…`: best and worst of GRAFT_BENCH_N runs, one
+  *     line per query and directory. GRAFT_AB="confKey=valA|valB"
+  *     alternates the two values of a runtime SQL conf on every repeat
+  *     WITHIN one JVM (page cache, JIT, host load shared) — the only
+  *     A/B that survives host-load drift of several seconds between JVM
+  *     invocations. Several `--dirs` at growing scale factors
+  *     measure an operator's growth exponent (SCALE.md).
+  *   - `profile q…`: one run per query and a table of its stages: wall,
+  *     tasks, task time, input, shuffle read/write, GC, CPU and
+  *     deserialization.
+  *   - `plan <outDir> <tag> [--final] q…`: writes `<outDir>/<q>_<tag>.txt`
+  *     and prints it: the formatted plan before execution, or with
+  *     `--final` the executed final AQE plan (stage reuse, broadcast
+  *     demotion and coalescing exist only after execution) headed by its
+  *     reuse and scan counts.
   *
   * Each query is forced through the `noop` sink so the full plan executes
   * (a bare `.count()` would let Catalyst prune every projected column and
   * under-report the work).
+  * `tools/run_graft.sh graft.Bench time q14_rollup d87_dedup_components`
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Shuffle partitions AND the AQE advisory partition size are sized to
-    // the DATA, capped by cores/production defaults — one shared rule,
-    // Graft.dataSizedConfs (history and the 1 MB-advisory incident are
-    // documented there and in OPTIMIZATION_r13.md finding #5; the 4 MB
-    // advisory floor was re-validated on the FULL 185-query interleaved
-    // A/B this round — see OPTIMIZATION_r14.md). GRAFT_PARTS /
-    // GRAFT_ADVISORY override for experiments.
-    val (autoParts, autoAdvisory) = Graft.dataSizedConfs(sfDir, cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", autoParts)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", autoAdvisory)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("GRAFT_PFIRST", "false"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    args.toList match {
+      case Nil => suite(sfDir)
+      case "time" :: rest => time(sfDir, rest)
+      case "profile" :: rest => profile(sfDir, rest)
+      case "plan" :: outDir :: tag :: rest => plan(sfDir, outDir, tag, rest)
+      case _ =>
+        System.err.println("usage: graft.Bench [time [--dirs=a,b] q... | " +
+          "profile q... | plan <outDir> <tag> [--final] q...]")
+        sys.exit(2)
+    }
+  }
 
-    // Production train/serve split: build the vector index ONCE for the
-    // bench corpus so s100/s101/s102 time the SERVE path (stored
-    // centroids/assignments/codebook/codes; zero training stages in the
-    // plan). Build cost — the s98/s99-shaped training pipeline — is
-    // reported separately: it is a per-corpus setup step, not a query.
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft_bench_wh").toString
-    val tb0 = System.nanoTime()
-    try {
-      val cmds = new commands.TableCommands(spark, wh)
-      operators.VectorIndex.build(spark, sfDir, cmds)
-      operators.DedupIndex.build(spark, sfDir, cmds)
-      System.err.println(
-        f"[bench] index builds: ${(System.nanoTime() - tb0) / 1e9}%.3f s")
-    } catch { case e: Throwable =>
-      System.err.println(
-        s"[bench] index build failed (inline fallback): ${e.getMessage}")
+  private def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  private def since(t0: Long): Double = (System.nanoTime() - t0) / 1e9
+
+  /** The named queries, or every query when none is named. */
+  private def queryNames(named: Seq[String]): Seq[String] = {
+    val unknown = named.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    if (named.isEmpty) SparkEntry.queries.keys.toSeq.sorted else named
+  }
+
+  /** GRAFT_AB="confKey=valA|valB" as (confKey, valA, valB). */
+  def abArms(s: String): (String, String, String) =
+    Graft.confEntries("GRAFT_AB", s) match {
+      case Seq((k, v)) =>
+        val arms = v.split("\\|", -1).map(_.trim)
+        require(arms.length == 2 && arms.forall(_.nonEmpty),
+          s"GRAFT_AB needs exactly two '|'-separated values, got: '$v'")
+        (k, arms(0), arms(1))
+      case _ => throw new IllegalArgumentException(
+        s"GRAFT_AB must be one confKey=valA|valB entry, got: '$s'")
     }
 
-    // index-build artifacts stay materialized across the whole run; every
-    // QUERY's localCheckpoint blocks are unpersisted deterministically in
-    // the quiesce step below (ContextCleaner-via-System.gc was the only
-    // collector before — round-13 advice)
-    val keepRdds = spark.sparkContext.getPersistentRDDs.keySet
-    def dropQueryRdds(): Unit =
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!keepRdds.contains(id)) rdd.unpersist(false)
-      }
-
-    // Warm-up: run the full suite once at the smallest scale factor so
-    // JIT + whole-stage-codegen compilation (cached by generated source,
-    // which is identical across scale factors) is excluded from the timed
-    // runs — the measurement is steady-state execution, not compiler cost.
-    SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
+  /** Warm-up: run `names` once at the smallest scale factor so JIT +
+    * whole-stage-codegen compilation (cached by generated source, which
+    * is identical across scale factors) is excluded from the timed runs —
+    * the measurement is steady-state execution, not compiler cost. */
+  private def warmUp(spark: SparkSession, names: Seq[String],
+      prep: Graft.Prepared): Unit = {
     val warmDir = "/root/testdata/sf0.001"
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-      try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
+    names.foreach { n =>
+      try noop(SparkEntry.queries(n)(spark, warmDir))
       catch { case _: Throwable => () }
-      spark.catalog.clearCache()
-      dropQueryRdds()
+      prep.release()
     }
+  }
+
+  /** The session and the prepared indexes every mode measures under. */
+  private def open(sfDir: String, appName: String)
+      : (SparkSession, Graft.Prepared) = {
+    val spark = Graft.session(appName = appName, sfDir = sfDir)
+    (spark, Graft.prepare(spark, sfDir))
+  }
+
+  private def suite(sfDir: String): Unit = {
+    // Index-build cost is a per-corpus setup step, not a query: it stays
+    // out of the timed region, and a failed build is a listed failure
+    // ("index_build"), because the inline fallback would change what is
+    // timed. (The data-sized partitions/advisory history is in
+    // OPTIMIZATION_r13.md finding #5 and OPTIMIZATION_r14.md.)
+    val (spark, prep) = open(sfDir, "graft-bench")
+    noop(SparkEntry.entry(spark))
+    warmUp(spark, SparkEntry.queries.keys.toSeq.sorted, prep)
 
     // Run identity: every artifact this invocation emits (the full line,
     // the compact summary, bench_out.json, BENCH_SUMMARY.json) carries the
@@ -85,7 +115,7 @@ object Bench {
     // run A's per-query map beside run B's committed file and per-query
     // diffs chased 6-second phantoms).
     val runId = java.util.UUID.randomUUID.toString.take(8)
-    var failed = List.empty[String]
+    var failed = prep.failure.map(_ => "index_build").toList
     // best-of-N (GRAFT_BENCH_N, default 3): this host shows multi-second
     // external-load noise, and best-of-2 still lets one bad pair through
     // (observed: q14/q17/t75 drifting ~2x between rounds with unchanged plans)
@@ -101,13 +131,12 @@ object Bench {
       // neighbor's GC/cleanup otherwise lands inside this query's
       // measurement (observed: d85 at 6.6 s mid-suite vs 2.3 s standalone)
       def once(): Option[Double] = {
-        spark.catalog.clearCache()
-        dropQueryRdds()
+        prep.release()
         System.gc()
         val t0 = System.nanoTime()
         try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Some((System.nanoTime() - t0) / 1e9)
+          noop(fn(spark, sfDir))
+          Some(since(t0))
         } catch { case e: Throwable =>
           if (!failed.contains(name)) {
             failed ::= name
@@ -156,19 +185,7 @@ object Bench {
       else try {
         val tmp = java.nio.file.Files.createTempDirectory("graft_bench_duck")
         try {
-          def q(s: String): String = "\"" + s.flatMap {
-            case '"'  => "\\\""
-            case '\\' => "\\\\"
-            case '\n' => "\\n"
-            case '\r' => "\\r"
-            case '\t' => "\\t"
-            case c if c < ' ' => f"\\u${c.toInt}%04x"
-            case c => c.toString
-          } + "\""
-          java.nio.file.Files.writeString(tmp.resolve("oracle_sql.json"),
-            SparkEntry.oracleSql
-              .map { case (k, v) => s"${q(k)}: ${q(v)}" }
-              .mkString("{", ",", "}"))
+          Verify.writeOracleSql(tmp)
           // stderr streams through (a full stderr pipe would deadlock the
           // readAllBytes below); stdout is the one JSON line we capture
           val p = new ProcessBuilder("python3", script.getPath, sfDir,
@@ -271,5 +288,126 @@ object Bench {
     // a failing query must fail the round loudly — a silent near-zero time
     // would let a regression masquerade as a speedup
     if (failed.nonEmpty) sys.exit(1)
+  }
+
+  private def time(sfDir: String, args: List[String]): Unit = {
+    val dirs = args.collectFirst {
+      case a if a.startsWith("--dirs=") =>
+        a.stripPrefix("--dirs=").split(',').toSeq
+    }.getOrElse(Seq(sfDir))
+    val names = queryNames(args.filterNot(_.startsWith("--dirs=")))
+    val ab = sys.env.get("GRAFT_AB").map(abArms)
+    val reps = sys.env.getOrElse("GRAFT_BENCH_N", "3").toInt
+    val spark = Graft.session(appName = "graft-bench-time", sfDir = sfDir)
+    // one arm per GRAFT_AB value, or a single arm that sets nothing
+    val arms: Seq[(String, () => Unit)] = ab match {
+      case Some((k, a, b)) =>
+        Seq(a, b).map(v => s"[$k=$v] " -> (() => spark.conf.set(k, v)))
+      case None => Seq("" -> (() => ()))
+    }
+    // dir-major: one index build per dir, and each scale's page-cache
+    // state is consistent across its queries
+    dirs.zipWithIndex.foreach { case (d, i) =>
+      val prep = Graft.prepare(spark, d)
+      if (i == 0) warmUp(spark, names, prep)
+      val totals = Array.fill(arms.size)(0.0)
+      names.foreach { n =>
+        val runs = (1 to reps).map(_ => arms.map { case (_, set) =>
+          set()
+          prep.release()
+          System.gc()
+          val t0 = System.nanoTime()
+          noop(SparkEntry.queries(n)(spark, d))
+          since(t0)
+        })
+        val cols = arms.indices.map { a =>
+          val ts = runs.map(_(a))
+          totals(a) += ts.min
+          f"${arms(a)._1}min=${ts.min}%.3f max=${ts.max}%.3f"
+        }
+        println(s"TIME $d $n ${cols.mkString(" ")} n=$reps")
+      }
+      val sums = arms.indices.map(a => f"${arms(a)._1}${totals(a)}%.3f")
+      println(s"TIME_TOTAL $d ${sums.mkString(" ")} s " +
+        s"(${names.size} queries, min-of-$reps)")
+    }
+    spark.stop()
+  }
+
+  private def profile(sfDir: String, args: List[String]): Unit = {
+    val names = queryNames(args)
+    val (spark, prep) = open(sfDir, "graft-bench-profile")
+    warmUp(spark, names, prep)
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        stages.add(e.stageInfo); ()
+      }
+    })
+    names.foreach { n =>
+      prep.release()
+      System.gc()
+      Bridge.drainListeners(spark)
+      stages.clear()
+      val t0 = System.nanoTime()
+      noop(SparkEntry.queries(n)(spark, sfDir))
+      val wall = since(t0)
+      Bridge.drainListeners(spark)
+      val done = stages.asScala.toSeq.sortBy(_.stageId)
+      def wallOf(s: StageInfo): Double =
+        (for (a <- s.submissionTime; b <- s.completionTime)
+          yield (b - a) / 1e3).getOrElse(0.0)
+      println(f"===== $n wall=$wall%.3f s =====")
+      done.foreach { s =>
+        val m = s.taskMetrics
+        println(f"  stage ${s.stageId}%4d wall=${wallOf(s)}%7.3f " +
+          f"tasks=${s.numTasks}%4d cpuSum=${m.executorRunTime / 1e3}%8.2f s " +
+          f"in=${m.inputMetrics.bytesRead / 1e6}%8.2f MB " +
+          f"sr=${m.shuffleReadMetrics.totalBytesRead / 1e6}%7.2f MB " +
+          f"sw=${m.shuffleWriteMetrics.bytesWritten / 1e6}%7.2f MB " +
+          f"gc=${m.jvmGCTime / 1e3}%6.2f cpu=${m.executorCpuTime / 1e9}%7.2f " +
+          f"deser=${m.executorDeserializeTime / 1e3}%5.2f  " +
+          s.name.takeWhile(_ != '\n'))
+      }
+      println(f"  [stage wall sum=${done.map(wallOf).sum}%.3f s, n=${done.size}]")
+    }
+    spark.stop()
+  }
+
+  private def plan(sfDir: String, outDir: String, tag: String,
+      args: List[String]): Unit = {
+    val executed = args.contains("--final")
+    val names = queryNames(args.filterNot(_ == "--final"))
+    val (spark, prep) = open(sfDir, "graft-bench-plan")
+    Files.createDirectories(Paths.get(outDir))
+    names.foreach { n =>
+      try {
+        val df = SparkEntry.queries(n)(spark, sfDir)
+        val text =
+          if (!executed) df.queryExecution.explainString(FormattedMode)
+          else {
+            // drive THIS DataFrame's QueryExecution (df.write would plan a
+            // fresh one and leave this plan un-finalized, hiding every AQE
+            // decision)
+            df.queryExecution.toRdd.foreach(_ => ())
+            // the adaptive plan string appends "== Initial Plan ==" after
+            // the final plan — count only the final section or every
+            // number doubles
+            val p = df.queryExecution.executedPlan.toString
+              .split("== Initial Plan ==")(0)
+            def count(w: String) = p.sliding(w.length).count(_ == w)
+            s"reused_exchanges=${count("ReusedExchange")} " +
+              s"scans=${count("Scan parquet")}\n$p"
+          }
+        val path = Paths.get(outDir, s"${n}_$tag.txt")
+        Files.writeString(path, text)
+        println(s"===== $n -> $path =====")
+        println(text)
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[plan] $n failed: ${e.getMessage}")
+      }
+      prep.release()
+    }
+    spark.stop()
   }
 }

@@ -17,54 +17,120 @@ object Graft {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** The data-sized (shuffle partitions, AQE advisory bytes) pair every
-    * measurement entry point shares — Bench, ABench, and (via [[session]])
-    * ProfQ/ExplainDump/TimeQ — so plan dumps and stage profiles execute
-    * under the SAME AQE coalescing as the bench (round-13 advice: evidence
-    * tooling ran at the 64 MB default while the bench ran data-sized, so
-    * dumped plans could diverge from bench execution). Both values derive
-    * from input bytes and saturate at production defaults on real inputs;
-    * GRAFT_PARTS / GRAFT_ADVISORY override for experiments. */
+  /** The data-sized (shuffle partitions, AQE advisory bytes) pair of
+    * [[sessionConfs]], so correctness dumps, plan dumps, stage profiles
+    * and the bench all execute under the SAME AQE coalescing (round-13
+    * advice: evidence tooling ran at the 64 MB default while the bench ran
+    * data-sized, so dumped plans could diverge from bench execution). Both
+    * values derive from input bytes and saturate at production defaults
+    * on real inputs; `GRAFT_CONF` overrides them for experiments. */
   def dataSizedConfs(sfDir: String, cpus: Int): (String, String) = {
     val dataBytes = Option(new java.io.File(sfDir).listFiles())
       .getOrElse(Array.empty).filter(_.isFile).map(_.length).sum
     val parts = math.max(8L, math.min(cpus.toLong, dataBytes / (32L << 20)))
     val advisory = math.max(4L << 20,
       math.min(64L << 20, dataBytes / math.max(1, cpus)))
-    (sys.env.getOrElse("GRAFT_PARTS", parts.toString),
-      sys.env.getOrElse("GRAFT_ADVISORY", advisory.toString))
+    (parts.toString, advisory.toString)
   }
 
-  /** Build a session tuned for local[N] work that still mirrors what we'd
-    * deploy on a real cluster: AQE on (skew-join + coalesce), data-sized
-    * shuffle partitions + advisory (from SPARK_GRAFT_SF_DIR, matching
-    * Bench), UTC for oracle parity.
-    */
-  def session(master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
-              appName: String = "graft"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val (parts, advisory) = dataSizedConfs(
+  /** Cores of the local master and of the data sizing: SPARK_GRAFT_CPUS,
+    * else every available processor. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** The `key=value` entries of a `;`-separated override such as
+    * GRAFT_CONF or GRAFT_AB: entries are trimmed and empty ones skipped (a
+    * trailing `;` is harmless); an entry without a key before its `=`
+    * fails with a message naming `name` instead of an opaque MatchError. */
+  def confEntries(name: String, s: String): Seq[(String, String)] =
+    s.split(';').toSeq.map(_.trim).filter(_.nonEmpty).map { kv =>
+      val eq = kv.indexOf('=')
+      require(eq > 0, s"$name entries must be key=value, got: '$kv' in '$s'")
+      (kv.substring(0, eq).trim, kv.substring(eq + 1).trim)
+    }
+
+  /** The only session builder of the engine's mains: [[sessionConfs]] for
+    * [[cpus]] cores and `sfDir`'s data (default SPARK_GRAFT_SF_DIR), then
+    * the GRAFT_CONF="k=v;…" overrides on top. */
+  def session(
+      master: String = s"local[$cpus]",
+      appName: String = "graft",
+      sfDir: String =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
-      cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(master)
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // size-based coalescing: at test scale most shuffles collapse to a
-      // few partitions (task-scheduling overhead dominates otherwise); at
-      // 100 TB the same setting right-sizes partitions to ~64 MB targets
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // events.parquet is TIMESTAMP(NANOS); read as long + explicit downcast
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+  ): SparkSession = {
+    val confs = sessionConfs(cpus, sfDir) ++
+      sys.env.get("GRAFT_CONF").toSeq.flatMap(confEntries("GRAFT_CONF", _))
+    val spark = confs.foldLeft(SparkSession.builder().master(master)
+      .appName(appName)) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** The one session rule, as data: AQE on (skew-join + coalesce),
+    * data-sized shuffle partitions + advisory for `sfDir`, UTC for oracle
+    * parity, and checkpoint files deleted with their RDDs (a reliable
+    * [[cut]] under GRAFT_CHECKPOINT_DIR otherwise leaks one file set per
+    * call for the life of the session). */
+  def sessionConfs(cpus: Int, sfDir: String): Seq[(String, String)] = {
+    val (parts, advisory) = dataSizedConfs(sfDir, cpus)
+    Seq(
+      "spark.sql.shuffle.partitions" -> parts,
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> advisory,
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+      // size-based coalescing: at test scale most shuffles collapse to a
+      // few partitions (task-scheduling overhead dominates otherwise); at
+      // 100 TB the same setting right-sizes partitions to ~64 MB targets
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+      // events.parquet is TIMESTAMP(NANOS); read as long + explicit downcast
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false",
+      "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true")
+  }
+
+  /** What [[prepare]] leaves behind: the index-build failure, if any, and
+    * the per-query cleanup. */
+  final case class Prepared(failure: Option[String], release: () => Unit)
+
+  /** The setup every measurement and dump main shares. Builds the vector
+    * and dedup indexes for `sfDir` (the production train/serve split:
+    * s100+ and d101 then run the SERVE path over stored artifacts, and the
+    * build cost stays out of every query), then records the persistent
+    * RDDs that exist at that point. `release()` clears the cache and
+    * unpersists every OTHER persistent RDD — each query's localCheckpoint
+    * blocks — so nothing a query leaves behind lands inside the next
+    * one's measurement. A build that throws, or that leaves either index
+    * unserved, is reported in `failure` and logged; queries then fall
+    * back to inline training, which is correct but not what is timed. */
+  def prepare(spark: SparkSession, sfDir: String): Prepared = {
+    val t0 = System.nanoTime()
+    val failure =
+      try {
+        val cmds = new commands.TableCommands(spark, java.nio.file.Files
+          .createTempDirectory("graft_wh").toString)
+        operators.VectorIndex.build(spark, sfDir, cmds)
+        operators.DedupIndex.build(spark, sfDir, cmds)
+        val unserved = Seq(
+          "vector" -> operators.VectorIndex.served(spark, sfDir).isEmpty,
+          "dedup" -> operators.DedupIndex.served(spark, sfDir).isEmpty)
+          .collect { case (n, true) => n }
+        if (unserved.isEmpty) None
+        else Some(s"${unserved.mkString(" and ")} index not served after build")
+      } catch { case scala.util.control.NonFatal(e) => Some(e.toString) }
+    failure match {
+      case Some(f) => System.err.println(s"[graft] index build failed: $f")
+      case None => System.err.println(
+        f"[graft] index builds: ${(System.nanoTime() - t0) / 1e9}%.3f s")
+    }
+    val keep = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    Prepared(failure, () => {
+      spark.catalog.clearCache()
+      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+        if (!keep(id)) rdd.unpersist(false)
+      }
+    })
   }
 
   /** Cut lineage on a shared multi-consumed frame. Against RELIABLE
@@ -85,20 +151,6 @@ object Graft {
     if (sc.getCheckpointDir.isDefined) df.checkpoint(eager)
     else df.localCheckpoint(eager)
   }
-
-  /** Measurement toggle for optimization A/Bs: a runtime session conf
-    * `graft.opt.<name>` (default "on") flips an operator between its
-    * shipped form and the pre-optimization baseline INSIDE one JVM, so
-    * ABench's interleaved `GRAFT_AB="graft.opt.<name>=on|off"` can decide
-    * keep-or-revert without cross-JVM host-noise (the only protocol that
-    * survives this machine's multi-second drift). Call sites are
-    * TRANSIENT by design: a decided toggle is folded back to the winning
-    * branch with the A/B numbers in a comment (r14 decided and folded
-    * six of them — t95_pin, d93_window, d99_ckpt, s105_ckpt, s107_ckpt,
-    * t100_sparse/t104_counts); the helper stays for the next round's
-    * experiments. */
-  def optFlag(spark: SparkSession, name: String): Boolean =
-    spark.conf.get(s"graft.opt.$name", "on") != "off"
 
   /** Per-session memo of resolved table frames. `spark.read.parquet` does
     * footer/schema resolution and file listing EAGERLY on every call; at
@@ -156,7 +208,7 @@ object Graft {
     * `events.ts` has shipped in two physical layouts across test-data
     * generations: Parquet TIMESTAMP(NANOS) — which Spark's vectorized
     * reader only accepts as a long via `spark.sql.legacy.parquet
-    * .nanosAsLong` (set in every session builder), downcast here to
+    * .nanosAsLong` (set by [[sessionConfs]]), downcast here to
     * microseconds — and native TIMESTAMP(MICROS), which Spark reads as
     * TIMESTAMP_NTZ. Both normalize to the session-zone TimestampType
     * (sessions pin UTC, so the NTZ cast is value-preserving and DuckDB

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Synthesize an N× scale-up of a test-data directory for scaling-law
-  * measurement (see `ScaleStress` and SCALE.md).
+  * measurement (see `Bench time --dirs=` and SCALE.md).
   *
   * The point is to measure how each operator's wall-clock grows with corpus
   * size, so the scale-up must preserve the DATA STRUCTURE the operators key

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * index append) and `VectorStreams.ingestBatch` (route/encode + assign/
   * codes appends) — directly, so the numbers isolate operator cost from
   * MemoryStream scheduling noise. The question these answer is the one
-  * the batch ScaleStress tables can't: "what does one ingest micro-batch
+  * the batch scaling tables can't: "what does one ingest micro-batch
   * cost as the maintained index absorbs it, and does batch N+1 pay for
   * batch N's appends?"
   *

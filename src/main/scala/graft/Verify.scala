@@ -1,8 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import java.nio.file.{Files, Path, Paths}
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (`tools/check.py`). Runs under the
+  * session rule and the [[Graft.prepare]] step that [[Bench]] times, so
+  * the oracle checks the timed config. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
@@ -11,46 +12,26 @@ object Verify {
       case Some(p) => val ps = p.split(','); n => ps.exists(n.startsWith)
       case None => _ => true
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session(appName = "graft-verify", sfDir = sfDir)
     new java.io.File(outDir).mkdirs()
-    // Production train/serve split: build the vector index once so the
-    // s100/s101/s102 dumps exercise (and oracle-gate) the SERVE path —
-    // stored artifacts are bit-identical to inline training, and a build
-    // failure falls back to the inline path, never a missing dump.
-    try {
-      val wh = new commands.TableCommands(
-        spark, Files.createTempDirectory("graft_verify_wh").toString)
-      operators.VectorIndex.build(spark, sfDir, wh)
-      operators.DedupIndex.build(spark, sfDir, wh)
-    } catch { case e: Throwable =>
-      System.err.println(
-        s"[verify] index build failed (inline fallback): ${e.getMessage}")
-    }
-    // every query invocation creates fresh localCheckpoint RDD blocks;
-    // across 185 queries in ONE session nothing frees them until the
-    // ContextCleaner happens to GC (round-13 advice) — unpersist each
-    // query's blocks deterministically after its dump, keeping only the
-    // index-build artifacts materialized above
-    val keepRdds = spark.sparkContext.getPersistentRDDs.keySet
+    // s100+ and d101 dump (and oracle-gate) the SERVE path; a build
+    // failure is logged and falls back to the inline path, never to a
+    // missing dump
+    val prep = Graft.prepare(spark, sfDir)
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!keepRdds.contains(id)) rdd.unpersist(false)
-      }
+      prep.release()
     }
+    writeOracleSql(Paths.get(outDir))
+    spark.stop()
+  }
+
+  /** `dir/oracle_sql.json`: every query's DuckDB oracle SQL by name. */
+  def writeOracleSql(dir: Path): Unit = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -65,7 +46,6 @@ object Verify {
     } + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    Files.writeString(dir.resolve("oracle_sql.json"), json)
   }
 }

@@ -1621,8 +1621,11 @@ object Similarity {
         // and reverted (r14 interleaved same-JVM A/B, min-of-5: ckpt
         // 2.270 s vs lineage 1.729 s): the eager materialization barrier
         // + blockmanager write costs more than the second brute-force
-        // pass it saves — the truth-count consumer prunes every column,
-        // so its "re-execution" is a cheap count-only variant.
+        // pass it saves. That pass is NOT count-only: pruning drops the
+        // truth-count consumer's payload columns, but its |queries| x
+        // |corpus| scoring join and top-3 ranking still run in full, so
+        // at scale this doubles a corpus-sized pass — re-measure at a
+        // larger scale factor before treating the revert as scale-safe.
         val et = exactTop3(s, d)
         val truth = et.agg(count(lit(1)).as("n_truth"))
         val sizes = assign.groupBy(col("cluster").as("clabel"))

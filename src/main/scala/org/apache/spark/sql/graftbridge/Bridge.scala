@@ -8,7 +8,7 @@ import org.apache.spark.sql.internal.SessionState
 /** Minimal bridge into Spark's `private[sql]` surface (Spark 4 split the
   * user-facing `Column` from catalyst `Expression`; the converters live in
   * `org.apache.spark.sql.classic.ExpressionUtils`, which is private[sql]).
-  * Kept to three one-liners so the engine's dependence on internals is
+  * Kept to one-liners so the engine's dependence on internals is
   * auditable in one place.
   */
 object Bridge {
@@ -21,4 +21,8 @@ object Bridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       org.apache.spark.sql.classic.ClassicConversions.castToImpl(s), plan)
+  /** Block until every event posted so far reached every listener
+    * (`LiveListenerBus` is private[spark]). */
+  def drainListeners(s: SparkSession): Unit =
+    s.sparkContext.listenerBus.waitUntilEmpty()
 }

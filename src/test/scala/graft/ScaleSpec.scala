@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Scaling-law invariants for the `ScaleGen` measurement corpus.
   *
-  * `ScaleStress` measures wall-clock growth across 1×/10×/100× corpora
+  * `Bench time --dirs=` measures wall-clock growth across 1×/10×/100× corpora
   * (SCALE.md records the curves); that measurement is only meaningful if
   * the scaled corpus preserves per-copy structure while keeping copies
   * DISJOINT for every candidate-generation key the operators join on. If a
