@@ -847,8 +847,6 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
       s"graft engine: $verb on qualified table '$qualifier$tbl' is not " +
         s"supported — the warehouse is single-database; use the bare name '$tbl'")
 
-  /** One statement in, a DataFrame out (commands return a 1-row status frame,
-    * like the reference's command acknowledgements). */
   /** Ingest-file reader: format by extension. The reference's ingest is
     * CSV-only (`storage/FileAnalyzer.java` profiles CSV columns); JSONL is
     * the de-facto interchange format of training-data pipelines, so both
@@ -991,7 +989,79 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
     sb.toString
   }
 
-  def sql(command: String): DataFrame = rewriteSimilarTo(command) match {
+  // ── statement concurrency. Clients of one Engine (SharedServer runs one
+  // handler thread per connection, like the reference's
+  // `server/SharedServer.java:40-56`) share two locks, always taken in
+  // this order:
+  //  - the WRITER lock serializes every statement but a plain query;
+  //  - the COMMIT lock is the short section in which a table's version
+  //    changes under readers. A plain SELECT/WITH plans (and leases what
+  //    it scans) inside it; UPDATE, DELETE, MERGE and OPTIMIZE stage their
+  //    new version under the writer lock alone and take it only for the
+  //    pointer swap, catalog repoint, index-route drop and sweep
+  //    ([[commitSection]]). Every other statement holds both locks for
+  //    its whole run. ─────────────────────────────────────────────────
+  private val writerLock = new java.util.concurrent.locks.ReentrantLock()
+  private val commitLock = new java.util.concurrent.locks.ReentrantLock()
+  private def holding[A](l: java.util.concurrent.locks.ReentrantLock)(
+      body: => A): A = {
+    l.lock()
+    try body finally l.unlock()
+  }
+
+  /** A plain query: planned in the commit section, never mutating. A WITH
+    * that mentions INSERT may be a CTE-fed insert and takes both locks. */
+  private val plainQuery =
+    """(?is)\s*(?:SELECT\b.*|WITH\b(?!.*\bINSERT\b).*)""".r
+
+  /** The copy-on-write rewrites that commit through [[commitSection]]. */
+  private def isRewrite(stmt: String): Boolean =
+    Seq(updateStmt, deleteStmt, mergeStmt, optimizeStmt)
+      .exists(_.matches(stmt))
+
+  /** The commit section of an UPDATE/DELETE/MERGE/OPTIMIZE: the pointer
+    * swap, the catalog repoint, the index-route drop (not for OPTIMIZE,
+    * whose rows are unchanged) and the sweep, under the commit lock — no
+    * read plans between the swap and the repoint. */
+  private def commitSection(dropRoutes: Boolean): commands.TableCommands.Commit =
+    (tbl, swap, sweep) => holding(commitLock) {
+      swap()
+      registerTable(tbl)
+      if (dropRoutes) dropIndexesOf(tbl)
+      sweep()
+    }
+
+  /** Run `command` through [[sql]] (on the calling thread) and hand the
+    * result to `consume`. A plain query is planned and the warehouse
+    * versions its plan scans are leased in one commit section, and the
+    * leases hold until `consume` returns — a sweep skips leased versions —
+    * so rows streamed inside `consume` come from the version the query was
+    * planned against, however many rewrites commit meanwhile. */
+  def withResult[A](command: String)(consume: DataFrame => A): A =
+    if (!plainQuery.matches(command)) consume(sql(command))
+    else {
+      val (df, leased) = holding(commitLock) {
+        val df = sql(command)
+        val dirs = cmds.scannedVersions(df.queryExecution.analyzed)
+        commands.TableCommands.lease(dirs)
+        (df, dirs)
+      }
+      try consume(df) finally commands.TableCommands.release(leased)
+    }
+
+  /** One statement in, a DataFrame out (commands return a 1-row status
+    * frame, like the reference's command acknowledgements). Safe to call
+    * from several threads; see the statement-concurrency note above. */
+  def sql(command: String): DataFrame = {
+    val stmt = rewriteSimilarTo(command)
+    if (plainQuery.matches(stmt)) holding(commitLock)(query(stmt))
+    else holding(writerLock) {
+      if (isRewrite(stmt)) route(stmt)
+      else holding(commitLock)(route(stmt))
+    }
+  }
+
+  private def route(stmt: String): DataFrame = stmt match {
     case createColstore(temp, name, path) =>
       // reference: CREATE COLSTORE/TABLE ... FROM <file> profiles the file
       // and builds the columnar store (commands/CreateColStoreCommand.java,
@@ -1404,9 +1474,8 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
       // tables, so the engine owns the statement end-to-end.
       val p = parseMerge(q, tblRaw, tAliasRaw, rest)
       cmds.merge(p.tbl, p.src, p.tAlias, p.sAlias, p.cond, p.sets,
-        p.matchedDelete, p.insert, p.matchedCond, p.insertCond)
-      registerTable(p.tbl)
-      dropIndexesOf(p.tbl)
+        p.matchedDelete, p.insert, p.matchedCond, p.insertCond,
+        commitSection(dropRoutes = true))
       status(s"merged into ${p.tbl}")
     case updateStmt(q, tblRaw, rest) =>
       // reference: UpdateCommand.java — Spark SQL cannot mutate plain
@@ -1417,15 +1486,13 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
         val Array(c, e) = a.split("=", 2)
         c.trim -> org.apache.spark.sql.functions.expr(e.trim)
       }.toMap
-      cmds.update(tbl, condExpr(cond), setMap)
-      registerTable(tbl)
-      dropIndexesOf(tbl)
+      cmds.update(tbl, condExpr(cond), setMap,
+        commitSection(dropRoutes = true))
       status(s"updated $tbl")
     case deleteStmt(q, tblRaw, cond) =>
       val tbl = localName(q, tblRaw, "DELETE")
-      cmds.delete(tbl, condExpr(cond)) // reference: DeleteCommand.java
-      registerTable(tbl)
-      dropIndexesOf(tbl)
+      // reference: DeleteCommand.java
+      cmds.delete(tbl, condExpr(cond), commitSection(dropRoutes = true))
       status(s"deleted from $tbl")
     case txnStmt(kw) => // reference: BeginCommand/CommitCommand/RollbackCommand
       val before = cmds.warehouseTables
@@ -2104,8 +2171,8 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
       requireNoSinkClaim(tbl, s"OPTIMIZE $tbl")
       val zcols = Option(zcolsRaw).toSeq
         .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-      cmds.optimizeTable(tbl, zorderBy = zcols)
-      registerTable(tbl)
+      cmds.optimizeTable(tbl, zorderBy = zcols,
+        commit = commitSection(dropRoutes = false))
       status(s"optimized $tbl")
     case engineOnlyHead(head) =>
       // a statement whose leading keyword(s) belong to the ENGINE-ONLY

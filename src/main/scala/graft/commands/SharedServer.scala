@@ -16,21 +16,29 @@ import java.nio.charset.StandardCharsets.UTF_8
   * by killing the handler: a bad statement leaves the connection usable
   * (the reference's `ClientHandler` does the same).
   *
-  * Concurrency: statement ROUTING (parse + storage DDL/DML, which mutate
-  * the single-writer manifest warehouse) is serialized on one lock; row
-  * STREAMING runs outside it, so long results from concurrent clients
-  * interleave and a slow reader never blocks another client's statements.
-  * The client edge is inherently a single point (like `df.show`); compute
-  * stays distributed and rows cross the driver one partition at a time via
-  * `toLocalIterator` — concurrent clients on a 1000-executor cluster each
-  * cost one partition of driver memory, not a collect.
+  * Concurrency lives in the engine, which owns the state it protects
+  * (see the statement-concurrency note in [[graft.Engine]]): a plain
+  * SELECT/WITH waits only for the short commit section of a rewrite, not
+  * for its copy-on-write staging, and leases the table versions it planned
+  * against until its rows have streamed ([[graft.Engine.withResult]]), so
+  * a concurrent UPDATE/DELETE/MERGE/OPTIMIZE cannot sweep them mid-stream.
+  * Row STREAMING runs outside every lock, so long results from concurrent
+  * clients interleave and a slow reader never blocks another client's
+  * statements. The client edge is inherently a single point (like
+  * `df.show`); compute stays distributed and rows cross the driver one
+  * partition at a time via `toLocalIterator` — concurrent clients on a
+  * 1000-executor cluster each cost one partition of driver memory, not a
+  * collect.
+  *
+  * [[close]] stops accepting and hangs up every connected client, so no
+  * handler keeps serving through an engine its owner closes next.
   */
 final class SharedServer(engine: graft.Engine, port: Int = 0)
     extends AutoCloseable {
 
   private val server = new ServerSocket(port)
   @volatile private var closed = false
-  private val routeLock = new Object
+  private val clients = java.util.concurrent.ConcurrentHashMap.newKeySet[Socket]()
 
   /** The bound port (useful with the default ephemeral bind). */
   def boundPort: Int = server.getLocalPort
@@ -43,6 +51,9 @@ final class SharedServer(engine: graft.Engine, port: Int = 0)
     while (!closed && !server.isClosed) {
       try {
         val client = server.accept()
+        clients.add(client)
+        // close() may have swept the set just before this add
+        if (closed) client.close()
         try {
           val h = new Thread(() => handle(client),
             s"graft-client-${client.getPort}")
@@ -74,13 +85,14 @@ final class SharedServer(engine: graft.Engine, port: Int = 0)
       while (open && line != null) {
         if (line.trim.nonEmpty) {
           try {
-            val df = routeLock.synchronized(engine.sql(line))
-            out.println(df.columns.mkString(","))
-            var n = 0L
-            df.toLocalIterator().forEachRemaining { row =>
-              out.println(TupleServer.csvLine(row)); n += 1
+            engine.withResult(line) { df =>
+              out.println(df.columns.mkString(","))
+              var n = 0L
+              df.toLocalIterator().forEachRemaining { row =>
+                out.println(TupleServer.csvLine(row)); n += 1
+              }
+              out.println(s"OK $n")
             }
-            out.println(s"OK $n")
           } catch {
             case e: Throwable =>
               out.println("ERR " + Option(e.getMessage)
@@ -101,11 +113,15 @@ final class SharedServer(engine: graft.Engine, port: Int = 0)
       // one client's death (mid-stream disconnect included) never takes
       // the server down; remaining clients keep their handlers
       case _: Throwable => ()
-    } finally client.close()
+    } finally {
+      clients.remove(client)
+      client.close()
+    }
   }
 
   override def close(): Unit = {
     closed = true
     server.close()
+    clients.forEach(c => try c.close() catch { case _: java.io.IOException => () })
   }
 }

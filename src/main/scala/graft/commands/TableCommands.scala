@@ -39,6 +39,14 @@ import org.apache.spark.sql.types.StructType
   * version or the new one, never a half-state, and a crash at ANY point
   * leaves the table readable (an unpublished version directory is inert
   * garbage, swept by the next rewrite).
+  *
+  * A sweep never deletes a LEASED version directory: a read served through
+  * [[graft.Engine.withResult]] leases every version its plan scans until
+  * its rows have streamed (the analog of the reference's buffer pins,
+  * `storage/BufferManager.java:85-190`), so a rewrite committing mid-stream
+  * cannot pull files out from under it. A leased directory outside the
+  * retention window stays on disk but leaves the VERSIONS log; the first
+  * sweep after its release removes it.
   */
 class TableCommands(spark: SparkSession, warehouse: String) {
 
@@ -110,6 +118,21 @@ class TableCommands(spark: SparkSession, warehouse: String) {
       throw new IllegalStateException(s"simulated crash: $point")
     }
 
+  /** Pause injection for the same path: arm with a two-party barrier and
+    * the next publish meets it twice once its version directory is staged
+    * — first to signal "staged", then to wait for "resume" — before it
+    * commits. A spec runs other statements in between, while the rewrite
+    * holds the engine's writer lock but not its commit section. Consumed
+    * by that publish; volatile because specs arm it from another thread. */
+  @volatile private[graft] var stagingPause
+      : Option[java.util.concurrent.CyclicBarrier] = None
+  private def maybePause(): Unit =
+    stagingPause.foreach { b =>
+      stagingPause = None
+      b.await(120, java.util.concurrent.TimeUnit.SECONDS)
+      b.await(120, java.util.concurrent.TimeUnit.SECONDS); ()
+    }
+
   /** Stage `df` as a fresh version directory, atomically publish the
     * pointer, then sweep superseded/orphaned versions (sweep deferred
     * while a transaction holds pre-images).
@@ -120,19 +143,24 @@ class TableCommands(spark: SparkSession, warehouse: String) {
     * atomic rename, so no crash window can separate them. Rewrites without
     * an explicit id (UPDATE/DELETE/OPTIMIZE) carry the live version's
     * marker forward, so compacting a streamed table cannot reset its
-    * replay cursor. */
+    * replay cursor.
+    *
+    * Staging runs bare; only the swap and the sweep run inside `commit`
+    * (see [[TableCommands.Commit]]). */
   private def publish(table: String, df: DataFrame,
-      streamBatch: Option[Long] = None): Unit = {
+      streamBatch: Option[Long] = None,
+      commit: TableCommands.Commit = TableCommands.bareCommit): Unit = {
     val version = nextVersion(table)
     assertStageFresh(table, version)
     df.write.mode(SaveMode.Overwrite).parquet(s"${dir(table)}/$version")
     streamBatch.orElse(lastCommittedBatch(table)).foreach(b =>
       Files.writeString(Paths.get(dir(table), version, "_STREAM_BATCH"),
         b.toString))
+    maybePause()
     maybeCrash("staged")
-    swapPointer(table, version)
-    maybeCrash("published")
-    if (txnSnapshot.isEmpty) sweep(table)
+    commit(table,
+      () => { swapPointer(table, version); maybeCrash("published") },
+      () => if (txnSnapshot.isEmpty) sweep(table))
   }
 
   /** Atomic pointer publish + version-log append (shared by [[publish]]
@@ -310,7 +338,9 @@ class TableCommands(spark: SparkSession, warehouse: String) {
     * and crashed never-published stages; rewrite the log to the kept
     * history. PINNED versions (registered SNAPSHOT views) are always kept,
     * whatever RETAIN says — a training read through a snapshot must
-    * survive retention-lowering and heavy write traffic. The log rewrite
+    * survive retention-lowering and heavy write traffic. LEASED versions
+    * (a read still streaming them) stay on disk but out of the log, so
+    * the first sweep after their release deletes them. The log rewrite
     * is tmp+ATOMIC_MOVE: a crash mid-rewrite must not truncate history
     * (a truncated log would hide retained versions from the NEXT sweep,
     * which would then delete directories inside the window). */
@@ -319,7 +349,8 @@ class TableCommands(spark: SparkSession, warehouse: String) {
     val keep = (versionHistory(table).takeRight(retainCount(table))
       ++ pinnedVersions(table) :+ live).distinct
     Option(new java.io.File(dir(table)).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && !keep.contains(f.getName))
+      .filter(f => f.isDirectory && !keep.contains(f.getName) &&
+        !TableCommands.leased(f.toPath))
       .foreach(rm)
     atomicWrite(versionsLog(table),
       keep.sortBy(vnum).mkString("", "\n", "\n"))
@@ -490,10 +521,12 @@ class TableCommands(spark: SparkSession, warehouse: String) {
     * marker, constraints and catalog name all survive (publish carries
     * them), exactly as for plain compaction. */
   def optimizeTable(name: String, targetPartitions: Int = 0,
-      zorderBy: Seq[String] = Nil): Unit = {
+      zorderBy: Seq[String] = Nil,
+      commit: TableCommands.Commit = TableCommands.bareCommit): Unit = {
     val n = if (targetPartitions > 0) targetPartitions
       else spark.sessionState.conf.numShufflePartitions
-    if (zorderBy.isEmpty) publish(name, table(name).repartition(n))
+    if (zorderBy.isEmpty)
+      publish(name, table(name).repartition(n), commit = commit)
     else {
       val t = table(name)
       val byLower = t.columns.map(c => c.toLowerCase -> c).toMap
@@ -593,7 +626,7 @@ class TableCommands(spark: SparkSession, warehouse: String) {
       publish(name, t.withColumn("__graft_z", z)
         .repartitionByRange(n, col("__graft_z"))
         .sortWithinPartitions("__graft_z")
-        .drop("__graft_z"))
+        .drop("__graft_z"), commit = commit)
     }
   }
 
@@ -1114,8 +1147,9 @@ class TableCommands(spark: SparkSession, warehouse: String) {
     * All SET expressions evaluate against the OLD row (standard SQL UPDATE
     * semantics — `SET a = b, b = a` swaps), via a single simultaneous
     * projection. Distributed end-to-end — no driver-side row handling. */
-  def update(name: String, cond: Column, sets: Map[String, Column]): Unit =
-    publish(name, updatePlan(name, cond, sets))
+  def update(name: String, cond: Column, sets: Map[String, Column],
+      commit: TableCommands.Commit = TableCommands.bareCommit): Unit =
+    publish(name, updatePlan(name, cond, sets), commit = commit)
 
   /** The rewrite frame [[update]] would publish — shared with EXPLAIN
     * (reference `commands/ExplainCommand.java` covers DML too). */
@@ -1131,8 +1165,9 @@ class TableCommands(spark: SparkSession, warehouse: String) {
   }
 
   /** DELETE FROM t WHERE <cond>: copy-on-write rewrite keeping survivors. */
-  def delete(name: String, cond: Column): Unit =
-    publish(name, deletePlan(name, cond))
+  def delete(name: String, cond: Column,
+      commit: TableCommands.Commit = TableCommands.bareCommit): Unit =
+    publish(name, deletePlan(name, cond), commit = commit)
 
   /** The rewrite frame [[delete]] would publish — shared with EXPLAIN. */
   def deletePlan(name: String, cond: Column): DataFrame =
@@ -1160,7 +1195,8 @@ class TableCommands(spark: SparkSession, warehouse: String) {
       cond: Column, updateSets: Map[String, Column], matchedDelete: Boolean,
       insert: Option[Seq[(String, Column)]],
       matchedCond: Option[Column] = None,
-      insertCond: Option[Column] = None): Unit = {
+      insertCond: Option[Column] = None,
+      commit: TableCommands.Commit = TableCommands.bareCommit): Unit = {
     val tgt = table(name)
     val marker = "__graft_merge_src"
     val s = srcRaw.withColumn(marker, lit(true)).alias(sAlias)
@@ -1174,7 +1210,7 @@ class TableCommands(spark: SparkSession, warehouse: String) {
     val result = mergePlan(name, srcRaw, tAlias, sAlias, cond, updateSets,
       matchedDelete, insert, matchedCond, insertCond)
     checkNotNull(name, result)
-    publish(name, result)
+    publish(name, result, commit = commit)
   }
 
   /** The rewrite frame [[merge]] would publish — shared with EXPLAIN
@@ -1298,6 +1334,24 @@ class TableCommands(spark: SparkSession, warehouse: String) {
     spark.sql(s"ANALYZE TABLE `$name` COMPUTE STATISTICS FOR ALL COLUMNS"); ()
   }
 
+  /** The version directories of THIS warehouse that `plan`'s file scans
+    * read (subqueries included) — what a streamed read leases. */
+  private[graft] def scannedVersions(
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : Seq[java.nio.file.Path] = {
+    import org.apache.spark.sql.execution.datasources.{
+      HadoopFsRelation, LogicalRelation}
+    val wh = Paths.get(warehouse).toAbsolutePath.normalize
+    plan.collectWithSubqueries { case l: LogicalRelation => l.relation }
+      .collect { case h: HadoopFsRelation => h.location.rootPaths }
+      .flatten
+      .filter(p => p.toUri.getScheme == null || p.toUri.getScheme == "file")
+      .map(p => Paths.get(p.toUri.getPath).toAbsolutePath.normalize)
+      .filter(v => v.getParent != null && v.getParent.getParent == wh &&
+        v.getFileName.toString.matches("v\\d{5,}"))
+      .distinct
+  }
+
   /** EXPLAIN — formatted physical plan, the analog of the reference's
     * `PlanNode.printNodeTree`, followed by per-node cost estimates: the
     * reference prints `PlanCost{numTuples, tupleSize, cpuCost, numBlockIOs}`
@@ -1329,6 +1383,30 @@ object TableCommands {
     * per-JVM, non-reentrant FileChannel lock. */
   private[commands] val claimMonitors =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** A staged rewrite's commit step: called with the table, the pointer
+    * swap and the sweep, it must run both, in that order. The storage
+    * API's own callers commit bare; [[graft.Engine]] runs them inside its
+    * commit section and repoints its catalog between the two. */
+  type Commit = (String, () => Unit, () => Unit) => Unit
+  val bareCommit: Commit = (_, swap, sweep) => { swap(); sweep() }
+
+  /** Read leases: absolute version directory -> holder count. JVM-global,
+    * like [[claimMonitors]], because several engines over one warehouse
+    * share a JVM; readers in OTHER JVMs still rely on RETAIN. */
+  private val leases =
+    new java.util.concurrent.ConcurrentHashMap[java.nio.file.Path, Integer]()
+
+  private[graft] def lease(dirs: Seq[java.nio.file.Path]): Unit =
+    dirs.foreach(d => leases.merge(d, 1,
+      (a: Integer, b: Integer) => Integer.valueOf(a + b)))
+
+  private[graft] def release(dirs: Seq[java.nio.file.Path]): Unit =
+    dirs.foreach(d => leases.computeIfPresent(d,
+      (_, n: Integer) => if (n <= 1) null else Integer.valueOf(n - 1)))
+
+  private[commands] def leased(dir: java.nio.file.Path): Boolean =
+    leases.containsKey(dir.toAbsolutePath.normalize)
 
   /** Re-register any of `names` whose session-catalog entry no longer
     * points at its manifest's CURRENT version. A mutation version-bumps

@@ -3,6 +3,8 @@ package graft
 import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.commands.SharedServer
@@ -129,10 +131,11 @@ class SharedServerSpec extends AnyFunSuite {
               var ins = 0L
               var del = 0L
               // one statement out, one frame back: header/rows then OK,
-              // or (rows then) ERR — a SELECT may legitimately ERR when
-              // a concurrent COW rewrite sweeps the version its stream
-              // was reading (retain 1); DML and DDL route under the
-              // server's statement lock and must be exact
+              // or (rows then) ERR. A SELECT must come back OK: it leases
+              // the version it planned against, so a concurrent COW
+              // rewrite's sweep (retain 1) cannot pull it mid-stream. DML
+              // and DDL serialize on the engine's writer lock and must be
+              // exact
               def exchange(stmt: String): Boolean = {
                 out.println(stmt)
                 var l = in.readLine()
@@ -158,10 +161,12 @@ class SharedServerSpec extends AnyFunSuite {
                       del += 1; myIds = myIds.tail
                     }
                   case 6 =>
-                    exchange("SELECT count(*) AS n FROM soak_t"); ()
+                    assert(exchange("SELECT count(*) AS n FROM soak_t"),
+                      "a SELECT came back ERR")
                   case 7 =>
-                    exchange("SELECT v, count(*) AS n FROM soak_t " +
-                      "GROUP BY v ORDER BY n DESC, v LIMIT 3"); ()
+                    assert(exchange("SELECT v, count(*) AS n FROM soak_t " +
+                      "GROUP BY v ORDER BY n DESC, v LIMIT 3"),
+                      "a SELECT came back ERR")
                   case 8 =>
                     // malformed engine-only head: must come back ERR,
                     // never wedge the handler or fall through
@@ -203,6 +208,92 @@ class SharedServerSpec extends AnyFunSuite {
         assert(inf.readLine() == "OK 1")
       } finally sf.close()
     } finally srv.close()
+  }
+
+  /** Read one response frame: every line up to and including the
+    * terminator (`OK n` / `ERR ...`). */
+  private def frame(in: java.io.BufferedReader): List[String] = {
+    val b = List.newBuilder[String]
+    var l = in.readLine()
+    while (l != null && !l.startsWith("OK") && !l.startsWith("ERR")) {
+      b += l; l = in.readLine()
+    }
+    (b += String.valueOf(l)).result()
+  }
+
+  test("a held read drains the version it planned against while UPDATE " +
+      "and DELETE commit and sweep under it (retain 1); once released, " +
+      "the next sweep reclaims that version") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_lease_wh")
+    val engine = new Engine(spark, TestSpark.sfDir, wh.toString)
+    engine.sql("CREATE TABLE lease_t (id BIGINT, v BIGINT)")
+    engine.sql("INSERT INTO lease_t VALUES (1, 10), (2, 20), (3, 30)")
+    val planned = java.nio.file.Paths.get(engine.storage.dataPath("lease_t"))
+    def history: Seq[String] = engine.storage.versionHistory("lease_t")
+    val drained = engine.withResult("SELECT id, v FROM lease_t") { df =>
+      engine.sql("UPDATE lease_t SET v = v + 1 WHERE id = 1")
+      engine.sql("DELETE FROM lease_t WHERE id = 2")
+      val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      df.toLocalIterator().forEachRemaining(r =>
+        rows += ((r.getLong(0), r.getLong(1))))
+      assert(java.nio.file.Files.isDirectory(planned),
+        "the leased version was swept under its reader")
+      assert(history.size == 1, s"retain 1 but VERSIONS lists $history")
+      rows.sorted.toSeq
+    }
+    assert(drained == Seq((1L, 10L), (2L, 20L), (3L, 30L)))
+    engine.sql("UPDATE lease_t SET v = v + 1 WHERE id = 3")
+    assert(!java.nio.file.Files.exists(planned),
+      "a released version outlived the next sweep")
+    val live = java.nio.file.Paths.get(engine.storage.dataPath("lease_t"))
+      .getFileName.toString
+    assert(history == Seq(live))
+    val onDisk = java.nio.file.Files.list(wh.resolve("lease_t"))
+    try assert(onDisk.iterator().asScala
+        .filter(java.nio.file.Files.isDirectory(_))
+        .map(_.getFileName.toString).toSeq == Seq(live))
+    finally onDisk.close()
+    assert(engine.sql("SELECT id, v FROM lease_t ORDER BY id").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+      Seq((1L, 11L), (3L, 31L)))
+    engine.close()
+  }
+
+  test("a SELECT on one connection is served while an UPDATE on another " +
+      "is paused mid-staging; the UPDATE lands once resumed") {
+    val (srv, engine) = newServer()
+    try {
+      val (sa, ina, outa) = client(srv.boundPort)
+      val (sb, inb, outb) = client(srv.boundPort)
+      try {
+        outa.println("CREATE TABLE pause_t (id BIGINT, v BIGINT)")
+        assert(frame(ina).last == "OK 1")
+        outa.println("INSERT INTO pause_t VALUES (1, 1), (2, 2)")
+        assert(frame(ina).last == "OK 1")
+        val pause = new java.util.concurrent.CyclicBarrier(2)
+        engine.storage.stagingPause = Some(pause)
+        outa.println("UPDATE pause_t SET v = v * 10")
+        // A has staged its new version and holds the writer lock
+        pause.await(120, java.util.concurrent.TimeUnit.SECONDS)
+        outb.println("SELECT id, v FROM pause_t ORDER BY id")
+        assert(frame(inb) == List("id,v", "1,1", "2,2", "OK 2"))
+        pause.await(120, java.util.concurrent.TimeUnit.SECONDS)
+        assert(frame(ina) == List("status", "updated pause_t", "OK 1"))
+        outb.println("SELECT id, v FROM pause_t ORDER BY id")
+        assert(frame(inb) == List("id,v", "1,10", "2,20", "OK 2"))
+      } finally { sa.close(); sb.close() }
+    } finally srv.close()
+  }
+
+  test("close() hangs up connected clients") {
+    val (srv, _) = newServer()
+    val (s, in, out) = client(srv.boundPort)
+    try {
+      out.println("SELECT 1 AS one")
+      assert(frame(in) == List("one", "1", "OK 1"))
+      srv.close()
+      assert(in.readLine() == null, "a client outlived the server's close")
+    } finally s.close()
   }
 
   test("a client disconnecting mid-stream does not stop the server") {
