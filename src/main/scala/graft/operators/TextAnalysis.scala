@@ -28,6 +28,46 @@ object TextAnalysis {
   def tokens(text: Column): Column =
     filter(split(trim(text), "[ \\t\\n\\f\\r]+"), tk => tk =!= "")
 
+  /** The t93/t94/t95 word stream of a document: every `[a-z]+` run of the
+    * lowercased text. */
+  def alphaWords(text: Column): Column =
+    regexp_extract_all(lower(text), lit("[a-z]+"), lit(0))
+
+  /** t87's per-document average surprisal: the negated micro-nat sum over
+    * `n` bigrams, rounded HALF_UP to a whole micro-nat. Negating before
+    * the division keeps the rounding direction engine-independent. */
+  def avgSurprisalMicro(logpSum: Column, n: Column): Column =
+    round((-logpSum).cast("double") / n.cast("double")).cast("long")
+
+  /** t102's per-document surprisal in nats at 6 dp, from the micro-nat
+    * log-prob sum over `n` tokens. */
+  def surprisalNats(lqSum: Column, n: Column): Column =
+    round(-(lqSum.cast("double") / (n * 1000000)), 6)
+
+  /** t102's bucket of a surprisal against its language's tercile edges. */
+  def tercileBucket(surprisal: Column, e1: Column, e2: Column): Column =
+    when(surprisal <= e1, "head")
+      .when(surprisal <= e2, "middle")
+      .otherwise("tail")
+
+  /** t94's character count of a word array. */
+  def bpeChars(ws: Column): Column =
+    aggregate(ws, lit(0L), (a, w) => a + length(w).cast("long"))
+
+  /** t94's symbol count: each word rewritten by the merges in rank order
+    * (merge i fuses to marker char `i`; a chained `replace` is greedy BPE),
+    * then its length summed. */
+  def bpeSyms(ws: Column, merges: Seq[Column]): Column =
+    aggregate(transform(ws, w =>
+      merges.zipWithIndex.foldLeft(w) { case (acc, (m, i)) =>
+        replace(acc, m, lit(i.toString)) }),
+      lit(0L), (a, w) => a + length(w).cast("long"))
+
+  /** t94's symbols-per-char ratio at 6 dp; NULL for an alpha-free doc. */
+  def bpeCompression(nChars: Column, nSyms: Column): Column =
+    round(when(nChars === 0, lit(null))
+      .otherwise(nSyms.cast("double") / nChars.cast("double")), 6)
+
   private val stopwords = Seq("the", "and", "of", "to", "a", "in", "is")
 
   private def hits(toks: Column, words: Seq[String]): Column =
@@ -226,8 +266,7 @@ object TextAnalysis {
     * row per occurrence, doc_id retained. */
   private def dsirWords(s: SparkSession, d: String): DataFrame =
     Graft.tableParallel(s, d, "documents")
-      .select(col("doc_id"), explode(regexp_extract_all(
-        lower(col("text")), lit("[a-z]+"), lit(0))).as("w"))
+      .select(col("doc_id"), explode(alphaWords(col("text"))).as("w"))
 
   /** The shared per-(doc, word) count frame under t95 and the weight
     * table — ONE pinned doc_id exchange under every consumer (the d98
@@ -327,14 +366,6 @@ object TextAnalysis {
     cls
   }
 
-  /** The t100 model artifact in exact 6-dp micro-nat integers — what the
-    * streaming serve twin ([[graft.streaming.DocStreams.nbClassify]])
-    * freezes and broadcasts: per-language (prior, unseen-word default)
-    * micros and per-(language, word) log-likelihood micros. The log terms
-    * are computed with the SAME Spark expressions as the batch scorer
-    * (round-6 then DECIMAL), so stream scores are bit-identical by
-    * construction. Collecting here is legitimate serving-artifact export:
-    * the model is vocab × |lang|-bounded, never corpus-sized. */
   /** t100's per-doc prediction frame (doc_id, lang, predicted, score,
     * correct) — the scoring chain shared by t100 (per-doc output) and
     * t104 (the confusion-matrix evaluation). See the t100 QueryDef doc
@@ -435,7 +466,12 @@ object TextAnalysis {
       |        FROM sc)
       |  WHERE rn = 1)""".stripMargin
 
-  /** The frozen NB model for the streaming serve twin, in exact micros.
+  /** The frozen NB model for the streaming serve twin
+    * ([[graft.streaming.DocStreams.nbClassify]]), in exact 6-dp micro-nat
+    * integers: per-language (prior, unseen-word default) micros and
+    * per-(language, word) log-likelihood micros. The log terms are the
+    * batch scorer's own Spark expressions (round-6 then DECIMAL), so
+    * stream scores are bit-identical by construction.
     *
     * The driver-side likelihood map is VOCABULARY-CAPPED: only the top
     * `maxTermsPerClass` terms per class (by training count, word asc on
@@ -560,23 +596,15 @@ object TextAnalysis {
     require(langs.head(1).nonEmpty,
       "nbClassifyJoin needs a trained model: langStats is empty " +
         "(was the training corpus dry?)")
-    val spark = docs.sparkSession
-    import spark.implicits._
     val based = docs.select(col("doc_id").cast("long").as("doc_id"),
       coalesce(col("text"), lit("")).as("text"))
       .withColumn("tkey", xxhash64(col("doc_id"), col("text")))
     val uniq = based.select("tkey", "text").distinct()
-    // same token stream as the Map twin, byte for byte: Locale.ROOT
-    // lowercase + whitespace split. Spark's lower() falls back to the
-    // JVM default locale for non-ASCII, which would fork the twins on
-    // tr/az/lt machines (I → dotless ı misses every model lookup) —
-    // so tokenization runs through the same JVM code the Map twin uses.
-    val toks = uniq.as[(Long, String)]
-      .flatMap { case (k, t) =>
-        t.toLowerCase(java.util.Locale.ROOT)
-          .split("[ \t\n\f\r]+").iterator.filter(_.nonEmpty)
-          .map(w => (k, w))
-      }.toDF("tkey", "word")
+    // t100's token Column: the Map twin, this join twin and batch t100
+    // tokenize through the same expression, so they agree in any JVM
+    // locale (Spark's lower() of non-ASCII text follows the default one)
+    val toks = uniq.select(col("tkey"),
+      explode(tokens(lower(col("text")))).as("word"))
     // per-(doc, lang) token contribution: known words take lm, OOV
     // takes the class default dm — LEFT join on (clang, word), then
     // integer micro sums (partition- and order-independent, the same
@@ -649,8 +677,7 @@ object TextAnalysis {
     // the corpus tokenize (per-consumer column pruning defeats exchange
     // reuse across the chain, the q73/t102 mechanics).
     val wf = t(s, d, "documents")
-      .select(explode(regexp_extract_all(
-        lower(col("text")), lit("[a-z]+"), lit(0))).as("w"))
+      .select(explode(alphaWords(col("text"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("wc"))
       .transform(Graft.cut(_))
     def topPair(ws: DataFrame): DataFrame = ws
@@ -694,8 +721,6 @@ object TextAnalysis {
     }
   }
 
-  /** Oracle CTE chain mirroring [[bpeMergeTables]] (declared before `defs`:
-    * object init is textual order). */
   /** t82/t102's unigram model artifact: (term, lq) with lq = the corpus
     * unigram log-probability in integer micro-nats — vocabulary-bounded,
     * broadcast at every consumer, and the frame the streaming bucketer
@@ -755,8 +780,8 @@ object TextAnalysis {
       tf.groupBy("term").agg(sum(col("k")).as("cnt")))
     val sl = tf.join(broadcast(lq), "term")
       .groupBy("doc_id", "lang")
-      .agg(round(-(sum(col("k") * col("lq")).cast("double") /
-        (sum(col("k")) * 1000000)), 6).as("surprisal"))
+      .agg(surprisalNats(sum(col("k") * col("lq")), sum(col("k")))
+        .as("surprisal"))
     val hist = sl.groupBy("lang", "surprisal")
       .agg(count(lit(1)).as("c"))
     val wcum = org.apache.spark.sql.expressions.Window
@@ -803,6 +828,8 @@ object TextAnalysis {
       .select(col("doc_id"), col("source"), col("ntok"))
   }
 
+  /** Oracle CTE chain mirroring [[bpeMergeTables]] (declared before `defs`:
+    * object init is textual order). */
   private val bpeCtes =
     """words AS (
       |  SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
@@ -1625,8 +1652,7 @@ object TextAnalysis {
           .agg(sum(col("c")).as("n_bigrams"),
             sum(col("c") * col("logp_micro")).as("logp_sum_micro"))
           .select(col("doc_id"), col("n_bigrams"), col("logp_sum_micro"),
-            round((-col("logp_sum_micro")).cast("double") /
-              col("n_bigrams").cast("double")).cast("long")
+            avgSurprisalMicro(col("logp_sum_micro"), col("n_bigrams"))
               .as("avg_surprisal_micro"))
       },
       Some("""WITH toks AS (
@@ -2140,23 +2166,16 @@ object TextAnalysis {
       (s, d) => {
         val (t1, t2, t3) = bpeMergeTables(s, d)
         val docs = t(s, d, "documents")
-          .select(col("doc_id"), regexp_extract_all(
-            lower(col("text")), lit("[a-z]+"), lit(0)).as("ws"))
+          .select(col("doc_id"), alphaWords(col("text")).as("ws"))
         docs
           .crossJoin(broadcast(t1.select(col("pr").as("p1"))))
           .crossJoin(broadcast(t2.select(col("pr").as("p2"))))
           .crossJoin(broadcast(t3.select(col("pr").as("p3"))))
-          .select(col("doc_id"),
-            aggregate(col("ws"), lit(0L),
-              (a, w) => a + length(w).cast("long")).as("n_chars"),
-            aggregate(transform(col("ws"), w =>
-              replace(replace(replace(w, col("p1"), lit("0")),
-                col("p2"), lit("1")), col("p3"), lit("2"))),
-              lit(0L), (a, w) => a + length(w).cast("long")).as("n_syms"))
+          .select(col("doc_id"), bpeChars(col("ws")).as("n_chars"),
+            bpeSyms(col("ws"), Seq(col("p1"), col("p2"), col("p3")))
+              .as("n_syms"))
           .select(col("doc_id"), col("n_chars"), col("n_syms"),
-            round(when(col("n_chars") === 0, lit(null))
-              .otherwise(col("n_syms").cast("double") /
-                col("n_chars").cast("double")), 6).as("compression"))
+            bpeCompression(col("n_chars"), col("n_syms")).as("compression"))
       },
       Some(s"""WITH $bpeCtes,
              |docs AS (
@@ -2725,9 +2744,8 @@ object TextAnalysis {
         val (sl, edges) = perplexityParts(s, d)
         sl.join(broadcast(edges), "lang")
           .select(col("doc_id"), col("lang"), col("surprisal"),
-            when(col("surprisal") <= col("e1"), "head")
-              .when(col("surprisal") <= col("e2"), "middle")
-              .otherwise("tail").as("bucket"))
+            tercileBucket(col("surprisal"), col("e1"), col("e2"))
+              .as("bucket"))
       },
       Some("""WITH terms AS (
              |  SELECT doc_id, unnest(list_filter(
@@ -2795,20 +2813,16 @@ object TextAnalysis {
       (s, d) => {
         val (t1, t2, t3) = bpeMergeTables(s, d)
         val docs = t(s, d, "documents")
-          .select(col("lang"), regexp_extract_all(
-            lower(col("text")), lit("[a-z]+"), lit(0)).as("ws"))
+          .select(col("lang"), alphaWords(col("text")).as("ws"))
         docs
           .crossJoin(broadcast(t1.select(col("pr").as("p1"))))
           .crossJoin(broadcast(t2.select(col("pr").as("p2"))))
           .crossJoin(broadcast(t3.select(col("pr").as("p3"))))
           .select(col("lang"),
             size(col("ws")).cast("long").as("nw"),
-            aggregate(col("ws"), lit(0L),
-              (a, w) => a + length(w).cast("long")).as("nc"),
-            aggregate(transform(col("ws"), w =>
-              replace(replace(replace(w, col("p1"), lit("0")),
-                col("p2"), lit("1")), col("p3"), lit("2"))),
-              lit(0L), (a, w) => a + length(w).cast("long")).as("ns"))
+            bpeChars(col("ws")).as("nc"),
+            bpeSyms(col("ws"), Seq(col("p1"), col("p2"), col("p3")))
+              .as("ns"))
           .groupBy("lang")
           .agg(count(lit(1)).as("n_docs"),
             sum(col("nw")).as("n_words"),

@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.functions.GraftFunctions
+import graft.operators.{Dedup, TextAnalysis}
 
 /** Streaming transforms over a DOCUMENT stream (doc_id, text) — the
   * streaming twin of the batch dedup surface (operators.SimHash /
@@ -61,9 +62,39 @@ object DocStreams {
       .dropDuplicatesWithinWatermark("simhash")
       .select("doc_id", "simhash")
 
-  /** One contamination verdict per streamed document. */
-  case class DocContamination(doc_id: Long, n_grams: Int, n_hit: Int,
-      contaminated: Boolean)
+  /** A twin's text column: a null document scores as the empty one, so a
+    * null row never fails the micro-batch. */
+  private def docText: Column = coalesce(col("text"), lit(""))
+
+  private[streaming] case class LookupFold(n: Long, sum: Long, n_oov: Long)
+
+  /** The one JVM kernel the scoring twins keep: a fold of each document's
+    * token array against a frozen model broadcast to the executors.
+    * Returns `docs` as (doc_id, carry…, n, sum, n_oov): `n` tokens, `sum`
+    * of their model values with `oov` standing in for every token the
+    * model lacks, and `n_oov` such tokens. The token array is the batch
+    * query's own Column and the twins finish with the batch query's own
+    * per-document Columns, so a twin cannot drift from its batch query. A
+    * frozen-Map lookup per token needs no join or aggregation state, so
+    * the twins stay stateless at any stream length. */
+  private def lookupFold(docs: DataFrame, toks: Column,
+      model: Map[String, Long], oov: Long, carry: String*): DataFrame = {
+    val bc = docs.sparkSession.sparkContext.broadcast(model)
+    val fold = udf { (ts: Seq[String]) =>
+      val m = bc.value
+      var sum = 0L; var nOov = 0L
+      ts.foreach { t =>
+        m.get(t) match {
+          case Some(v) => sum += v
+          case None => sum += oov; nOov += 1
+        }
+      }
+      LookupFold(ts.length.toLong, sum, nOov)
+    }.withName("lookup_fold")
+    docs.withColumn("f", fold(toks))
+      .select(col("doc_id").cast("long").as("doc_id") +: carry.map(col) :+
+        col("f.*"): _*)
+  }
 
   /** Streaming benchmark decontamination — the live twin of batch
     * `d88_decontamination`, flipped to the INGEST direction: documents
@@ -73,38 +104,18 @@ object DocStreams {
     * executor broadcast (benchmarks are small by nature — the corpus is
     * what's big), membership is O(1) per gram, and no shuffle, join state,
     * or aggregation state exists at any stream length — the only shape
-    * that survives an unbounded 100 TB ingest. Tokenization matches the
-    * engine-wide definition ([[graft.operators.TextAnalysis.tokens]]:
-    * RE2's `\s` class on trimmed text) and grams are per-doc DISTINCT,
-    * mirroring d88's containment definition. */
+    * that survives an unbounded 100 TB ingest. The grams are d88's own
+    * Column ([[Dedup.shingles]], per-doc DISTINCT) and [[lookupFold]]
+    * counts the members, so the twin shingles exactly as the batch query
+    * does. */
   def decontaminate(docs: DataFrame, benchGrams: Set[String], k: Int = 5,
-      maxFrac: Double = 0.2): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(benchGrams)
-    docs.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        val set = bc.value
-        it.map { case (id, text) =>
-          // no Java .trim: it strips EVERY control char <= U+0020, while
-          // the batch kernel's Spark trim strips spaces only — the empty-
-          // token filter already absorbs leading whitespace of any kind,
-          // so skipping trim is what makes stream == batch bit-identical
-          val toks = text.split("[ \t\n\f\r]+").filter(_.nonEmpty)
-          val seen = scala.collection.mutable.HashSet.empty[String]
-          var n = 0; var hit = 0
-          if (toks.length >= k)
-            toks.sliding(k).foreach { w =>
-              val g = w.mkString(" ")
-              if (seen.add(g)) { n += 1; if (set(g)) hit += 1 }
-            }
-          DocContamination(id, n, hit, n > 0 && hit.toDouble / n > maxFrac)
-        }
-      }.toDF()
-  }
-
-  case class DocSurprisal(doc_id: Long, n_bigrams: Long,
-      logp_sum_micro: Long, avg_surprisal_micro: Long, n_oov: Long)
+      maxFrac: Double = 0.2): DataFrame =
+    lookupFold(docs, Dedup.shingles(docText, k),
+        benchGrams.iterator.map(_ -> 1L).toMap, 0L)
+      .select(col("doc_id"), col("n").cast("int").as("n_grams"),
+        col("sum").cast("int").as("n_hit"))
+      .withColumn("contaminated", when(col("n_grams") > 0,
+        col("n_hit") / col("n_grams") > maxFrac).otherwise(false))
 
   /** Streaming perplexity scoring — the live twin of batch
     * `t87_bigram_surprisal`, flipped to the ingest direction: arriving docs
@@ -118,41 +129,24 @@ object DocStreams {
     * pessimistic floor, so unseen content scores as HIGH surprisal and gets
     * quarantined rather than slipping through as "fluent". The count is
     * surfaced (`n_oov`) so a drifting corpus is visible to monitoring.
-    * Scoring math is bit-identical to t87: integer micro-nat sums, the one
-    * float division on identical operands, HALF_UP after negation. */
+    * The bigrams are t87's own Column and the average is t87's
+    * [[TextAnalysis.avgSurprisalMicro]], so stream == batch by
+    * construction; a doc with no bigrams (t87 drops it) averages 0. */
   def surprisalScore(docs: DataFrame, lm: Map[String, Long],
       oovLogpMicro: Option[Long] = None): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(lm)
     // default floor derives from the frozen model ([[oovFloorMicro]]): a
     // fixed constant stops being a surprisal maximum once the LM's own
     // rarest bigram scores below it
     val floor = oovLogpMicro.getOrElse(oovFloorMicro(lm.values))
-    docs.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        val model = bc.value
-        it.map { case (id, text) =>
-          // no Java .trim (strips  etc. the batch Spark trim keeps);
-          // the empty-token filter absorbs leading whitespace
-          val toks = text.toLowerCase(java.util.Locale.ROOT)
-            .split("[ \t\n\f\r]+").filter(_.nonEmpty)
-          var n = 0L; var sum = 0L; var oov = 0L
-          if (toks.length >= 2)
-            toks.sliding(2).foreach { w =>
-              val lp = model.getOrElse(w(0) + " " + w(1), {
-                oov += 1; floor
-              })
-              n += 1; sum += lp
-            }
-          val avg = if (n == 0) 0L else math.round(-sum.toDouble / n)
-          DocSurprisal(id, n, sum, avg, oov)
-        }
-      }.toDF()
+    lookupFold(docs, GraftFunctions.word_shingles(lower(docText), 2),
+        lm, floor)
+      .select(col("doc_id"), col("n").as("n_bigrams"),
+        col("sum").as("logp_sum_micro"),
+        when(col("n") === 0, lit(0L))
+          .otherwise(TextAnalysis.avgSurprisalMicro(col("sum"), col("n")))
+          .as("avg_surprisal_micro"),
+        col("n_oov"))
   }
-
-  case class DocImportance(doc_id: Long, n_words: Long, score_micro: Long,
-      n_oov: Long)
 
   /** Streaming DSIR importance scoring — the live twin of batch
     * `t95_dsir_select` on the ingest direction: the frozen weight table
@@ -163,30 +157,17 @@ object DocStreams {
     * vocabulary take `oovWeightMicro` (default 0 = neutral; under DSIR
     * smoothing the principled constant is ln((R+V)/(T+V)), computable
     * from the frozen totals) and are counted (`n_oov`) so vocabulary
-    * drift is visible to monitoring. Tokenization ([a-z]+ runs of the
-    * lowercased text) and integer micro-nat sums are bit-identical to
-    * the batch scorer; corpus-level SELECTION (t95's top-50 threshold)
-    * stays a batch/monitoring decision — a stream routes on a frozen
-    * score threshold instead. */
+    * drift is visible to monitoring. The words are t95's own Column
+    * ([[TextAnalysis.alphaWords]]) summed in integer micro-nats, so the
+    * score is t95's by construction; corpus-level SELECTION (t95's top-50
+    * threshold) stays a batch/monitoring decision — a stream routes on a
+    * frozen score threshold instead. */
   def dsirScore(docs: DataFrame, weights: Map[String, Long],
-      oovWeightMicro: Long = 0L): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(weights)
-    val wordRe = "[a-z]+".r
-    docs.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        val model = bc.value
-        it.map { case (id, text) =>
-          var n = 0L; var sum = 0L; var oov = 0L
-          wordRe.findAllIn(text.toLowerCase(java.util.Locale.ROOT)).foreach { w =>
-            sum += model.getOrElse(w, { oov += 1; oovWeightMicro })
-            n += 1
-          }
-          DocImportance(id, n, sum, oov)
-        }
-      }.toDF()
-  }
+      oovWeightMicro: Long = 0L): DataFrame =
+    lookupFold(docs, TextAnalysis.alphaWords(docText), weights,
+        oovWeightMicro)
+      .select(col("doc_id"), col("n").as("n_words"),
+        col("sum").as("score_micro"), col("n_oov"))
 
   case class DocNbPred(doc_id: Long, n_words: Long, predicted: String,
       score_micro: Long)
@@ -198,17 +179,16 @@ object DocStreams {
     * same 6-dp DECIMAL grid the batch side sums — see
     * [[graft.operators.TextAnalysis.nbModelMicros]]), and each arriving
     * document is scored against every language and argmax'd statelessly.
-    * Integer micro sums are partition- and arrival-order independent, so
-    * stream scores equal batch scores bit-for-bit. Ties break (score
-    * desc, lang asc) exactly like the batch window: the language list is
-    * pre-sorted and only a strictly greater score displaces the leader.
-    * No shuffle, join state, or aggregation state at any stream length —
-    * the only shape that survives an unbounded ingest; scoring is
+    * The tokens are t100's own Column (`tokens(lower(text))`), and integer
+    * micro sums are partition- and arrival-order independent, so stream
+    * scores equal batch scores bit-for-bit. Ties break (score desc, lang
+    * asc) exactly like the batch window: the language list is pre-sorted
+    * and only a strictly greater score displaces the leader. No shuffle,
+    * join state, or aggregation state at any stream length — the only
+    * shape that survives an unbounded ingest; scoring is
     * O(tokens × |langs|) per document with O(1) model lookups. Zero-token
     * documents score on priors alone (the batch side emits no row for
-    * them — its token explode produces nothing to group). Tokenization
-    * matches the engine-wide definition (whitespace split of the trimmed
-    * Locale.ROOT-lowercased text). */
+    * them — its token explode produces nothing to group). */
   def nbClassify(docs: DataFrame,
       langStats: Map[String, (Long, Long)],
       wordLik: Map[(String, String), Long]): DataFrame = {
@@ -218,14 +198,12 @@ object DocStreams {
     import spark.implicits._
     val bcL = spark.sparkContext.broadcast(langStats.toSeq.sortBy(_._1))
     val bcW = spark.sparkContext.broadcast(wordLik)
-    docs.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
+    docs.select(col("doc_id").cast("long"),
+        TextAnalysis.tokens(lower(docText)))
+      .as[(Long, Seq[String])]
       .mapPartitions { it =>
         val langs = bcL.value; val lik = bcW.value
-        it.map { case (id, text) =>
-          // no Java .trim (see decontaminate) — empty-token filter only
-          val toks = Option(text).getOrElse("")
-            .toLowerCase(java.util.Locale.ROOT)
-            .split("[ \t\n\f\r]+").filter(_.nonEmpty)
+        it.map { case (id, toks) =>
           var bestLang: String = null
           var bestScore = Long.MinValue
           langs.foreach { case (lang, (prior, dflt)) =>
@@ -309,46 +287,25 @@ object DocStreams {
     }
   }
 
-  case class DocBpe(doc_id: Long, n_chars: Long, n_syms: Long,
-      compression: Option[Double])
-
   /** Streaming BPE tokenizer application — the live twin of batch
     * `t94_bpe_apply` on the ingest direction: the frozen 3-entry merge
     * table (t93's model artifact — pair strings in rank order, fused to
-    * markers '0','1','2') broadcasts, and arriving documents re-tokenize
-    * statelessly: [a-z]+ words of the lowercased text, each merge applied
-    * as a left-to-right non-overlapping replace (= greedy BPE, identical
-    * to the SQL `replace` the batch side uses). Alpha-free docs get
-    * (0, 0, NULL) under the shared NULL-on-zero rule. Rounding matches
-    * Spark's HALF_UP `round(x, 6)` bit-for-bit via BigDecimal. */
+    * markers '0','1','2') is inlined as literals, and arriving documents
+    * re-tokenize statelessly through t94's own Columns: the
+    * [[TextAnalysis.alphaWords]] stream, [[TextAnalysis.bpeChars]] and
+    * [[TextAnalysis.bpeSyms]] (each merge a left-to-right non-overlapping
+    * `replace` = greedy BPE) and [[TextAnalysis.bpeCompression]], whose
+    * NULL-on-zero rule gives alpha-free docs (0, 0, NULL). */
   def bpeApply(docs: DataFrame, merges: Seq[String]): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     require(merges.length <= 3, "marker alphabet covers 3 merges")
-    val bc = spark.sparkContext.broadcast(merges)
-    val wordRe = "[a-z]+".r
-    docs.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        val ms = bc.value
-        it.map { case (id, text) =>
-          var chars = 0L; var syms = 0L
-          wordRe.findAllIn(text.toLowerCase(java.util.Locale.ROOT)).foreach { w =>
-            chars += w.length
-            var cur = w
-            var i = 0
-            while (i < ms.length) {
-              cur = cur.replace(ms(i), ('0' + i).toChar.toString)
-              i += 1
-            }
-            syms += cur.length
-          }
-          val comp =
-            if (chars == 0) None
-            else Some(java.math.BigDecimal.valueOf(syms.toDouble / chars)
-              .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue())
-          DocBpe(id, chars, syms, comp)
-        }
-      }.toDF()
+    docs.select(col("doc_id").cast("long").as("doc_id"),
+        TextAnalysis.alphaWords(docText).as("ws"))
+      .select(col("doc_id"), TextAnalysis.bpeChars(col("ws")).as("n_chars"),
+        TextAnalysis.bpeSyms(col("ws"), merges.map(lit(_)))
+          .as("n_syms"))
+      .select(col("doc_id"), col("n_chars"), col("n_syms"),
+        TextAnalysis.bpeCompression(col("n_chars"), col("n_syms"))
+          .as("compression"))
   }
 
   /** Streaming multimodal decode — the live twin of the m97 batch path:
@@ -456,18 +413,6 @@ object DocStreams {
         sum(col("ntok")).as("n_tokens"),
         sum(col("nch")).as("n_chars"))
 
-  /** Running per-source governance scorecard — the live twin of batch
-    * `t101_source_scorecard`'s distributive columns: per source, running
-    * doc/token counts plus how many docs pass the t99 Gopher gates and how
-    * many route as code under the t96 rule. The per-doc signals are the
-    * SHARED map-side kernel (`TextAnalysis.scorecardSignals`) — the exact
-    * expressions the batch card aggregates — so stream and batch cannot
-    * drift. State is one running-sum row per source (dimension-bounded,
-    * like [[runningMixture]]). The batch card's two count-distinct columns
-    * (n_langs, dup_surplus) are deliberately absent: running DISTINCT
-    * state grows with the stream, so a live dashboard takes the
-    * distributive subset and leaves exact distincts to the batch card —
-    * the same split production lambda architectures make. */
   /** Ingest-time near-dup gate — the live twin of batch
     * `d101_incremental_near_dup`: each arriving document's MinHash band
     * keys are computed map-side (the batch pipeline's exact lane
@@ -688,9 +633,6 @@ object DocStreams {
     ()
   }
 
-  case class DocBucket(doc_id: Long, lang: String, n_tokens: Long,
-      surprisal: Option[Double], bucket: Option[String], n_oov: Long)
-
   /** Streaming perplexity bucketing — the live twin of batch
     * `t102_perplexity_buckets` in the CCNet deployment shape: the unigram
     * model (term → micro-nat log-prob, `TextAnalysis.unigramLq`) and the
@@ -700,50 +642,32 @@ object DocStreams {
     * each arriving document against them, exactly as CCNet buckets new
     * crawl snapshots against the previous snapshot's LM cutoffs. Fully
     * stateless: O(1) model lookups per token, no join/agg state at any
-    * stream length. Scoring math is bit-identical to t82/t102 (integer
-    * micro-nat sums, one float division on identical operands, HALF_UP to
-    * 6 dp); tokens outside the frozen vocabulary take `oovLqMicro` (a
-    * pessimistic floor — unseen content reads as HIGH surprisal and lands
-    * in the tail for quarantine, never silently in the head) and are
-    * counted so vocabulary drift is visible. Token-free docs score NULL
-    * (the batch side emits no row for them); a language with no frozen
-    * edges buckets NULL rather than guessing. */
+    * stream length. The tokens, the 6-dp surprisal
+    * ([[TextAnalysis.surprisalNats]]) and the bucket rule
+    * ([[TextAnalysis.tercileBucket]]) are t102's own Columns; tokens
+    * outside the frozen vocabulary take `oovLqMicro` (a pessimistic floor
+    * — unseen content reads as HIGH surprisal and lands in the tail for
+    * quarantine, never silently in the head) and are counted so
+    * vocabulary drift is visible. Token-free docs score NULL (the batch
+    * side emits no row for them); a language with no frozen edges buckets
+    * NULL rather than guessing. */
   def perplexityBucket(docs: DataFrame, lq: Map[String, Long],
       edges: Map[String, (Double, Double)],
       oovLqMicro: Option[Long] = None): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val bcL = spark.sparkContext.broadcast(lq)
-    val bcE = spark.sparkContext.broadcast(edges)
     // default floor derives from the frozen model ([[oovFloorMicro]]) so
     // an OOV token is GUARANTEED to read as more surprising than any
     // in-vocabulary token, at any training-corpus size
     val floor = oovLqMicro.getOrElse(oovFloorMicro(lq.values))
-    docs.select(col("doc_id").cast("long"), col("lang"), col("text"))
-      .as[(Long, String, String)]
-      .mapPartitions { it =>
-        val model = bcL.value; val e = bcE.value
-        it.map { case (id, lang, text) =>
-          // no Java .trim: it strips every control char <= U+0020 while
-          // the batch kernel's Spark trim strips only spaces — the
-          // empty-token filter absorbs leading whitespace either way
-          val toks = Option(text).getOrElse("")
-            .toLowerCase(java.util.Locale.ROOT)
-            .split("[ \t\n\f\r]+").filter(_.nonEmpty)
-          var sum = 0L; var oov = 0L
-          toks.foreach { w =>
-            sum += model.getOrElse(w, { oov += 1; floor })
-          }
-          val sp =
-            if (toks.isEmpty) None
-            else Some(java.math.BigDecimal
-              .valueOf(-(sum.toDouble / (toks.length * 1000000L)))
-              .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue())
-          val bucket = for (s <- sp; (e1, e2) <- e.get(lang)) yield
-            if (s <= e1) "head" else if (s <= e2) "middle" else "tail"
-          DocBucket(id, lang, toks.length.toLong, sp, bucket, oov)
-        }
-      }.toDF()
+    lookupFold(docs, TextAnalysis.tokens(lower(docText)), lq, floor, "lang")
+      .select(col("doc_id"), col("lang"), col("n").as("n_tokens"),
+        when(col("n") > 0, TextAnalysis.surprisalNats(col("sum"), col("n")))
+          .as("surprisal"),
+        typedLit(edges).getItem(col("lang")).as("e"), col("n_oov"))
+      .select(col("doc_id"), col("lang"), col("n_tokens"), col("surprisal"),
+        when(col("surprisal").isNotNull && col("e").isNotNull,
+          TextAnalysis.tercileBucket(col("surprisal"), col("e._1"),
+            col("e._2"))).as("bucket"),
+        col("n_oov"))
   }
 
   // event_ts default is epoch+1ms, NOT epoch: the engine drops rows at
@@ -918,6 +842,18 @@ object DocStreams {
       }
   }
 
+  /** Running per-source governance scorecard — the live twin of batch
+    * `t101_source_scorecard`'s distributive columns: per source, running
+    * doc/token counts plus how many docs pass the t99 Gopher gates and how
+    * many route as code under the t96 rule. The per-doc signals are the
+    * SHARED map-side kernel (`TextAnalysis.scorecardSignals`) — the exact
+    * expressions the batch card aggregates — so stream and batch cannot
+    * drift. State is one running-sum row per source (dimension-bounded,
+    * like [[runningMixture]]). The batch card's two count-distinct columns
+    * (n_langs, dup_surplus) are deliberately absent: running DISTINCT
+    * state grows with the stream, so a live dashboard takes the
+    * distributive subset and leaves exact distincts to the batch card —
+    * the same split production lambda architectures make. */
   def runningScorecard(docs: DataFrame): DataFrame =
     graft.operators.TextAnalysis.scorecardSignals(docs)
       .groupBy("source")

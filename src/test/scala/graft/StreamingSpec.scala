@@ -1521,6 +1521,67 @@ class StreamingSpec extends AnyFunSuite {
     } finally Seq(dedup, decon, surp, mix, ppl).foreach(_.stop())
   }
 
+  test("scoring twins answer a null text exactly like an empty one; " +
+      "their count columns are the sizes of the batch token Columns") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val rows = Seq[String](null, "", "\u000B a b \t", "ÉCOLE Straße AND the")
+      .zipWithIndex.map { case (t, i) => (i + 1L, t, "en") }
+    val src = MemoryStream[(Long, String, String)]
+    val docs = src.toDF().toDF("doc_id", "text", "lang")
+    // (twin, its stream, the index of its count column)
+    val twins = Seq(
+      ("decon", streaming.DocStreams.decontaminate(docs, Set("a b c d e")), 1),
+      ("surp", streaming.DocStreams.surprisalScore(docs,
+        Map("a b" -> -100L)), 1),
+      ("dsir", streaming.DocStreams.dsirScore(docs, Map("the" -> 3L)), 1),
+      ("nb", streaming.DocStreams.nbClassify(docs,
+        Map("en" -> ((-1L, -5L)), "fr" -> ((-2L, -4L))),
+        Map(("en", "the") -> -1L)), 1),
+      ("bpe", streaming.DocStreams.bpeApply(docs, Seq("th", "0e")), 1),
+      ("ppl", streaming.DocStreams.perplexityBucket(docs,
+        Map("the" -> -500000L), Map("en" -> ((0.4, 0.6)))), 2))
+    val qs = twins.map { case (n, df, _) =>
+      df.writeStream.format("memory").queryName(s"nulltext_$n")
+        .outputMode("append").start()
+    }
+    try {
+      src.addData(rows)
+      qs.foreach(_.processAllAvailable())
+      // the batch queries' own token Columns over the same static rows
+      val static = rows.toDF("doc_id", "text", "lang")
+      val text = col("text")
+      def sizes(c: org.apache.spark.sql.Column): Map[Long, Long] = static
+        .filter(text.isNotNull)
+        .select(col("doc_id"), size(c).cast("long"))
+        .as[(Long, Long)].collect().toMap
+      val words = regexp_extract_all(lower(text), lit("[a-z]+"), lit(0))
+      val expect = Map(
+        "decon" -> sizes(operators.Dedup.shingles(text, 5)),
+        "surp" -> sizes(functions.GraftFunctions.word_shingles(lower(text), 2)),
+        "dsir" -> sizes(words),
+        "nb" -> sizes(operators.TextAnalysis.tokens(lower(text))),
+        // n_chars: the letters of the same word array
+        "bpe" -> static.filter(text.isNotNull)
+          .select(col("doc_id"), length(array_join(words, "")).cast("long"))
+          .as[(Long, Long)].collect().toMap,
+        "ppl" -> sizes(operators.TextAnalysis.tokens(lower(text))))
+      twins.foreach { case (n, _, ci) =>
+        val out = spark.table(s"nulltext_$n").collect()
+          .map(r => r.getLong(0) -> r).toMap
+        assert(out.keySet == Set(1L, 2L, 3L, 4L), s"$n lost a row: $out")
+        assert(out(1L).toSeq.tail == out(2L).toSeq.tail,
+          s"$n: null text ${out(1L)} != empty text ${out(2L)}")
+        expect(n).foreach { case (id, k) =>
+          assert(out(id).getAs[Number](ci).longValue == k,
+            s"$n doc $id: count ${out(id).get(ci)} != batch Column size $k")
+        }
+      }
+      // the fixture really tokenizes: the \u000B doc carries 3 tokens
+      assert(expect("nb")(3L) == 3L && expect("surp")(3L) == 2L)
+    } finally qs.foreach(_.stop())
+  }
+
   test("sceneAssign survives a degenerate frame stream") {
     // single-frame assets, duplicate energies, an asset whose frames all
     // arrive in one batch after another asset interleaves
