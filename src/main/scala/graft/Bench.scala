@@ -374,6 +374,15 @@ object Bench {
     spark.stop()
   }
 
+  /** Plan text with its run-order ids masked: expression ids `#N`,
+    * `plan_id=N`, `QueryStage N` and codegen-stage `*(N)` follow execution
+    * order, so without the mask two runs of one commit differ. */
+  private[graft] def normalizePlan(p: String): String =
+    p.replaceAll("#\\d+", "#")
+      .replaceAll("plan_id=\\d+", "plan_id=")
+      .replaceAll("(QueryStage) \\d+", "$1 N")
+      .replaceAll("\\*\\(\\d+\\)", "*(N)")
+
   private def plan(sfDir: String, outDir: String, tag: String,
       args: List[String]): Unit = {
     val executed = args.contains("--final")
@@ -383,7 +392,7 @@ object Bench {
     names.foreach { n =>
       try {
         val df = SparkEntry.queries(n)(spark, sfDir)
-        val text =
+        val text = normalizePlan(
           if (!executed) df.queryExecution.explainString(FormattedMode)
           else {
             // drive THIS DataFrame's QueryExecution (df.write would plan a
@@ -398,7 +407,7 @@ object Bench {
             def count(w: String) = p.sliding(w.length).count(_ == w)
             s"reused_exchanges=${count("ReusedExchange")} " +
               s"scans=${count("Scan parquet")}\n$p"
-          }
+          })
         val path = Paths.get(outDir, s"${n}_$tag.txt")
         Files.writeString(path, text)
         println(s"===== $n -> $path =====")

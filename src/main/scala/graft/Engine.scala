@@ -1014,15 +1014,19 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
   private val plainQuery =
     """(?is)\s*(?:SELECT\b.*|WITH\b(?!.*\bINSERT\b).*)""".r
 
-  /** The copy-on-write rewrites that commit through [[commitSection]]. */
+  /** The copy-on-write rewrites: they stage under the writer lock alone
+    * and take the commit lock only in [[commitSection]]. */
   private def isRewrite(stmt: String): Boolean =
     Seq(updateStmt, deleteStmt, mergeStmt, optimizeStmt)
       .exists(_.matches(stmt))
 
-  /** The commit section of an UPDATE/DELETE/MERGE/OPTIMIZE: the pointer
-    * swap, the catalog repoint, the index-route drop (not for OPTIMIZE,
-    * whose rows are unchanged) and the sweep, under the commit lock — no
-    * read plans between the swap and the repoint. */
+  /** The commit section of every warehouse write routed here (INSERT,
+    * LOAD, UPDATE, DELETE, MERGE, OPTIMIZE): the pointer swap, the catalog
+    * repoint, the index-route drop (not for OPTIMIZE, whose rows are
+    * unchanged) and the sweep, under the commit lock — no read plans
+    * between the swap and the repoint. INSERT and LOAD already hold the
+    * lock for their whole run (an INSERT that falls through to Spark SQL
+    * is not a warehouse write); the lock is reentrant. */
   private def commitSection(dropRoutes: Boolean): commands.TableCommands.Commit =
     (tbl, swap, sweep) => holding(commitLock) {
       swap()
@@ -1106,11 +1110,11 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
       // an optional column list; unlisted columns insert NULL). The target
       // resolves CASE-INSENSITIVELY (SQL identifier semantics): a
       // case-variant spelling must not slip past the engine to Spark's
-      // catalog append, which would bypass NOT NULL checks and txn COW.
+      // catalog append, which would bypass NOT NULL checks and the
+      // versioned publish.
       val tbl = localName(q, tblRaw, "INSERT")
-      cmds.insertInto(tbl, insertRows(tbl, Option(colList), body))
-      registerTable(tbl) // txn-path COW may have moved the pointer
-      dropIndexesOf(tbl)
+      cmds.insertInto(tbl, insertRows(tbl, Option(colList), body),
+        commitSection(dropRoutes = true))
       status(s"inserted into $tbl")
     case loadFile(path, nameRaw) =>
       // reference: LOAD <file> INTO <table> appends (LoadFileCommand.java)
@@ -1121,9 +1125,8 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
       // would race its per-batch commit (the one DML-shaped verb that
       // didn't route through localName)
       requireNoSinkClaim(name, "LOAD INTO")
-      cmds.insertInto(name, readIngest(path, Some(cmds.table(name).schema)))
-      registerTable(name)
-      dropIndexesOf(name)
+      cmds.insertInto(name, readIngest(path, Some(cmds.table(name).schema)),
+        commitSection(dropRoutes = true))
       status(s"loaded $path into $name")
     case createIndex(unique, _, idxType, tbl, colList) =>
       // reference: CREATE [UNIQUE] INDEX builds a B+-tree

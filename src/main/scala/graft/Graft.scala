@@ -308,13 +308,4 @@ object Graft {
     }
     (units, bytes)
   }
-
-  /** Register every table as a temp view (idempotent) and install the
-    * engine's extra SQL functions. Queries that go through `spark.sql` call
-    * this first.
-    */
-  def registerAll(spark: SparkSession, sfDir: String): Unit = {
-    tableNames.foreach { n => table(spark, sfDir, n).createOrReplaceTempView(n) }
-    functions.GraftFunctions.register(spark)
-  }
 }

@@ -1,6 +1,6 @@
 package graft.commands
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -15,7 +15,9 @@ import org.apache.spark.sql.types.StructType
   *    → CSV ingest to Parquet. The reference profiles each CSV column to
   *    pick RLE/dictionary/plain encodings; Parquet chooses per-chunk
   *    encodings natively, so the profiling step disappears by design.
-  *  - INSERT (`commands/InsertCommand.java:34-281`) → append write.
+  *  - INSERT / LOAD (`commands/InsertCommand.java:34-281`) → append:
+  *    the new rows plus hard links to the live version's files, published
+  *    as a new table version.
   *  - UPDATE / DELETE (`commands/UpdateCommand.java:36-128`,
   *    `DeleteCommand.java:41-77`) → copy-on-write rewrite: Parquet is
   *    immutable, so mutation = filtered/projected rewrite published as a
@@ -33,12 +35,15 @@ import org.apache.spark.sql.types.StructType
   * Iceberg use, plus a minimal append-only VERSIONS log (one line per
   * pointer swap — what RETAIN-window sweeping and SNAPSHOT time travel
   * read; never consulted on the hot read path, which stays one pointer
-  * file). Every rewrite stages a complete new version
-  * directory, then publishes it by an ATOMIC rename of `CURRENT.tmp` over
-  * `CURRENT`: readers resolve the pointer first, so they see the old
-  * version or the new one, never a half-state, and a crash at ANY point
-  * leaves the table readable (an unpublished version directory is inert
-  * garbage, swept by the next rewrite).
+  * file). Every write — rewrite, append, stream batch or tail
+  * compaction — goes through [[publish]]: it stages a complete new version
+  * directory (append-shaped writes hard-link the files they keep), then
+  * publishes it by an ATOMIC rename of `CURRENT.tmp` over `CURRENT`. No
+  * write touches a published directory, so readers resolve the pointer
+  * first and see the old version or the new one, never a half-state, a
+  * pinned SNAPSHOT keeps its rows, and a crash at ANY point leaves the
+  * table readable (an unpublished version directory is inert garbage,
+  * swept by the next write).
   *
   * A sweep never deletes a LEASED version directory: a read served through
   * [[graft.Engine.withResult]] leases every version its plan scans until
@@ -133,29 +138,29 @@ class TableCommands(spark: SparkSession, warehouse: String) {
       b.await(120, java.util.concurrent.TimeUnit.SECONDS); ()
     }
 
-  /** Stage `df` as a fresh version directory, atomically publish the
-    * pointer, then sweep superseded/orphaned versions (sweep deferred
-    * while a transaction holds pre-images).
+  /** The one write path: run `stage` on a fresh version directory,
+    * atomically publish the pointer, then sweep superseded/orphaned
+    * versions (sweep deferred while a transaction holds pre-images).
     *
     * `streamBatch` (exactly-once streaming appends) is written as a
-    * `_STREAM_BATCH` file (underscore-prefixed: parquet readers skip it) INSIDE the staged version directory BEFORE the
-    * pointer swap — the data and the batch id become visible in the same
-    * atomic rename, so no crash window can separate them. Rewrites without
-    * an explicit id (UPDATE/DELETE/OPTIMIZE) carry the live version's
-    * marker forward, so compacting a streamed table cannot reset its
-    * replay cursor.
+    * `_STREAM_BATCH` file (underscore-prefixed: parquet readers skip it)
+    * INSIDE the staged version directory BEFORE the pointer swap — the
+    * data and the batch id become visible in the same atomic rename, so no
+    * crash window can separate them. Writes without an explicit id carry
+    * the live version's marker forward, so compacting or inserting into a
+    * streamed table cannot reset its replay cursor.
     *
     * Staging runs bare; only the swap and the sweep run inside `commit`
     * (see [[TableCommands.Commit]]). */
-  private def publish(table: String, df: DataFrame,
-      streamBatch: Option[Long] = None,
-      commit: TableCommands.Commit = TableCommands.bareCommit): Unit = {
+  private def publish(table: String, streamBatch: Option[Long] = None,
+      commit: TableCommands.Commit = TableCommands.bareCommit)(
+      stage: Path => Unit): Unit = {
     val version = nextVersion(table)
     assertStageFresh(table, version)
-    df.write.mode(SaveMode.Overwrite).parquet(s"${dir(table)}/$version")
+    val path = Paths.get(dir(table), version)
+    stage(path)
     streamBatch.orElse(lastCommittedBatch(table)).foreach(b =>
-      Files.writeString(Paths.get(dir(table), version, "_STREAM_BATCH"),
-        b.toString))
+      Files.writeString(path.resolve("_STREAM_BATCH"), b.toString))
     maybePause()
     maybeCrash("staged")
     commit(table,
@@ -163,16 +168,29 @@ class TableCommands(spark: SparkSession, warehouse: String) {
       () => if (txnSnapshot.isEmpty) sweep(table))
   }
 
-  /** Atomic pointer publish + version-log append (shared by [[publish]]
-    * and [[appendCommitted]] so every commit path records history the
-    * same way). The log append comes AFTER the swap: a crash between
+  /** The staging step that writes `df` as the version's files. */
+  private def write(df: DataFrame)(stage: Path): Unit =
+    df.write.mode(SaveMode.Overwrite).parquet(stage.toString)
+
+  /** The reader-visible data files of version directory `v`: markers,
+    * `_SUCCESS` and checksums (underscore/dot-prefixed) are skipped. */
+  private def dataFiles(v: Path): Array[java.io.File] =
+    Option(v.toFile.listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isFile && !f.getName.startsWith("_") &&
+        !f.getName.startsWith("."))
+
+  /** Carry `files` into `stage` by hard link — metadata-only: parquet part
+    * files are immutable once written and UUID-named, so a link never
+    * mutates the version it came from and names never collide. */
+  private def link(files: Array[java.io.File], stage: Path): Unit =
+    files.foreach(f => Files.createLink(stage.resolve(f.getName), f.toPath))
+
+  /** Atomic pointer publish + version-log append, called only by
+    * [[publish]]. The log append comes AFTER the swap: a crash between
     * them leaves CURRENT unlogged, which the next sweep heals (CURRENT
     * is always in the kept set and the log is rewritten to it). */
   private def swapPointer(table: String, version: String): Unit = {
-    val tmp = Paths.get(dir(table), "CURRENT.tmp")
-    Files.writeString(tmp, version)
-    Files.move(tmp, currentFile(table),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    atomicWrite(currentFile(table), version)
     Files.writeString(versionsLog(table), version + "\n",
       java.nio.file.StandardOpenOption.CREATE,
       java.nio.file.StandardOpenOption.APPEND); ()
@@ -181,7 +199,7 @@ class TableCommands(spark: SparkSession, warehouse: String) {
   // ── version history + retention (time travel for training snapshots:
   // "which corpus version did this model train on" needs the version to
   // still EXIST — RETAIN k keeps the last k published versions readable,
-  // and appendCommitted's hard links make the extra versions cheap) ──────
+  // and the appends' hard links make the extra versions cheap) ──────────
   private def versionsLog(table: String) = Paths.get(dir(table), "VERSIONS")
   private def retainFile(table: String) = Paths.get(dir(table), "RETAIN")
 
@@ -324,9 +342,9 @@ class TableCommands(spark: SparkSession, warehouse: String) {
     gone.nonEmpty
   }
 
-  /** tmp-write + ATOMIC_MOVE — the same discipline as the CURRENT pointer,
-    * used for every multi-line metadata file a crash mid-write could
-    * truncate (VERSIONS, PINS). */
+  /** tmp-write + ATOMIC_MOVE, for every metadata file a crash mid-write
+    * could truncate or a reader could see half-written (CURRENT, VERSIONS,
+    * PINS). */
   private def atomicWrite(path: java.nio.file.Path, content: String): Unit = {
     val tmp = path.resolveSibling(path.getFileName.toString + ".tmp")
     Files.writeString(tmp, content)
@@ -427,10 +445,7 @@ class TableCommands(spark: SparkSession, warehouse: String) {
     // its DDL too); skip it rather than fail the rest of the rollback
     snap.foreach { case (t, version) =>
       if (Files.isDirectory(Paths.get(dir(t), version))) {
-        val tmp = Paths.get(dir(t), "CURRENT.tmp")
-        Files.writeString(tmp, version)
-        Files.move(tmp, currentFile(t),
-          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+        atomicWrite(currentFile(t), version)
         sweep(t)
       }
     }
@@ -450,7 +465,7 @@ class TableCommands(spark: SparkSession, warehouse: String) {
       s"CURRENT of $name names a missing version")
     val n = spark.read.parquet(dp).count()
     // table-wide PRIMARY KEY + UNIQUE audits — the cross-batch half of
-    // checkBatchPk/checkBatchUnique, one explicit distributed pass each,
+    // checkBatch's PK/UNIQUE checks, one explicit distributed pass each,
     // run only when the user asks to VERIFY
     val pk = pkCols(name)
     val uq = uniqueKeys(name)
@@ -526,7 +541,7 @@ class TableCommands(spark: SparkSession, warehouse: String) {
     val n = if (targetPartitions > 0) targetPartitions
       else spark.sessionState.conf.numShufflePartitions
     if (zorderBy.isEmpty)
-      publish(name, table(name).repartition(n), commit = commit)
+      publish(name, commit = commit)(write(table(name).repartition(n)))
     else {
       val t = table(name)
       val byLower = t.columns.map(c => c.toLowerCase -> c).toMap
@@ -623,10 +638,10 @@ class TableCommands(spark: SparkSession, warehouse: String) {
             k * cols.size + i).cast("long"))
           .reduce(_ + _)
       }.reduce(_ + _)
-      publish(name, t.withColumn("__graft_z", z)
+      publish(name, commit = commit)(write(t.withColumn("__graft_z", z)
         .repartitionByRange(n, col("__graft_z"))
         .sortWithinPartitions("__graft_z")
-        .drop("__graft_z"), commit = commit)
+        .drop("__graft_z")))
     }
   }
 
@@ -649,24 +664,23 @@ class TableCommands(spark: SparkSession, warehouse: String) {
     * because one tier keeps the version layout flat and the read path
     * untouched.
     *
-    * Publishing follows [[publish]]'s exact discipline: fresh version
-    * dir, stream marker carried forward, crash hooks at the same staged/
-    * published points, atomic pointer swap, sweep (deferred inside a
-    * txn, where pre-images must survive rollback — links never mutate
+    * It commits through [[publish]]: the stage is the coalesced tail
+    * plus links to the graduated files, the stream marker rides forward,
+    * and the sweep waits for the end of an open txn (links never mutate
     * the originals, so the pre-image is intact either way). A no-op
-    * (≤ 1 tail file) stages nothing and returns false. */
+    * (≤ 1 tail file) stages nothing and returns false; it still sweeps
+    * (outside a txn), so the retry after a crash between pointer swap and
+    * sweep — which finds the tail already merged — restores the retention
+    * bound instead of leaving it to the next write. */
   def compactTail(name: String,
       thresholdBytes: Long = 64L << 20): Boolean = {
     require(tableExists(name), s"table $name does not exist")
-    val live = Paths.get(dataPath(name))
-    val dataFiles = Option(live.toFile.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && !f.getName.startsWith("_") &&
-        !f.getName.startsWith("."))
-    val (graduated, tail) = dataFiles.partition(_.length >= thresholdBytes)
-    if (tail.length <= 1) return false // nothing to merge
-    val version = nextVersion(name)
-    assertStageFresh(name, version)
-    val stage = Paths.get(dir(name), version)
+    val (graduated, tail) = dataFiles(Paths.get(dataPath(name)))
+      .partition(_.length >= thresholdBytes)
+    if (tail.length <= 1) { // nothing to merge
+      if (txnSnapshot.isEmpty) sweep(name)
+      return false
+    }
     val tailBytes = tail.map(_.length).sum
     val outFiles = math.max(1L,
       (tailBytes + thresholdBytes - 1) / thresholdBytes).toInt
@@ -674,18 +688,10 @@ class TableCommands(spark: SparkSession, warehouse: String) {
     // empty tail-frame cannot infer a narrower one) and rewrite them as
     // few right-sized files; coalesce, not repartition — compaction is a
     // pure relayout, no shuffle needed
-    spark.read.schema(table(name).schema)
+    val merged = spark.read.schema(table(name).schema)
       .parquet(tail.map(_.getPath).toSeq: _*)
       .coalesce(outFiles)
-      .write.mode(SaveMode.Overwrite).parquet(stage.toString)
-    graduated.foreach(f =>
-      Files.createLink(stage.resolve(f.getName), f.toPath))
-    lastCommittedBatch(name).foreach(b =>
-      Files.writeString(stage.resolve("_STREAM_BATCH"), b.toString))
-    maybeCrash("staged")
-    swapPointer(name, version)
-    maybeCrash("published")
-    if (txnSnapshot.isEmpty) sweep(name)
+    publish(name) { stage => write(merged)(stage); link(graduated, stage) }
     true
   }
 
@@ -701,7 +707,7 @@ class TableCommands(spark: SparkSession, warehouse: String) {
     if (tableExists(name)) {
       if (!ifNotExists)
         throw new IllegalArgumentException(s"table $name already exists")
-    } else publish(name, df)
+    } else publish(name)(write(df))
 
   // ── declared constraints (reference `relations/TableSchema.java:1-283`
   // carries NOT NULL / PK per column; `lab/storage/IndexUpdater.java:1-152`
@@ -767,8 +773,8 @@ class TableCommands(spark: SparkSession, warehouse: String) {
       notNull: Seq[String], pk: Seq[String] = Nil): Unit = {
     if (tableExists(name))
       throw new IllegalArgumentException(s"table $name already exists")
-    publish(name, spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema))
+    publish(name)(write(spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)))
     val lines = notNull.map(_.toLowerCase).distinct ++
       pk.map(c => s"pk:${c.toLowerCase}").distinct
     if (lines.nonEmpty)
@@ -796,44 +802,33 @@ class TableCommands(spark: SparkSession, warehouse: String) {
     }
   }
 
-  /** PRIMARY KEY enforcement, priced for scale (reference
-    * `lab/storage/IndexUpdater.java:1-152` rejects duplicate keys via its
-    * B⁺-tree — free there, an O(table) anti-join per insert here):
+  /** The constraint check of every append: NOT NULL ([[checkNotNull]]),
+    * then PRIMARY KEY and UNIQUE (CREATE UNIQUE INDEX, reference
+    * `commands/CreateIndexCommand.java:1-142`) priced for scale — the
+    * reference (`lab/storage/IndexUpdater.java:1-152`) rejects duplicate
+    * keys via its B⁺-tree, free there, an O(table) anti-join per insert
+    * here:
     *  - each insert BATCH is rejected if it repeats a key internally — a
-    *    batch-sized groupBy, never a table scan;
+    *    batch-sized groupBy, never a table scan (SQL UNIQUE semantics: a
+    *    NULL in any UNIQUE key column never collides);
     *  - cross-batch uniqueness is audited on demand by `VERIFY t`
     *    ([[verifyTable]]), one explicit full-table pass — the honest
     *    columnar price, paid when asked rather than smuggled into every
     *    append. */
-  private def checkBatchPk(name: String, rows: DataFrame): Unit = {
-    val pk = pkCols(name)
-    if (pk.nonEmpty) {
-      val byLower = rows.columns.map(c => c.toLowerCase -> c).toMap
-      if (pk.forall(byLower.contains)) {
-        val dup = rows.groupBy(pk.map(c => col(byLower(c))): _*)
-          .count().filter(col("count") > 1).limit(1).count() > 0
-        if (dup)
-          throw new IllegalArgumentException(
-            s"PRIMARY KEY (${pk.mkString(", ")}) duplicated within the " +
-              s"insert batch for $name")
-      }
-    }
-  }
-
-  /** Single-column UNIQUE enforcement (CREATE UNIQUE INDEX, reference
-    * `commands/CreateIndexCommand.java:1-142`), priced exactly like the PK:
-    * in-batch duplicate rejection per insert (batch-sized groupBy; SQL
-    * UNIQUE semantics — NULLs never collide), cross-batch audit under
-    * VERIFY. */
-  private def checkBatchUnique(name: String, rows: DataFrame): Unit = {
+  private def checkBatch(name: String, rows: DataFrame): Unit = {
+    checkNotNull(name, rows) // evaluates `rows` once extra; command-path cost
     val byLower = rows.columns.map(c => c.toLowerCase -> c).toMap
-    uniqueKeys(name).filter(_.forall(byLower.contains)).foreach { key =>
-      // SQL UNIQUE semantics: a NULL in ANY key column never collides
-      val dup = rows
-        .filter(key.map(c => col(byLower(c)).isNotNull).reduce(_ && _))
-        .groupBy(key.map(c => col(byLower(c))): _*)
+    def repeats(key: Seq[String], keyed: DataFrame): Boolean =
+      keyed.groupBy(key.map(c => col(byLower(c))): _*)
         .count().filter(col("count") > 1).limit(1).count() > 0
-      if (dup)
+    val pk = pkCols(name)
+    if (pk.nonEmpty && pk.forall(byLower.contains) && repeats(pk, rows))
+      throw new IllegalArgumentException(
+        s"PRIMARY KEY (${pk.mkString(", ")}) duplicated within the " +
+          s"insert batch for $name")
+    uniqueKeys(name).filter(_.forall(byLower.contains)).foreach { key =>
+      if (repeats(key,
+          rows.filter(key.map(c => col(byLower(c)).isNotNull).reduce(_ && _))))
         throw new IllegalArgumentException(
           s"UNIQUE (${key.mkString(", ")}) duplicated within the insert " +
             s"batch for $name")
@@ -855,102 +850,42 @@ class TableCommands(spark: SparkSession, warehouse: String) {
 
   def table(name: String): DataFrame = spark.read.parquet(dataPath(name))
 
-  /** INSERT INTO t VALUES / SELECT — append semantics. New files land in
-    * the CURRENT version directory under Spark's output-commit protocol
-    * (same visibility guarantee as any Spark append); version bumps are
-    * reserved for rewrites, so appends stay O(new data). Inside an open
-    * transaction the append goes through a COW publish instead, so the
-    * pre-image survives for ROLLBACK. */
-  def insertInto(name: String, rows: DataFrame): Unit = {
-    checkNotNull(name, rows) // evaluates `rows` once extra; command-path cost
-    checkBatchPk(name, rows)
-    checkBatchUnique(name, rows)
-    if (txnSnapshot.nonEmpty) publish(name, table(name).unionByName(rows))
-    else rows.write.mode(SaveMode.Append).parquet(dataPath(name))
+  /** INSERT INTO t VALUES / SELECT and LOAD — append semantics, as a
+    * new version: the stage holds the new rows plus hard links to the live
+    * version's data files, so the write costs O(new data) and the live
+    * directory is never touched (a SNAPSHOT pinned on it keeps its rows,
+    * and a reader in another process never sees a partial INSERT).
+    * `commit` as for the rewrites ([[TableCommands.Commit]]). */
+  def insertInto(name: String, rows: DataFrame,
+      commit: TableCommands.Commit = TableCommands.bareCommit): Unit = {
+    require(tableExists(name), s"table $name does not exist")
+    append(name, rows, None, commit)
   }
 
-  /** Exactly-once streaming append: the micro-batch id commits atomically
-    * WITH the data (see [[publish]]'s `streamBatch`), and a re-delivered
-    * batch (id ≤ the live marker) is a no-op — `foreachBatch` replays after
-    * failures/restarts, so idempotence is the sink's responsibility.
-    *
-    * Cost model: each batch is a COW rewrite, O(table) not O(batch) — the
-    * price of atomic exactly-once under a single-pointer manifest. At
-    * 100 TB use [[insertInto]] (O(batch) at-least-once appends) with
-    * idempotent/deduping consumers, or an additive file-manifest log
-    * (Delta-style) that can commit appends atomically. */
-  def insertCommitted(name: String, rows: DataFrame, batchId: Long): Unit =
-    if (!tableExists(name)) {
-      checkNotNull(name, rows)
-      publish(name, rows, Some(batchId))
-    } else if (lastCommittedBatch(name).exists(_ >= batchId)) {
-      () // replayed batch — already in the table
-    } else {
-      checkNotNull(name, rows)
-      checkBatchPk(name, rows)
-      checkBatchUnique(name, rows)
-      publish(name, table(name).unionByName(rows), Some(batchId))
-    }
-
-  /** Exactly-once streaming append at O(batch) WRITE cost — the
-    * "additive file-manifest" commit [[insertCommitted]]'s cost note
-    * promises: the batch's parquet files land in a FRESH version
-    * directory, the live version's data files are HARD-LINKED in
-    * (metadata-only — parquet part files are immutable once written and
-    * carry UUID names, so links are safe and collisions impossible), the
-    * batch marker is written beside them, and the single pointer rename
-    * commits data + marker atomically. Replayed batches (id ≤ the live
-    * marker) are no-ops, crash-staged versions are swept exactly like
-    * [[publish]]'s, and a crash between stage and pointer leaves the old
-    * version live and intact — [[insertCommitted]]'s guarantees without
-    * its O(table) rewrite, so a corpus-sized index can absorb per-batch
-    * appends at 100 TB.
-    *
-    * Non-atomic-cost caveat: each append adds files (the old ones are
-    * shared by link, never rewritten), so a long-running stream
-    * accumulates small files — that is OPTIMIZE's job (compaction
-    * publishes a fresh COW version and carries the marker forward).
-    * Readers that pinned the PREVIOUS version's path (location-pinned
-    * catalog entries) must re-register after an append, because unlike
-    * [[insertInto]] the live directory CHANGES — callers that serve a
-    * catalog name re-point it (see DedupIndex/VectorIndex maintenance).
-    * Inside a transaction this degrades to the COW union (pre-images
-    * must survive rollback). */
+  /** Exactly-once streaming append: [[insertInto]]'s link-forward version
+    * whose micro-batch id commits atomically WITH the data (see
+    * [[publish]]'s `streamBatch`). A re-delivered batch (id ≤ the live
+    * marker) is a no-op — `foreachBatch` replays after failures/restarts,
+    * so idempotence is the sink's responsibility — and the first batch
+    * creates the table. Each append adds files (the old ones are shared
+    * by link, never rewritten), so a long-running stream accumulates
+    * small files: [[compactTail]] is the compactor.
+    * Callers that serve a catalog name re-point it after an append (see
+    * DedupIndex/VectorIndex maintenance), because the live directory
+    * changes. */
   def appendCommitted(name: String, rows: DataFrame, batchId: Long): Unit =
-    if (!tableExists(name)) {
-      checkNotNull(name, rows)
-      publish(name, rows, Some(batchId))
-    } else if (lastCommittedBatch(name).exists(_ >= batchId)) {
-      () // replayed batch — already in the table
-    } else if (txnSnapshot.nonEmpty) {
-      checkNotNull(name, rows)
-      checkBatchPk(name, rows)
-      checkBatchUnique(name, rows)
-      publish(name, table(name).unionByName(rows), Some(batchId))
-    } else {
-      checkNotNull(name, rows)
-      checkBatchPk(name, rows)
-      checkBatchUnique(name, rows)
-      val live = Paths.get(dataPath(name))
-      val version = nextVersion(name)
-      assertStageFresh(name, version)
-      val stage = Paths.get(dir(name), version)
-      rows.write.mode(SaveMode.Overwrite).parquet(stage.toString)
-      // share the live version's immutable data files by hard link —
-      // underscore/dot-prefixed entries (markers, _SUCCESS, checksums)
-      // are reader-invisible and never linked; this version writes its
-      // own marker
-      Option(live.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && !f.getName.startsWith("_") &&
-          !f.getName.startsWith("."))
-        .foreach(f => Files.createLink(
-          stage.resolve(f.getName), f.toPath))
-      Files.writeString(stage.resolve("_STREAM_BATCH"), batchId.toString)
-      maybeCrash("staged")
-      swapPointer(name, version)
-      maybeCrash("published")
-      sweep(name)
+    if (!lastCommittedBatch(name).exists(_ >= batchId))
+      append(name, rows, Some(batchId), TableCommands.bareCommit)
+
+  /** The body shared by [[insertInto]] and [[appendCommitted]]. */
+  private def append(name: String, rows: DataFrame, streamBatch: Option[Long],
+      commit: TableCommands.Commit): Unit = {
+    checkBatch(name, rows)
+    publish(name, streamBatch, commit) { stage =>
+      write(rows)(stage)
+      if (tableExists(name)) link(dataFiles(Paths.get(dataPath(name))), stage)
     }
+  }
 
   /** The micro-batch id committed with the live version, if this table has
     * ever been a streaming sink target. */
@@ -1149,7 +1084,7 @@ class TableCommands(spark: SparkSession, warehouse: String) {
     * projection. Distributed end-to-end — no driver-side row handling. */
   def update(name: String, cond: Column, sets: Map[String, Column],
       commit: TableCommands.Commit = TableCommands.bareCommit): Unit =
-    publish(name, updatePlan(name, cond, sets), commit = commit)
+    publish(name, commit = commit)(write(updatePlan(name, cond, sets)))
 
   /** The rewrite frame [[update]] would publish — shared with EXPLAIN
     * (reference `commands/ExplainCommand.java` covers DML too). */
@@ -1167,7 +1102,7 @@ class TableCommands(spark: SparkSession, warehouse: String) {
   /** DELETE FROM t WHERE <cond>: copy-on-write rewrite keeping survivors. */
   def delete(name: String, cond: Column,
       commit: TableCommands.Commit = TableCommands.bareCommit): Unit =
-    publish(name, deletePlan(name, cond), commit = commit)
+    publish(name, commit = commit)(write(deletePlan(name, cond)))
 
   /** The rewrite frame [[delete]] would publish — shared with EXPLAIN. */
   def deletePlan(name: String, cond: Column): DataFrame =
@@ -1210,7 +1145,7 @@ class TableCommands(spark: SparkSession, warehouse: String) {
     val result = mergePlan(name, srcRaw, tAlias, sAlias, cond, updateSets,
       matchedDelete, insert, matchedCond, insertCond)
     checkNotNull(name, result)
-    publish(name, result, commit = commit)
+    publish(name, commit = commit)(write(result))
   }
 
   /** The rewrite frame [[merge]] would publish — shared with EXPLAIN

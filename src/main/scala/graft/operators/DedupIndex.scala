@@ -101,8 +101,7 @@ object DedupIndex {
     // the delta only (O(delta) hash work; measured at x100: the
     // post-pipeline anti-join formulation re-hashed the whole corpus).
     // localCheckpoint, NOT persist: the delta plan reads the very band
-    // table it appends to (see VectorIndex.refresh — append-by-path
-    // recache would otherwise re-evaluate the anti join mid-write)
+    // version the append supersedes (see VectorIndex.refresh)
     val fresh = Dedup.bandsForCorpus(
       Dedup.corpusNear(s, d)
         .join(stored.select("doc_id").distinct(), Seq("doc_id"),

@@ -72,10 +72,10 @@ object Similarity {
     * it the broadcast struct array (k × ~530 B — a 64-dim long vector +
     * norms per centroid) stops being executor-trivial (256k ≈ 140 MB) and
     * assignment switches to the shuffled-agg form, which carries NO
-    * per-node structure proportional to k at all. `GRAFT_CENT_BROADCAST_CAP`
-    * overrides for experiments and for the threshold-switch parity spec. */
-  private[graft] val centBroadcastCap: Long =
-    sys.env.get("GRAFT_CENT_BROADCAST_CAP").map(_.toLong).getOrElse(262144L)
+    * per-node structure proportional to k at all. The assignment entry
+    * points take the cap as a `broadcastCap` parameter, which is how the
+    * threshold-switch parity spec crosses it. */
+  private[graft] val centBroadcastCap: Long = 262144L
 
   /** EXACT nearest-centroid assignment, map-side: the ~k centroid rows
     * collapse into ONE broadcast row (a sorted struct array) and each

@@ -218,12 +218,12 @@ object VectorIndex {
     // keeps working at any centroid count (round-13 fix for the measured
     // k ∝ n driver ceiling; the frozen form remains the streaming gates'
     // per-stream model freeze).
-    // localCheckpoint, NOT persist: the delta plan READS the table paths
-    // it is about to append to, and Spark recaches-by-path on write — a
-    // merely cached plan would be invalidated by the first append,
-    // recompute against the now-complete table, and silently append an
-    // EMPTY second delta. Truncating lineage to the materialized rows
-    // makes both appends consume the same frozen delta.
+    // localCheckpoint, NOT persist: the delta plan READS the table
+    // versions the two appends supersede (and their sweeps may delete),
+    // so a lazily re-evaluated delta could fail or, resolved against the
+    // new versions, come out EMPTY for the second append. Truncating
+    // lineage to the materialized rows makes both appends consume the
+    // same frozen delta.
     val enc = Similarity.routeAndEncodeJoined(missing,
       cmds.table(tableName("centroids")), cmds.table(tableName("codebook")))
       .localCheckpoint()

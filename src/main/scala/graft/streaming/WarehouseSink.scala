@@ -8,7 +8,7 @@ import graft.commands.TableCommands
 /** Structured Streaming → warehouse bridge: a stream lands in a
   * manifest-pointer table ([[TableCommands]]) one micro-batch at a time.
   *
-  * Default mode is EXACTLY-ONCE at O(batch) write cost: each micro-batch
+  * Every batch lands EXACTLY-ONCE at O(batch) write cost: each micro-batch
   * publishes a LINK-FORWARD version (`TableCommands.appendCommitted` —
   * the batch's files plus hard links to the live version's immutable
   * parquet files) whose `_STREAM_BATCH` marker commits atomically with
@@ -19,10 +19,6 @@ import graft.commands.TableCommands
   * marker forward and is also the small-file answer for long streams) —
   * the reference's `InsertCommand` semantics on a live stream, minus the
   * duplicates, at append cost rather than table-rewrite cost.
-  *
-  * `exactlyOnce = false` falls back to plain appends into the CURRENT
-  * version (at-least-once, no marker, no version churn): for consumers
-  * that dedup (d80/d90) or tolerate replays anyway.
   */
 object WarehouseSink {
 
@@ -31,8 +27,8 @@ object WarehouseSink {
     * the generic per-table sink claim for the stream's lifetime (see
     * [[VectorStreams.withSinkClaims]]) so OPTIMIZE/DML cannot race the
     * per-batch manifest commits. */
-  def start(df: DataFrame, cmds: TableCommands, table: String,
-      exactlyOnce: Boolean = true): StreamingQuery =
+  def start(df: DataFrame, cmds: TableCommands,
+      table: String): StreamingQuery =
     VectorStreams.withSinkClaims(cmds, df.sparkSession, s"sink:$table",
         Seq(table)) {
       df.writeStream
@@ -43,11 +39,7 @@ object WarehouseSink {
           // schema from (appends of empty batches to an existing table are
           // harmless no-ops — and need no marker: replaying one is idempotent
           // by construction)
-          if (!batch.isEmpty) {
-            if (exactlyOnce) cmds.appendCommitted(table, batch, batchId)
-            else if (cmds.tableExists(table)) cmds.insertInto(table, batch)
-            else cmds.createTable(table, batch)
-          }
+          if (!batch.isEmpty) cmds.appendCommitted(table, batch, batchId)
           ()
         }
         .start()

@@ -2530,6 +2530,34 @@ class EngineSqlSpec extends AnyFunSuite {
     }
   }
 
+  test("INSERT publishes a new version: a snapshot of the live version " +
+      "keeps its rows through an INSERT and a restart") {
+    val wh = Files.createTempDirectory("graft_insertpin_wh").toString
+    val e1 = new Engine(spark, d, wh)
+    try {
+      e1.sql("CREATE COLSTORE st AS SELECT n_nationkey AS id FROM " +
+        "nation WHERE n_nationkey < 4")
+      e1.sql("SNAPSHOT st VERSION AS OF 'v00001' AS st_pin")
+      e1.sql("INSERT INTO st VALUES (100), (101)")
+      val s2 = spark.newSession()
+      val e2 = new Engine(s2, d, wh)
+      assert(s2.table("st_pin").count() == 4L,
+        "the INSERT wrote into the pinned version")
+      assert(e2.sql("SELECT COUNT(*) FROM st").head.getLong(0) == 6L)
+      val versions = e2.sql("SHOW VERSIONS ON st").collect()
+        .map(_.getString(0)).toSeq
+      assert(versions == Seq("v00001", "v00002"),
+        s"SHOW VERSIONS after INSERT: $versions")
+      e2.sql("DROP SNAPSHOT st_pin")
+      e2.close()
+    } finally {
+      engine.sql("DROP TABLE IF EXISTS st")
+      spark.catalog.dropTempView("st_pin")
+      e1.close()
+    }
+  }
+
+
   test("SEARCH VECTORS ... DIVERSIFY ... OVER: the rerank pool width is " +
       "explicit — OVER at the default equals the default, OVER below " +
       "TOP is refused, a wider pool keeps the rank-1 relevance pick") {

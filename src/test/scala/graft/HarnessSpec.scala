@@ -31,6 +31,14 @@ class HarnessConfSpec extends AnyFunSuite {
     }
   }
 
+  test("normalizePlan masks run-order ids, so two runs' plans compare equal") {
+    val run1 = "*(3) Project [a#12, b#7L]\n+- ShuffleQueryStage 4, plan_id=91"
+    val run2 = "*(1) Project [a#40, b#2L]\n+- ShuffleQueryStage 2, plan_id=17"
+    assert(Bench.normalizePlan(run1) ==
+      "*(N) Project [a#, b#L]\n+- ShuffleQueryStage N, plan_id=")
+    assert(Bench.normalizePlan(run2) == Bench.normalizePlan(run1))
+  }
+
   test("sessionConfs: cleanCheckpoints on, partitions and advisory data-sized") {
     val sf001 = TestSpark.sfDir
     val sf01 = new java.io.File(sf001).getParent + "/sf0.01"

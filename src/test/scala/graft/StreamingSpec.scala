@@ -1801,7 +1801,7 @@ class StreamingSpec extends AnyFunSuite {
         cmds.lastCommittedBatch("rejected").isDefined)
       // a replayed batch is a no-op on an already-committed table
       val before = cmds.table("kept").count()
-      cmds.insertCommitted("kept",
+      cmds.appendCommitted("kept",
         Seq((1L, "one two three four")).toDF("doc_id", "text"),
         cmds.lastCommittedBatch("kept").get)
       assert(cmds.table("kept").count() == before, "replay duplicated rows")
@@ -1861,16 +1861,16 @@ class StreamingSpec extends AnyFunSuite {
     val cmds = new graft.commands.TableCommands(spark, wh)
 
     // unit-level: the sink body itself is idempotent per batch id
-    cmds.insertCommitted("eo", Seq((1L, "a"), (2L, "b")).toDF("id", "v"), 0L)
-    cmds.insertCommitted("eo", Seq((3L, "c")).toDF("id", "v"), 1L)
-    cmds.insertCommitted("eo", Seq((3L, "c")).toDF("id", "v"), 1L) // re-delivery
-    cmds.insertCommitted("eo", Seq((1L, "a"), (2L, "b")).toDF("id", "v"), 0L)
+    cmds.appendCommitted("eo", Seq((1L, "a"), (2L, "b")).toDF("id", "v"), 0L)
+    cmds.appendCommitted("eo", Seq((3L, "c")).toDF("id", "v"), 1L)
+    cmds.appendCommitted("eo", Seq((3L, "c")).toDF("id", "v"), 1L) // re-delivery
+    cmds.appendCommitted("eo", Seq((1L, "a"), (2L, "b")).toDF("id", "v"), 0L)
     assert(cmds.table("eo").count() == 3)
     assert(cmds.lastCommittedBatch("eo").contains(1L))
     // a compaction rewrite must NOT reset the replay cursor
     cmds.optimizeTable("eo", targetPartitions = 1)
     assert(cmds.lastCommittedBatch("eo").contains(1L))
-    cmds.insertCommitted("eo", Seq((9L, "z")).toDF("id", "v"), 1L) // still a replay
+    cmds.appendCommitted("eo", Seq((9L, "z")).toDF("id", "v"), 1L) // still a replay
     assert(cmds.table("eo").count() == 3)
 
     // end-to-end: a restarted query (fresh checkpoint, same source) replays

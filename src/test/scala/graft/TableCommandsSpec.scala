@@ -441,16 +441,18 @@ class TableCommandsSpec extends AnyFunSuite {
               rnd.nextLong(nextBatch))
             check(step, "append-replay")
           }
-        case 2 => // exactly-once COW insert, new batch id
+        case 2 => // plain versioned insert of new rows
           val rows = freshRows(1 + rnd.nextInt(3))
-          c.insertCommitted("t", rows.toDF("id"), nextBatch)
-          model ++= rows; nextBatch += 1
+          c.insertInto("t", rows.toDF("id"))
+          model ++= rows
           check(step, "insert-new")
-        case 3 => // replayed COW insert: no-op
-          if (nextBatch > 0) {
-            c.insertCommitted("t", freshRows(2).toDF("id"),
-              rnd.nextLong(nextBatch))
-            check(step, "insert-replay")
+        case 3 => // plain insert repeating present rows: no replay guard,
+                  // so the copies land
+          if (model.nonEmpty) {
+            val rows = Seq.fill(2)(model(rnd.nextInt(model.length)))
+            c.insertInto("t", rows.toDF("id"))
+            model ++= rows
+            check(step, "insert-repeat")
           }
         case 4 => // compaction: content-preserving rewrite
           c.optimizeTable("t", targetPartitions = 2)
@@ -569,7 +571,7 @@ class TableCommandsSpec extends AnyFunSuite {
     // pinned directory must survive every sweep, because a registered
     // SNAPSHOT view reads it directly
     c.setRetain("t", 1)
-    (1 to 4).foreach(i => c.insertCommitted("t", Seq(10 + i).toDF("id"), i.toLong))
+    (1 to 4).foreach(i => c.appendCommitted("t", Seq(10 + i).toDF("id"), i.toLong))
     assert(F.isDirectory(Paths.get(wh, "t", pinned)),
       "sweep deleted a pinned version")
     assert(spark.read.parquet(c.snapshotPath("t", pinned))
@@ -578,7 +580,7 @@ class TableCommandsSpec extends AnyFunSuite {
     // the pin is alias-keyed and durable: a NEW TableCommands over the
     // same warehouse (engine restart) still honors it
     val c2 = new TableCommands(spark, wh)
-    c2.insertCommitted("t", Seq(99).toDF("id"), 9L)
+    c2.appendCommitted("t", Seq(99).toDF("id"), 9L)
     assert(F.isDirectory(Paths.get(wh, "t", pinned)),
       "restarted engine swept a pinned version")
     assert(c2.pins("t") == Seq("train_run_7" -> pinned))
@@ -589,12 +591,12 @@ class TableCommandsSpec extends AnyFunSuite {
       F.readString(Paths.get(wh, "t", "PINS")) + "garbage-no-tab\n")
     assert(c2.pins("t") == Seq("train_run_7" -> pinned),
       "malformed pins line not skipped")
-    c2.insertCommitted("t", Seq(98).toDF("id"), 10L) // commits fine
+    c2.appendCommitted("t", Seq(98).toDF("id"), 10L) // commits fine
     assert(c2.table("t").as[Int].collect().contains(98))
     // unpin releases it: the next rewrite sweeps the directory
     assert(c2.unpinAlias("t", "train_run_7"))
     assert(!c2.unpinAlias("t", "train_run_7"), "double-unpin must report false")
-    c2.insertCommitted("t", Seq(100).toDF("id"), 11L)
+    c2.appendCommitted("t", Seq(100).toDF("id"), 11L)
     assert(!F.isDirectory(Paths.get(wh, "t", pinned)),
       "unpinned version not swept")
   }
