@@ -8,12 +8,25 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * (`client/ExclusiveClient.java:72-106`) hands each statement to
   * `server/NanoDBServer.doCommand(String)` (`server/NanoDBServer.java:69-74`),
   * which parses and executes it; every reference test is a SQL string
-  * (`sql/SqlTestCase.java:28-230`). [[Engine.sql]] is that surface on Spark:
-  * graft-specific storage DDL (`CREATE COLSTORE`, `LOAD`) routes to
-  * [[commands.TableCommands]]; every other statement — queries, persistent
-  * `CREATE VIEW`/`DROP VIEW`, `ANALYZE`, `EXPLAIN` — is delegated verbatim to
-  * Spark SQL, so the whole relational surface (SURVEY.md §2) is reachable
-  * from a string exactly as from the DataFrame API.
+  * (`sql/SqlTestCase.java:28-230`). [[Engine.sql]] is that surface on Spark.
+  * `route` tries three things in order:
+  *  - the engine verbs, one route per statement family: warehouse DDL and
+  *    DML (CREATE COLSTORE/TABLE, INSERT and LOAD into, UPDATE, DELETE,
+  *    MERGE, DROP TABLE, OPTIMIZE, transactions, VERIFY, RETAIN,
+  *    SNAPSHOT) through [[commands.TableCommands]], CREATE/DROP INDEX, the
+  *    corpus-index verbs (BUILD/DROP/REFRESH VECTOR|DEDUP INDEX), the
+  *    inventory verbs ([EXPLAIN|ANALYZE] RUN QUERY), the vector verbs
+  *    (SEARCH and DECONTAM VECTORS and their START ... streaming faces),
+  *    the ingest gates, and the engine's own SHOW, EXPLAIN and ANALYZE
+  *    forms;
+  *  - the malformed-head guard: a statement that opens with an
+  *    engine-only keyword but matched no engine form is an error, never a
+  *    fallthrough;
+  *  - the Spark fallthrough: every other statement — queries, persistent
+  *    `CREATE VIEW`/`DROP VIEW`, Spark's own DDL — goes to Spark SQL
+  *    (plain queries through `query`, which may serve them from a
+  *    bucketed index), so the whole relational surface (SURVEY.md §2) is
+  *    reachable from a string exactly as from the DataFrame API.
   *
   * Tables are registered in the session CATALOG (external Parquet tables in
   * the current database), not as temp views: the reference's
@@ -245,10 +258,16 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
     ()
   }
 
-  private def deregisterIngest(name: String): Unit =
+  /** Clear `name`'s durable registration and release the sink claims its
+    * `kind` holds: the fence and the registration share a lifetime. (A
+    * malformed registration's kind `?` owns no claim.) */
+  private def deregisterIngest(name: String, kind: String): Unit = {
     registeredIngests.filter(_._1 == name).foreach { case (_, _, _, f) =>
       java.nio.file.Files.deleteIfExists(f)
     }
+    ingestSinkTables(kind).foreach(t =>
+      if (cmds.sinkOwner(t).contains(s"ingest:$kind")) cmds.releaseSink(t))
+  }
 
   /** The durable claim file registered under `name`, if any — the gate's
     * heartbeat target. */
@@ -328,12 +347,6 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
       .map(_.trim).filter(_.nonEmpty).map(canonDir).toSet
   }
 
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
-    f.delete(); ()
-  }
-
   /** Refuse maintenance on the index tables an ingest of `kind` is
     * actively writing: REFRESH and OPTIMIZE publish new versions of the
     * same manifests the gate's appendCommitted commits into, and the
@@ -376,10 +389,7 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
 
   // a temp table surviving in the warehouse belongs to a DEAD session
   // (this engine hasn't created any yet) — reclaim before serving anything
-  cmds.temporaryTables.foreach { t =>
-    cmds.dropTable(t)
-    spark.sql(s"DROP TABLE IF EXISTS `$t`")
-  }
+  cmds.temporaryTables.foreach(dropWarehouseTable(_))
 
   // idempotent: external-table DDL is IF NOT EXISTS, functions re-register
   Graft.tableNames.filterNot(_ == "events").foreach { n =>
@@ -613,14 +623,17 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
   // against the corpus's eval slice before they are admitted to training
   private val decontamVectorsStmt =
     """(?is)\s*DECONTAM\s+VECTORS\s+USING\s+(\w+)(?:\s+THRESHOLD\s+(\d+(?:\.\d+)?))?\s*;?\s*""".r
-  // the ANN train/serve split: BUILD materializes the trained IVF-PQ
-  // artifacts as warehouse tables (the vector analog of CREATE INDEX's
-  // build-then-scan split — reference CreateIndexCommand.java feeding
-  // IndexScanNode.java); searches serve from them until DROP
-  private val buildVectorIndex =
-    """(?is)\s*BUILD\s+VECTOR\s+INDEX\s+ON\s+(\w+)(?:\s+USING\s+(\w+))?\s*;?\s*""".r
-  private val dropVectorIndex =
-    """(?is)\s*DROP\s+VECTOR\s+INDEX\s+ON\s+(\w+)\s*;?\s*""".r
+  // the corpus indexes' train/serve split: BUILD materializes the
+  // trained artifacts (IVF-PQ for vectors, LSH bands for documents) as
+  // warehouse tables (the analog of CREATE INDEX's build-then-scan split
+  // — reference CreateIndexCommand.java feeding IndexScanNode.java);
+  // searches and gates serve from them until DROP. REFRESH appends index
+  // rows for corpus entries the stored index does not cover yet
+  // (O(delta), models frozen — see VectorIndex.refresh /
+  // DedupIndex.refresh). USING <mode> belongs to BUILD VECTOR only; the
+  // route's guard sends any other USING to the malformed-head guard.
+  private val corpusIndexStmt =
+    """(?is)\s*(BUILD|DROP|REFRESH)\s+(VECTOR|DEDUP)\s+INDEX\s+ON\s+(\w+)(?:\s+USING\s+(\w+))?\s*;?\s*""".r
   // observability siblings of SHOW INDEXES for the trained index kinds:
   // provenance (corpus dir + training params) and coverage counts — the
   // numbers an operator checks before trusting a serve path
@@ -628,13 +641,6 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
     """(?is)\s*SHOW\s+VECTOR\s+INDEXES\s*;?\s*""".r
   private val showDedupIndexes =
     """(?is)\s*SHOW\s+DEDUP\s+INDEXES\s*;?\s*""".r
-  private val buildDedupIndex =
-    """(?is)\s*BUILD\s+DEDUP\s+INDEX\s+ON\s+(\w+)\s*;?\s*""".r
-  private val dropDedupIndex =
-    """(?is)\s*DROP\s+DEDUP\s+INDEX\s+ON\s+(\w+)\s*;?\s*""".r
-  // incremental maintenance: append index rows for corpus entries the
-  // stored index does not cover yet (O(delta), models frozen — see
-  // VectorIndex.refresh / DedupIndex.refresh for the contract)
   // the path-table REFRESH TABLE analog over SQL: after an EXTERNAL
   // writer appends into the corpus dir (bypassing the engine's manifest
   // tables), cached file listings must drop or every later read serves
@@ -642,10 +648,6 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
   // targets another corpus; default is this engine's own.
   private val refreshCorpus =
     """(?is)\s*REFRESH\s+CORPUS(?:\s+ON\s+'([^']+)')?\s*;?\s*""".r
-  private val refreshVectorIndex =
-    """(?is)\s*REFRESH\s+VECTOR\s+INDEX\s+ON\s+(\w+)\s*;?\s*""".r
-  private val refreshDedupIndex =
-    """(?is)\s*REFRESH\s+DEDUP\s+INDEX\s+ON\s+(\w+)\s*;?\s*""".r
   private val txnStmt =
     """(?is)\s*(BEGIN|START\s+TRANSACTION|COMMIT|ROLLBACK)\s*;?\s*""".r
   private val verifyStmt = """(?is)\s*VERIFY\s+(\w+)\s*;?\s*""".r
@@ -1065,29 +1067,124 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
     }
   }
 
+  /** One corpus index kind of the BUILD/DROP/REFRESH verbs: the corpus
+    * table it indexes and what that corpus carries, the ingest kind that
+    * appends into its tables, what REFRESH counts, the tables a streaming
+    * twin serves from, and the build (mode in, status suffix out), drop
+    * and refresh (rows appended) steps. */
+  private case class CorpusIndex(corpus: String, carries: String,
+      ingestKind: String, unit: String, served: Seq[String],
+      build: String => String, drop: () => Unit, refresh: () => Long)
+
+  private val corpusIndexes = Map(
+    "VECTOR" -> CorpusIndex("embeddings", "vectors", "VECTOR", "vectors",
+      Seq("assign", "codes", "centroids", "codebook")
+        .map(operators.VectorIndex.tableName),
+      mode => { operators.VectorIndex.build(spark, sfDir, cmds, mode)
+        s" ($mode)" },
+      () => operators.VectorIndex.drop(spark, cmds),
+      () => operators.VectorIndex.refresh(spark, sfDir, cmds)),
+    "DEDUP" -> CorpusIndex("documents", "text", "ADMIT", "documents",
+      Seq(operators.DedupIndex.tableName("bands")),
+      _ => { operators.DedupIndex.build(spark, sfDir, cmds); "" },
+      () => operators.DedupIndex.drop(spark, cmds),
+      () => operators.DedupIndex.refresh(spark, sfDir, cmds)))
+
+  /** A streaming `verb` over the stored `noun` (VECTOR|DEDUP) index needs
+    * its built tables. */
+  private def requireStoredIndex(verb: String, noun: String): Unit =
+    require(corpusIndexes(noun).served.forall(cmds.tableExists),
+      s"$verb needs the stored ${noun.toLowerCase(java.util.Locale.ROOT)} " +
+        s"index - run BUILD $noun INDEX first")
+
+  /** The inventory query a RUN QUERY verb names — exact name first, then
+    * case-insensitive — built over `dirOpt` (default: this engine's
+    * corpus). Returns the name and the frame. */
+  private def inventoryQuery(verb: String, quoted: String, bare: String,
+      dirOpt: String): (String, DataFrame) = {
+    val name = Option(quoted).getOrElse(bare)
+    val queries = SparkEntry.queries
+    val fn = queries.get(name)
+      .orElse(queries.collectFirst {
+        case (k, f) if k.equalsIgnoreCase(name) => f
+      })
+      .getOrElse(throw new IllegalArgumentException(
+        s"$verb: unknown query '$name' - SHOW QUERIES lists the inventory"))
+    (name, fn(spark, Option(dirOpt).getOrElse(sfDir)))
+  }
+
+  /** TOP k [DIVERSIFY λ [OVER n]] of SEARCH VECTORS and its streaming
+    * face: k, and for DIVERSIFY (λ in tenths, rerank-pool width). λ in
+    * tenths keeps the MMR greedy exact-integer (the s109/s110
+    * convention); a finer λ would need a wider integer unit, so the
+    * surface refuses it rather than silently rounding. The pool defaults
+    * to max(10, 3k). */
+  private def topDiversify(verb: String, kOpt: String, lamOpt: String,
+      overOpt: String): (Int, Option[(Int, Int)]) = {
+    val k = Option(kOpt).map(_.toInt).getOrElse(3)
+    if (k < 1) throw new IllegalArgumentException(
+      s"$verb: TOP must be >= 1; got $k")
+    (k, Option(lamOpt).map { l =>
+      val lam = l.toDouble
+      if (lam < 0 || lam > 1 ||
+          math.abs(lam * 10 - math.round(lam * 10)) > 1e-9)
+        throw new IllegalArgumentException(
+          s"$verb: DIVERSIFY lambda must be one of 0.0, 0.1, ..., 1.0; " +
+            s"got $l")
+      val shortK = Option(overOpt).map(_.toInt)
+        .getOrElse(math.max(10, 3 * k))
+      if (shortK < k) throw new IllegalArgumentException(
+        s"$verb: DIVERSIFY OVER $shortK cannot be narrower than TOP $k - " +
+          "the rerank pool must contain the answers")
+      (math.round(lam * 10).toInt, shortK)
+    })
+  }
+
+  /** THRESHOLD of DECONTAM VECTORS and its streaming face: a cosine. */
+  private def decontamThreshold(verb: String, thrOpt: String): Double = {
+    val thr = Option(thrOpt).map(_.toDouble).getOrElse(0.3)
+    if (thr > 1) throw new IllegalArgumentException(
+      s"$verb: THRESHOLD is a cosine, must be <= 1; got $thr")
+    thr
+  }
+
+  /** The USING input of SEARCH/DECONTAM VECTORS: a warehouse table
+    * (resolved case-insensitively like every DML route) or a session
+    * catalog table or view (incl. the corpus externals) carrying
+    * (`idCol`, embedding). */
+  private def vectorSource(verb: String, tbl: String,
+      idCol: String): DataFrame = {
+    val df = cmds.resolveTable(tbl) match {
+      case Some(t) => cmds.table(t)
+      case None =>
+        if (!spark.catalog.tableExists(tbl))
+          throw new IllegalArgumentException(
+            s"$verb: unknown table or view '$tbl'")
+        spark.table(tbl)
+    }
+    val low = df.columns.map(_.toLowerCase)
+    if (!low.contains(idCol) || !low.contains("embedding"))
+      throw new IllegalArgumentException(
+        s"$verb: '$tbl' must carry ($idCol, embedding) columns; " +
+          s"got (${df.columns.mkString(", ")})")
+    df
+  }
+
   private def route(stmt: String): DataFrame = stmt match {
     case createColstore(temp, name, path) =>
       // reference: CREATE COLSTORE/TABLE ... FROM <file> profiles the file
       // and builds the columnar store (commands/CreateColStoreCommand.java,
       // storage/FileAnalyzer.java); Parquet picks encodings natively
-      guardSystemTable(name, "CREATE")
-      // a sink claim on a NOT-yet-created table means a live stream is
-      // about to create it from its first batch — creating it out from
-      // under the twin would turn its appends into a two-writer race
-      requireNoSinkClaim(name, "CREATE")
-      cmds.createTable(name, readIngest(path, None))
-      finishCreate(name, temp != null)
-      status(s"created colstore table $name")
+      create("CREATE", name, temp != null, s"created colstore table $name")(
+        cmds.createTable(name, readIngest(path, None)))
     case createColstoreAs(temp, name, select) =>
       // engine-native CTAS: the result of any query becomes a MANIFEST
       // table (versioned dirs + pointer), so it gets UPDATE/DELETE/txn/
       // VERIFY/OPTIMIZE — a plain Spark CTAS (the fallthrough) would make
       // a catalog-managed table outside the storage engine
-      guardSystemTable(name, "CREATE")
-      requireNoSinkClaim(name, "CREATE") // see the FROM-file route
-      cmds.createTable(name, query(select))
-      finishCreate(name, temp != null)
-      status(s"created colstore table $name from query")
+      create("CREATE", name, temp != null,
+        s"created colstore table $name from query")(
+        cmds.createTable(name, query(select)))
     case createTableDdl(temp, ifNotExists, name, colsDdl)
         if balancedParens(colsDdl) =>
       // reference: the canonical CREATE TABLE declares columns+constraints
@@ -1096,13 +1193,9 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
       // lifecycle runs inside the storage engine from plain SQL
       if (ifNotExists != null && cmds.tableExists(name))
         status(s"table $name already exists")
-      else {
-        guardSystemTable(name, "CREATE")
-        requireNoSinkClaim(name, "CREATE") // see the FROM-file route
+      else create("CREATE", name, temp != null, s"created table $name") {
         val (schema, notNull, pk) = parseColumnDdl(colsDdl)
         cmds.createEmpty(name, schema, notNull, pk)
-        finishCreate(name, temp != null)
-        status(s"created table $name")
       }
     case insertStmt(q, tblRaw, colList, body) if isLocalDb(q) &&
         cmds.resolveTable(tblRaw).isDefined =>
@@ -1176,21 +1269,11 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
       // plan only — the query is PLANNED, never executed (EXPLAIN must
       // not pay a corpus scan). One row, one `plan` column, matching
       // EXPLAIN UPDATE's convention.
-      val name = Option(quoted).getOrElse(bare)
-      val dir = Option(dirOpt).getOrElse(sfDir)
-      SparkEntry.queries.get(name)
-        .orElse(SparkEntry.queries.collectFirst {
-          case (k, fn) if k.equalsIgnoreCase(name) => fn
-        }) match {
-        case Some(fn) =>
-          import spark.implicits._
-          Seq(fn(spark, dir).queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode
-              .fromString("formatted"))).toDF("plan")
-        case None => throw new IllegalArgumentException(
-          s"EXPLAIN RUN QUERY: unknown query '$name' - SHOW QUERIES " +
-            "lists the inventory")
-      }
+      val (_, df) = inventoryQuery("EXPLAIN RUN QUERY", quoted, bare, dirOpt)
+      import spark.implicits._
+      Seq(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+        .toDF("plan")
     case analyzeRunQueryStmt(quoted, bare, dirOpt) =>
       // EXECUTE the inventory query, then read the final adaptive plan's
       // operator metrics. Driving THIS DataFrame's QueryExecution (not a
@@ -1198,166 +1281,78 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
       // the walk must descend through AdaptiveSparkPlanExec and the
       // materialized QueryStageExec wrappers — `children` alone stops at
       // stage boundaries and would report an empty tree under AQE.
-      val name = Option(quoted).getOrElse(bare)
-      val dir = Option(dirOpt).getOrElse(sfDir)
-      SparkEntry.queries.get(name)
-        .orElse(SparkEntry.queries.collectFirst {
-          case (k, fn) if k.equalsIgnoreCase(name) => fn
-        }) match {
-        case Some(fn) =>
-          import spark.implicits._
-          import org.apache.spark.sql.execution.SparkPlan
-          import org.apache.spark.sql.execution.adaptive.{
-            AdaptiveSparkPlanExec, QueryStageExec}
-          val qe = fn(spark, dir).queryExecution
-          qe.toRdd.foreach(_ => ())
-          def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-            case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-            case q: QueryStageExec => walk(q.plan)
-            case other => other.children.flatMap(walk)
-          })
-          walk(qe.executedPlan).zipWithIndex.flatMap { case (node, i) =>
-            node.metrics.toSeq.map { case (_, m) =>
-              (i.toLong, node.nodeName, m.name.getOrElse("metric"), m.value)
-            }
-          }.toDF("node_id", "operator", "metric", "value")
-        case None => throw new IllegalArgumentException(
-          s"ANALYZE RUN QUERY: unknown query '$name' - SHOW QUERIES " +
-            "lists the inventory")
-      }
+      val (_, df) = inventoryQuery("ANALYZE RUN QUERY", quoted, bare, dirOpt)
+      import spark.implicits._
+      import org.apache.spark.sql.execution.SparkPlan
+      import org.apache.spark.sql.execution.adaptive.{
+        AdaptiveSparkPlanExec, QueryStageExec}
+      val qe = df.queryExecution
+      qe.toRdd.foreach(_ => ())
+      def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+        case q: QueryStageExec => walk(q.plan)
+        case other => other.children.flatMap(walk)
+      })
+      walk(qe.executedPlan).zipWithIndex.flatMap { case (node, i) =>
+        node.metrics.toSeq.map { case (_, m) =>
+          (i.toLong, node.nodeName, m.name.getOrElse("metric"), m.value)
+        }
+      }.toDF("node_id", "operator", "metric", "value")
     case runQueryStmt(quoted, bare, dirOpt, intoOpt) =>
-      val name = Option(quoted).getOrElse(bare)
-      val dir = Option(dirOpt).getOrElse(sfDir)
-      SparkEntry.queries.get(name)
-        .orElse(SparkEntry.queries.collectFirst {
-          case (k, fn) if k.equalsIgnoreCase(name) => fn
-        }) match {
-        case Some(fn) =>
-          val df = fn(spark, dir)
-          Option(intoOpt) match {
-            // INTO = the inventory's CTAS: land the verdict frame (dedup
-            // decisions, quality gates, …) as a managed warehouse table so
-            // downstream DML/MERGE/SEARCH reads a pinned snapshot instead
-            // of re-running the operator. Same createTable path as CREATE
-            // TABLE AS — reserved-name guard, versioned publish, atomic
-            // pointer swap — so a served index can never be clobbered.
-            case Some(tbl) =>
-              guardSystemTable(tbl, "RUN QUERY INTO")
-              requireNoSinkClaim(tbl, "RUN QUERY INTO")
-              cmds.createTable(tbl, df)
-              finishCreate(tbl, temporary = false)
-              status(s"created table $tbl from query $name")
-            case None => df
-          }
-        case None => throw new IllegalArgumentException(
-          s"RUN QUERY: unknown query '$name' - SHOW QUERIES lists the " +
-            "inventory")
+      val (name, df) = inventoryQuery("RUN QUERY", quoted, bare, dirOpt)
+      Option(intoOpt) match {
+        // INTO = the inventory's CTAS: land the verdict frame (dedup
+        // decisions, quality gates, …) as a managed warehouse table so
+        // downstream DML/MERGE/SEARCH reads a pinned snapshot instead of
+        // re-running the operator. Same createTable path as CREATE TABLE
+        // AS — reserved-name guard, versioned publish, atomic pointer
+        // swap — so a served index can never be clobbered.
+        case Some(tbl) =>
+          create("RUN QUERY INTO", tbl, temporary = false,
+            s"created table $tbl from query $name")(cmds.createTable(tbl, df))
+        case None => df
       }
     case showQueriesStmt() =>
       import spark.implicits._
       SparkEntry.queries.keys.toSeq.sorted.toDF("query")
     case searchVectorsStmt(tbl, kOpt, lamOpt, overOpt) =>
-      val k = Option(kOpt).map(_.toInt).getOrElse(3)
-      if (k < 1) throw new IllegalArgumentException(
-        s"SEARCH VECTORS: TOP must be >= 1; got $k")
-      // warehouse tables resolve case-insensitively like every DML route;
-      // catalog tables and views (incl. the corpus externals) fall through
-      // to the session catalog
-      val q = cmds.resolveTable(tbl) match {
-        case Some(t) => cmds.table(t)
-        case None =>
-          if (!spark.catalog.tableExists(tbl))
-            throw new IllegalArgumentException(
-              s"SEARCH VECTORS: unknown table or view '$tbl'")
-          spark.table(tbl)
-      }
-      val low = q.columns.map(_.toLowerCase)
-      if (!low.contains("q_id") || !low.contains("embedding"))
-        throw new IllegalArgumentException(
-          s"SEARCH VECTORS: '$tbl' must carry (q_id, embedding) columns; " +
-            s"got (${q.columns.mkString(", ")})")
-      Option(lamOpt) match {
+      val (k, mmr) = topDiversify("SEARCH VECTORS", kOpt, lamOpt, overOpt)
+      val q = vectorSource("SEARCH VECTORS", tbl, "q_id")
+      mmr match {
         case None => operators.Similarity.searchVectors(spark, sfDir, q, k)
-        case Some(l) =>
-          // λ in tenths keeps the greedy exact-integer (the s109/s110
-          // convention); a finer λ would need a wider integer unit, so
-          // the surface refuses it rather than silently rounding
-          val lam = l.toDouble
-          if (lam < 0 || lam > 1 ||
-              math.abs(lam * 10 - math.round(lam * 10)) > 1e-9)
-            throw new IllegalArgumentException(
-              s"SEARCH VECTORS: DIVERSIFY lambda must be one of 0.0, " +
-                s"0.1, ..., 1.0; got $l")
-          val shortK = Option(overOpt).map(_.toInt)
-            .getOrElse(math.max(10, 3 * k))
-          if (shortK < k) throw new IllegalArgumentException(
-            s"SEARCH VECTORS: DIVERSIFY OVER $shortK cannot be narrower " +
-              s"than TOP $k - the rerank pool must contain the answers")
+        case Some((lambdaTenths, shortK)) =>
           operators.Similarity.searchVectorsDiversified(spark, sfDir, q,
-            k = k, shortK = shortK,
-            lambdaTenths = math.round(lam * 10).toInt)
+            k = k, shortK = shortK, lambdaTenths = lambdaTenths)
       }
     case decontamVectorsStmt(tbl, thrOpt) =>
-      val thr = Option(thrOpt).map(_.toDouble).getOrElse(0.3)
-      if (thr > 1) throw new IllegalArgumentException(
-        s"DECONTAM VECTORS: THRESHOLD is a cosine, must be <= 1; got $thr")
-      val v = cmds.resolveTable(tbl) match {
-        case Some(t) => cmds.table(t)
-        case None =>
-          if (!spark.catalog.tableExists(tbl))
-            throw new IllegalArgumentException(
-              s"DECONTAM VECTORS: unknown table or view '$tbl'")
-          spark.table(tbl)
-      }
-      val lowv = v.columns.map(_.toLowerCase)
-      if (!lowv.contains("vec_id") || !lowv.contains("embedding"))
+      val thr = decontamThreshold("DECONTAM VECTORS", thrOpt)
+      operators.Similarity.decontamVectors(spark, sfDir,
+        vectorSource("DECONTAM VECTORS", tbl, "vec_id"), thr)
+    case corpusIndexStmt(verbRaw, nounRaw, tbl, modeRaw) if modeRaw == null ||
+        s"$verbRaw $nounRaw".equalsIgnoreCase("BUILD VECTOR") =>
+      val verb = s"$verbRaw $nounRaw INDEX".toUpperCase(java.util.Locale.ROOT)
+      val ix = corpusIndexes(nounRaw.toUpperCase(java.util.Locale.ROOT))
+      if (!tbl.equalsIgnoreCase(ix.corpus))
         throw new IllegalArgumentException(
-          s"DECONTAM VECTORS: '$tbl' must carry (vec_id, embedding) " +
-            s"columns; got (${v.columns.mkString(", ")})")
-      operators.Similarity.decontamVectors(spark, sfDir, v, thr)
-    case buildVectorIndex(tbl, modeRaw) =>
-      if (!tbl.equalsIgnoreCase("embeddings"))
-        throw new IllegalArgumentException(
-          s"BUILD VECTOR INDEX: only the embeddings corpus carries " +
-            s"vectors; got '$tbl'")
+          s"$verb: only the ${ix.corpus} corpus carries ${ix.carries}; " +
+            s"got '$tbl'")
       // USING EXACT (default) | USING COARSE — the opt-in two-level √k
       // assignment for corpora where k tracks n (recall-audited, not
       // bit-parity; see VectorIndex.build)
       val mode = Option(modeRaw).map(_.toLowerCase).getOrElse("exact")
       if (mode != "exact" && mode != "coarse")
         throw new IllegalArgumentException(
-          s"BUILD VECTOR INDEX: unknown mode '$modeRaw' (USING EXACT|COARSE)")
-      // same single-writer fence as REFRESH/OPTIMIZE: a BUILD republishes
-      // the very tables a running ingest is appending into
-      requireNoIngest("VECTOR", "BUILD VECTOR INDEX")
-      operators.VectorIndex.build(spark, sfDir, cmds, mode)
-      status(s"built vector index on $tbl ($mode)")
-    case dropVectorIndex(tbl) =>
-      if (!tbl.equalsIgnoreCase("embeddings"))
-        throw new IllegalArgumentException(
-          s"DROP VECTOR INDEX: only the embeddings corpus carries " +
-            s"vectors; got '$tbl'")
-      // a DROP under a running ingest deletes the manifests mid-append —
-      // the gate must be stopped first
-      requireNoIngest("VECTOR", "DROP VECTOR INDEX")
-      operators.VectorIndex.drop(spark, cmds)
-      status(s"dropped vector index on $tbl")
-    case buildDedupIndex(tbl) =>
-      if (!tbl.equalsIgnoreCase("documents"))
-        throw new IllegalArgumentException(
-          s"BUILD DEDUP INDEX: only the documents corpus carries " +
-            s"text; got '$tbl'")
-      requireNoIngest("ADMIT", "BUILD DEDUP INDEX")
-      operators.DedupIndex.build(spark, sfDir, cmds)
-      status(s"built dedup index on $tbl")
-    case dropDedupIndex(tbl) =>
-      if (!tbl.equalsIgnoreCase("documents"))
-        throw new IllegalArgumentException(
-          s"DROP DEDUP INDEX: only the documents corpus carries " +
-            s"text; got '$tbl'")
-      requireNoIngest("ADMIT", "DROP DEDUP INDEX")
-      operators.DedupIndex.drop(spark, cmds)
-      status(s"dropped dedup index on $tbl")
+          s"$verb: unknown mode '$modeRaw' (USING EXACT|COARSE)")
+      // single-writer fence: BUILD and REFRESH republish, and DROP
+      // deletes, the very tables a running ingest appends into
+      requireNoIngest(ix.ingestKind, verb)
+      val noun = nounRaw.toLowerCase(java.util.Locale.ROOT)
+      verbRaw.toUpperCase(java.util.Locale.ROOT) match {
+        case "BUILD" => status(s"built $noun index on $tbl${ix.build(mode)}")
+        case "DROP" => ix.drop(); status(s"dropped $noun index on $tbl")
+        case _ => status(s"refreshed $noun index on $tbl " +
+          s"(${ix.refresh()} ${ix.unit} appended)")
+      }
     case showVectorIndexes() =>
       import spark.implicits._
       val metaT = operators.VectorIndex.tableName("meta")
@@ -1391,35 +1386,15 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
       val dir = Option(dirOpt).getOrElse(sfDir)
       Graft.invalidate(spark, dir)
       status(s"refreshed corpus $dir")
-    case refreshVectorIndex(tbl) =>
-      if (!tbl.equalsIgnoreCase("embeddings"))
-        throw new IllegalArgumentException(
-          s"REFRESH VECTOR INDEX: only the embeddings corpus carries " +
-            s"vectors; got '$tbl'")
-      requireNoIngest("VECTOR", "REFRESH VECTOR INDEX")
-      val n = operators.VectorIndex.refresh(spark, sfDir, cmds)
-      status(s"refreshed vector index on $tbl ($n vectors appended)")
-    case refreshDedupIndex(tbl) =>
-      if (!tbl.equalsIgnoreCase("documents"))
-        throw new IllegalArgumentException(
-          s"REFRESH DEDUP INDEX: only the documents corpus carries " +
-            s"text; got '$tbl'")
-      requireNoIngest("ADMIT", "REFRESH DEDUP INDEX")
-      val n = operators.DedupIndex.refresh(spark, sfDir, cmds)
-      status(s"refreshed dedup index on $tbl ($n documents appended)")
     case explainDml(dml) =>
       // the rewrite frame is BUILT but never published — EXPLAIN must not
       // mutate. One row, one `plan` column, like Spark's own EXPLAIN.
       val planned = dml match {
         case updateStmt(q, tblRaw, rest) =>
           val tbl = localName(q, tblRaw, "EXPLAIN UPDATE")
-          val (sets, cond) = splitWhere(rest)
-          val setMap = splitTopLevel(sets).map { a =>
-            val Array(c, e) = a.split("=", 2)
-            c.trim -> org.apache.spark.sql.functions.expr(e.trim)
-          }.toMap
+          val (setMap, cond) = updateParts(rest)
           s"COW rewrite of $tbl (UPDATE)\n" +
-            cmds.explain(cmds.updatePlan(tbl, condExpr(cond), setMap))
+            cmds.explain(cmds.updatePlan(tbl, cond, setMap))
         case deleteStmt(q, tblRaw, cond) =>
           val tbl = localName(q, tblRaw, "EXPLAIN DELETE")
           s"COW rewrite of $tbl (DELETE)\n" +
@@ -1484,13 +1459,8 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
       // reference: UpdateCommand.java — Spark SQL cannot mutate plain
       // parquet tables, so UPDATE/DELETE route to the COW rewrite
       val tbl = localName(q, tblRaw, "UPDATE")
-      val (sets, cond) = splitWhere(rest)
-      val setMap = splitTopLevel(sets).map { a =>
-        val Array(c, e) = a.split("=", 2)
-        c.trim -> org.apache.spark.sql.functions.expr(e.trim)
-      }.toMap
-      cmds.update(tbl, condExpr(cond), setMap,
-        commitSection(dropRoutes = true))
+      val (setMap, cond) = updateParts(rest)
+      cmds.update(tbl, cond, setMap, commitSection(dropRoutes = true))
       status(s"updated $tbl")
     case deleteStmt(q, tblRaw, cond) =>
       val tbl = localName(q, tblRaw, "DELETE")
@@ -1530,9 +1500,7 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
       // gone, or a later CREATE COLSTORE of the same name would refuse.
       // (A genuinely foreign-qualified DROP falls through to Spark SQL,
       // which owns other catalogs/databases and errors clearly if absent.)
-      cmds.dropTable(tbl, ifExists != null)
-      spark.sql(s"DROP TABLE IF EXISTS `$tbl`")
-      dropIndexesOf(tbl)
+      dropWarehouseTable(tbl, ifExists != null)
       status(s"dropped $tbl")
     case exitStmt() =>
       // reference: ExitCommand.java — a session-control acknowledgement;
@@ -1744,16 +1712,9 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
       // per-TABLE sink claims (the generic fence OPTIMIZE/DML check):
       // idempotent for the deterministic per-kind owner, so resumes and
       // restarts re-claim transparently.
+      def unclaim(): Unit = if (existing.isEmpty) deregisterIngest(name, k)
       try ingestSinkTables(k).foreach(t => cmds.claimSink(t, s"ingest:$k"))
-      catch { case e: Throwable =>
-        if (existing.isEmpty) {
-          deregisterIngest(name)
-          ingestSinkTables(k).foreach(t =>
-            if (cmds.sinkOwner(t).contains(s"ingest:$k"))
-              cmds.releaseSink(t))
-        }
-        throw e
-      }
+      catch { case e: Throwable => unclaim(); throw e }
       // each sink also gets the default 5-version retain window unless
       // the operator chose one — the reader-vs-sweep grace the chaos
       // soak showed every continuously-appended table needs (BUILD
@@ -1785,10 +1746,7 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
       }
       val q = try {
         if (k == "ADMIT") {
-          require(cmds.tableExists(
-            operators.DedupIndex.tableName("bands")),
-            "START ADMIT INGEST needs the stored dedup index - run BUILD " +
-              "DEDUP INDEX first")
+          requireStoredIndex("START ADMIT INGEST", "DEDUP")
           val docs = spark.readStream
             .schema(StructType(Seq(StructField("doc_id", LongType),
               StructField("text", StringType))))
@@ -1798,10 +1756,7 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
             compactThresholdBytes = compactThresholdBytes,
             batchOffset = floor, heartbeat = beat)
         } else {
-          require(Seq("assign", "codes", "centroids", "codebook").forall(p =>
-            cmds.tableExists(operators.VectorIndex.tableName(p))),
-            "START VECTOR INGEST needs the stored vector index - run " +
-              "BUILD VECTOR INDEX first")
+          requireStoredIndex("START VECTOR INGEST", "VECTOR")
           val vecs = spark.readStream
             .schema(StructType(Seq(StructField("vec_id", LongType),
               StructField("embedding", ArrayType(FloatType)))))
@@ -1812,12 +1767,7 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
             batchOffset = floor, heartbeat = beat)
         }
       } catch { case e: Throwable =>
-        if (existing.isEmpty) {
-          deregisterIngest(name)
-          ingestSinkTables(k).foreach(t =>
-            if (cmds.sinkOwner(t).contains(s"ingest:$k"))
-              cmds.releaseSink(t))
-        }
+        unclaim()
         // retain windows THIS start defaulted roll back too — a refused
         // START must leave no RETAIN-only table dirs behind
         retainDefaulted.foreach(cmds.clearRetain)
@@ -1935,18 +1885,12 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
         val base = java.nio.file.Paths.get(s"$warehouse/_ingest_ckpt")
         Seq(base.resolve(kind.toLowerCase(java.util.Locale.ROOT)),
           base.resolve(gateName)).foreach { d =>
-          if (java.nio.file.Files.isDirectory(d)) rmTree(d.toFile)
+          if (java.nio.file.Files.isDirectory(d))
+            commands.TableCommands.rm(d.toFile)
           java.nio.file.Files.deleteIfExists(
             d.resolveSibling(d.getFileName.toString + ".src")); ()
         }
       }
-      // releasing the per-table sink claims accompanies every path that
-      // clears the kind's registration — the fence and the registration
-      // share a lifetime
-      def releaseSinks(kind: String): Unit =
-        ingestSinkTables(kind).foreach(t =>
-          if (cmds.sinkOwner(t).contains(s"ingest:$kind"))
-            cmds.releaseSink(t))
       ingests.get(name) match {
         case Some(q) =>
           val srcDir = registeredIngests.collectFirst {
@@ -1956,8 +1900,7 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
           ingests.remove(name)
           val kind = ingestKinds.remove(name)
           if (purge) kind.foreach(retireCheckpoint(_, name, srcDir))
-          deregisterIngest(name)
-          kind.foreach(releaseSinks)
+          deregisterIngest(name, kind.getOrElse("?"))
           status(s"stopped ingest $name" + (if (purge)
             " (checkpoint purged; source retired; rotation floor " +
               "recorded - the next START must watch a new source)" else ""))
@@ -1975,8 +1918,7 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
                   s"dead claim deliberately with STOP INGEST $name FORCE")
               if (purge && kind != "?")
                 retireCheckpoint(kind, name, srcDir)
-              deregisterIngest(name)
-              if (kind != "?") releaseSinks(kind)
+              deregisterIngest(name, kind)
               // an unparseable registration has NO recoverable kind: the
               // checkpoint and source pin cannot be located, so a PURGE
               // did NOT happen — say so instead of reporting a rotation
@@ -2018,28 +1960,9 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
     case startServeStmt(dir, tblRaw, kOpt, lamOpt, overOpt, aliasOpt) =>
       val sink = guardSystemTable(
         cmds.resolveTable(tblRaw).getOrElse(tblRaw), "START SERVE ... INTO")
-      val k = Option(kOpt).map(_.toInt).getOrElse(3)
-      require(k >= 1, s"START SERVE VECTORS: TOP must be >= 1; got $k")
-      // λ in tenths keeps the MMR greedy exact-integer — the same
-      // validation as batch SEARCH VECTORS ... DIVERSIFY
-      val mmr = Option(lamOpt).map { l =>
-        val lam = l.toDouble
-        require(lam >= 0 && lam <= 1 &&
-          math.abs(lam * 10 - math.round(lam * 10)) <= 1e-9,
-          "START SERVE VECTORS: DIVERSIFY lambda must be one of 0.0, " +
-            s"0.1, ..., 1.0; got $l")
-        val shortK = Option(overOpt).map(_.toInt)
-          .getOrElse(math.max(10, 3 * k))
-        require(shortK >= k,
-          s"START SERVE VECTORS: DIVERSIFY OVER $shortK cannot be " +
-            s"narrower than TOP $k - the rerank pool must contain the " +
-            "answers")
-        (math.round(lam * 10).toInt, shortK)
-      }
-      require(Seq("assign", "codes", "centroids", "codebook").forall(p =>
-        cmds.tableExists(operators.VectorIndex.tableName(p))),
-        "START SERVE VECTORS needs the stored vector index - run " +
-          "BUILD VECTOR INDEX first")
+      val (k, mmr) =
+        topDiversify("START SERVE VECTORS", kOpt, lamOpt, overOpt)
+      requireStoredIndex("START SERVE VECTORS", "VECTOR")
       val sName = startServeTwin(Option(aliasOpt), dir, sink,
         kind = if (mmr.isDefined) "SERVE_MMR" else "SERVE", idCol = "q_id",
         mk = (qs, beat, ckpt) => mmr match {
@@ -2054,10 +1977,7 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
       val sink = guardSystemTable(
         cmds.resolveTable(tblRaw).getOrElse(tblRaw),
         "START DECONTAM ... INTO")
-      val thr = Option(thrOpt).map(_.toDouble).getOrElse(0.3)
-      require(thr <= 1,
-        s"START DECONTAM VECTORS: THRESHOLD is a cosine, must be <= 1; " +
-          s"got $thr")
+      val thr = decontamThreshold("START DECONTAM VECTORS", thrOpt)
       val sName = startServeTwin(Option(aliasOpt), dir, sink,
         kind = "DECONTAM", idCol = "vec_id",
         mk = (vs, beat, ckpt) => streaming.VectorStreams.decontamGate(vs,
@@ -2068,7 +1988,8 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
       val purge = purgeOpt != null
       def purgeCkpt(sink: String): Unit = {
         val d = serveCkptDir(sink)
-        if (java.nio.file.Files.isDirectory(d)) rmTree(d.toFile)
+        if (java.nio.file.Files.isDirectory(d))
+          commands.TableCommands.rm(d.toFile)
         java.nio.file.Files.deleteIfExists(
           d.resolveSibling(d.getFileName.toString + ".src"))
         java.nio.file.Files.deleteIfExists(
@@ -2466,13 +2387,10 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
     def optCond(g: String): Option[Column] =
       Option(g).map(c => org.apache.spark.sql.functions.expr(c.trim))
     val upd = whenUpdate.findFirstMatchIn(whens)
+    // LHS may be alias-qualified (t.balance); the key is the column
     val sets = upd.map(m =>
-      splitTopLevel(m.group(2)).map { a =>
-        val Array(c, e) = a.split("=", 2)
-        // LHS may be alias-qualified (t.balance); the key is the column
-        stripQualifier(c.trim, tAlias, tbl) ->
-          org.apache.spark.sql.functions.expr(e.trim)
-      }.toMap).getOrElse(Map.empty[String, Column])
+      assignments(m.group(2))(stripQualifier(_, tAlias, tbl)))
+      .getOrElse(Map.empty[String, Column])
     val del = whenDelete.findFirstMatchIn(whens)
     val matchedDelete = del.isDefined
     require(!(matchedDelete && sets.nonEmpty),
@@ -2565,6 +2483,22 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
     out.toSeq
   }
 
+  /** `c = e, ...` (split on top-level commas) as column -> expression;
+    * `key` maps each left-hand side to its column name. */
+  private def assignments(sets: String)(
+      key: String => String): Map[String, Column] =
+    splitTopLevel(sets).map { a =>
+      val Array(c, e) = a.split("=", 2)
+      key(c.trim) -> org.apache.spark.sql.functions.expr(e.trim)
+    }.toMap
+
+  /** UPDATE's `SET` tail, shared with EXPLAIN UPDATE: the assignments and
+    * the WHERE condition (true when absent). */
+  private def updateParts(rest: String): (Map[String, Column], Column) = {
+    val (sets, cond) = splitWhere(rest)
+    (assignments(sets)(identity), condExpr(cond))
+  }
+
   /** Split "assignments [WHERE cond]" at the first TOP-LEVEL WHERE keyword
     * — a 'where' inside a SET string literal must not terminate the
     * assignment list. */
@@ -2579,16 +2513,6 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
       i += 1
     }
     (s.trim, null)
-  }
-
-  /** Shared tail of every CREATE route: catalog registration plus, for
-    * TEMPORARY, the durable marker + session registry. */
-  private def finishCreate(name: String, temporary: Boolean): Unit = {
-    registerTable(name)
-    if (temporary) {
-      cmds.markTemporary(name)
-      tempTables += name.toLowerCase; ()
-    }
   }
 
   /** VERIFY's cross-table audit of the vector index (reference analog:
@@ -2699,14 +2623,37 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
     heartbeatsByQuery.clear()
     try spark.streams.removeListener(heartbeatListener)
     catch { case _: Throwable => () }
-    tempTables.foreach { t =>
-      cmds.resolveTable(t).foreach { tbl =>
-        cmds.dropTable(tbl)
-        spark.sql(s"DROP TABLE IF EXISTS `$tbl`")
-        dropIndexesOf(tbl)
-      }
-    }
+    tempTables.foreach(t =>
+      cmds.resolveTable(t).foreach(dropWarehouseTable(_)))
     tempTables.clear()
+  }
+
+  /** Every CREATE route: the reserved-name guard, the sink fence (a sink
+    * claim on a NOT-yet-created table means a live stream is about to
+    * create it from its first batch — creating it out from under the
+    * twin would turn its appends into a two-writer race), `make`, then
+    * catalog registration plus, for TEMPORARY, the durable marker and
+    * the session registry. */
+  private def create(verb: String, name: String, temporary: Boolean,
+      done: String)(make: => Unit): DataFrame = {
+    guardSystemTable(name, verb)
+    requireNoSinkClaim(name, verb)
+    make
+    registerTable(name)
+    if (temporary) {
+      cmds.markTemporary(name)
+      tempTables += name.toLowerCase
+    }
+    status(done)
+  }
+
+  /** Drop a warehouse table: its manifest dirs, catalog entry and
+    * indexes. */
+  private def dropWarehouseTable(tbl: String, ifExists: Boolean = true)
+      : Unit = {
+    cmds.dropTable(tbl, ifExists)
+    spark.sql(s"DROP TABLE IF EXISTS `$tbl`")
+    dropIndexesOf(tbl)
   }
 
   private def registerTable(name: String): Unit =

@@ -23,8 +23,7 @@ object StreamMaint {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val k = args.lift(1).map(_.toInt).getOrElse(4)
-    val spark = Graft.session(master = "local[32]")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session(appName = "graft-streammaint", sfDir = sfDir)
     val wh = java.nio.file.Files.createTempDirectory("graft_sm_wh")
     val cmds = new commands.TableCommands(spark, wh.toString)
     def time[A](f: => A): Double = {

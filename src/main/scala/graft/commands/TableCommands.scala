@@ -369,7 +369,7 @@ class TableCommands(spark: SparkSession, warehouse: String) {
     Option(new java.io.File(dir(table)).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && !keep.contains(f.getName) &&
         !TableCommands.leased(f.toPath))
-      .foreach(rm)
+      .foreach(TableCommands.rm)
     atomicWrite(versionsLog(table),
       keep.sortBy(vnum).mkString("", "\n", "\n"))
   }
@@ -451,7 +451,7 @@ class TableCommands(spark: SparkSession, warehouse: String) {
     }
     Option(new java.io.File(warehouse).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && !snap.contains(f.getName))
-      .foreach(rm) // created inside the rolled-back txn
+      .foreach(TableCommands.rm) // created inside the rolled-back txn
   }
 
   /** VERIFY t — the reference's integrity check (`commands/VerifyCommand`,
@@ -695,11 +695,6 @@ class TableCommands(spark: SparkSession, warehouse: String) {
     true
   }
 
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-    f.delete(); ()
-  }
-
   /** CREATE TABLE t AS <df> (error if exists, like the reference without
     * IF NOT EXISTS). */
   def createTable(name: String, df: DataFrame,
@@ -845,7 +840,7 @@ class TableCommands(spark: SparkSession, warehouse: String) {
   def dropTable(name: String, ifExists: Boolean = true): Unit = {
     if (!tableExists(name) && !ifExists)
       throw new IllegalArgumentException(s"table $name does not exist")
-    rm(new java.io.File(dir(name)))
+    TableCommands.rm(new java.io.File(dir(name)))
   }
 
   def table(name: String): DataFrame = spark.read.parquet(dataPath(name))
@@ -1325,6 +1320,12 @@ object TableCommands {
     * commit section and repoints its catalog between the two. */
   type Commit = (String, () => Unit, () => Unit) => Unit
   val bareCommit: Commit = (_, swap, sweep) => { swap(); sweep() }
+
+  /** Delete `f` and, for a directory, everything under it. */
+  private[graft] def rm(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
+    f.delete(); ()
+  }
 
   /** Read leases: absolute version directory -> holder count. JVM-global,
     * like [[claimMonitors]], because several engines over one warehouse

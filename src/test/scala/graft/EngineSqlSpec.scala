@@ -1106,10 +1106,14 @@ class EngineSqlSpec extends AnyFunSuite {
     val wh = Files.createTempDirectory("graft_vidx_sql_wh").toString
     val e1 = new Engine(spark, d, wh)
     try {
-      // only the vector corpus is buildable
+      // only the vector corpus is buildable (or droppable)
       intercept[IllegalArgumentException] {
         e1.sql("BUILD VECTOR INDEX ON lineitem")
       }
+      assert(intercept[IllegalArgumentException] {
+        e1.sql("DROP VECTOR INDEX ON lineitem")
+      }.getMessage == "DROP VECTOR INDEX: only the embeddings corpus " +
+        "carries vectors; got 'lineitem'")
       assert(e1.sql("BUILD VECTOR INDEX ON embeddings")
         .head.getString(0).contains("built vector index"))
       // built: the same search serves from the stored artifacts
@@ -1162,6 +1166,10 @@ class EngineSqlSpec extends AnyFunSuite {
       intercept[IllegalArgumentException] {
         e1.sql("BUILD DEDUP INDEX ON lineitem")
       }
+      assert(intercept[IllegalArgumentException] {
+        e1.sql("DROP DEDUP INDEX ON lineitem")
+      }.getMessage == "DROP DEDUP INDEX: only the documents corpus " +
+        "carries text; got 'lineitem'")
       assert(e1.sql("BUILD DEDUP INDEX ON documents")
         .head.getString(0).contains("built dedup index"))
       // built: the gate reads the stored table, no signature pipeline,
@@ -2622,6 +2630,10 @@ class EngineSqlSpec extends AnyFunSuite {
       "START VECTOR INGEST FROM 'd' COMPACT EVERY x BATCHES",
       "BUILD VECTOR INDEX embeddings", // missing ON
       "REFRESH DEDUP INDEX documents", // missing ON
+      // USING <mode> belongs to BUILD VECTOR INDEX alone
+      "BUILD DEDUP INDEX ON documents USING exact",
+      "DROP VECTOR INDEX ON embeddings USING coarse",
+      "REFRESH VECTOR INDEX ON embeddings USING coarse",
       "DROP SNAPSHOT", // missing name
       "DROP INDEX", // missing name
       "SHOW INGESTS WHERE kind = 'admit'", // engine SHOWs take no clauses

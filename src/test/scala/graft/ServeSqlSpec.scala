@@ -21,6 +21,12 @@ class ServeSqlSpec extends AnyFunSuite {
   private def freshWh(tag: String): String =
     Files.createTempDirectory(s"graft_${tag}_wh").toString
 
+  /** No `_serve_ckpt` entry (checkpoint dir, source or kind pin) for
+    * `sink` in warehouse `wh`. */
+  private def noServeCkpt(wh: String, sink: String): Boolean =
+    Seq("", ".src", ".kind").forall(ext =>
+      !Files.exists(java.nio.file.Paths.get(wh, "_serve_ckpt", sink + ext)))
+
   /** Poll until `body` stops throwing IllegalStateException (async claim
     * release lands on the listener bus) — bounded, never silent. */
   private def eventuallyAllowed[T](maxMs: Long = 15000)(body: => T): T = {
@@ -139,7 +145,8 @@ class ServeSqlSpec extends AnyFunSuite {
   test("START SERVE VECTORS ... DIVERSIFY: streamed MMR answers match " +
       "batch SEARCH VECTORS ... DIVERSIFY; OVER below TOP and a " +
       "duplicate name are refused") {
-    val e = new Engine(spark, d, freshWh("servemmr"))
+    val wh = freshWh("servemmr")
+    val e = new Engine(spark, d, wh)
     try {
       e.sql("BUILD VECTOR INDEX ON embeddings")
       val watch = Files.createTempDirectory("graft_servemmr_src").toString
@@ -147,9 +154,15 @@ class ServeSqlSpec extends AnyFunSuite {
         .filter(col("vec_id") < 2)
         .selectExpr("vec_id AS q_id", "embedding")
         .write.mode("append").parquet(watch)
-      intercept[IllegalArgumentException](e.sql(
-        s"START SERVE VECTORS FROM '$watch' INTO mmr_sql TOP 3 " +
-          "DIVERSIFY 0.7 OVER 2"))
+      // the stream face validates TOP/DIVERSIFY/OVER like the batch
+      // statement, before any checkpoint state is written
+      Seq("TOP 3 DIVERSIFY 0.7 OVER 2", "TOP 0", "DIVERSIFY 0.75")
+        .foreach { clause =>
+          intercept[IllegalArgumentException](e.sql(
+            s"START SERVE VECTORS FROM '$watch' INTO mmr_sql $clause"))
+          assert(noServeCkpt(wh, "mmr_sql"),
+            s"'$clause' left checkpoint state")
+        }
       e.sql(s"START SERVE VECTORS FROM '$watch' INTO mmr_sql TOP 3 " +
         "DIVERSIFY 0.7 OVER 10 AS mmr_twin")
       intercept[IllegalArgumentException](e.sql(
@@ -190,6 +203,10 @@ class ServeSqlSpec extends AnyFunSuite {
         .filter(col("vec_id") % 23 =!= 0)
         .selectExpr("vec_id", "embedding")
         .write.mode("append").parquet(watch)
+      intercept[IllegalArgumentException](e.sql(
+        s"START DECONTAM VECTORS FROM '$watch' INTO contam_sql " +
+          "THRESHOLD 1.5"))
+      assert(noServeCkpt(wh, "contam_sql"))
       e.sql(s"START DECONTAM VECTORS FROM '$watch' INTO contam_sql")
       e.serveQuery("contam_sql").get.processAllAvailable()
       def norm(rows: Array[org.apache.spark.sql.Row]) = rows.map { r =>
