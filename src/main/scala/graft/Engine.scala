@@ -1560,6 +1560,9 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
         }.getOrElse(64L << 20)
       require(!ingests.contains(name),
         s"ingest $name already running - STOP INGEST $name first")
+      // refused before anything is claimed, pinned or created
+      if (k == "VECTOR")
+        operators.VectorIndex.requireExactRouting(cmds, "START VECTOR INGEST")
       // one gate per kind: both gates of a kind would write the SAME
       // warehouse tables (verdicts + band index / assign + codes), and
       // the manifest layout is single-writer per table. The claim is the

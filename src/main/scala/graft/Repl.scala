@@ -16,8 +16,7 @@ object Repl {
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"))
     val wh = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("graft_repl_wh").toString)
-    val spark = Graft.session(
-      master = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
+    val spark = Graft.session(appName = "graft-repl", sfDir = sfDir)
     val engine = new Engine(spark, sfDir, wh)
     run(engine, new java.io.InputStreamReader(System.in), System.out)
     spark.stop()

@@ -845,6 +845,25 @@ class TableCommands(spark: SparkSession, warehouse: String) {
 
   def table(name: String): DataFrame = spark.read.parquet(dataPath(name))
 
+  /** `rows` projected and cast column by column to stored table `name`'s
+    * exact schema — kernels carry wider integer types than the stored
+    * artifacts, and a type-mixed parquet directory would poison every
+    * later read. */
+  def conform(name: String, rows: DataFrame): DataFrame =
+    rows.select(table(name).schema.fields.toSeq.map(f =>
+      col(f.name).cast(f.dataType)): _*)
+
+  /** Re-point the session-catalog entries of `names` at their live
+    * versions, in `s` and in the default session. Both, because
+    * `foreachBatch` hands a CLONED session: a registration there updates
+    * the shared external catalog's metadata but not the default
+    * session's relation cache — [[TableCommands.healCatalog]] then sees
+    * metadata == CURRENT and skips, leaving the default session scanning
+    * version files the sweep already deleted. */
+  def repoint(s: SparkSession, names: Seq[String]): Unit =
+    (s +: SparkSession.getDefaultSession.filter(_ ne s).toSeq).foreach(ss =>
+      names.foreach(n => TableCommands.registerCatalog(ss, n, dataPath(n))))
+
   /** INSERT INTO t VALUES / SELECT and LOAD — append semantics, as a
     * new version: the stage holds the new rows plus hard links to the live
     * version's data files, so the write costs O(new data) and the live

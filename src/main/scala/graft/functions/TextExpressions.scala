@@ -423,7 +423,7 @@ case class NearestCentroidL(first: Expression, second: Expression,
   * `book: array<struct<m: int, bm: array<struct<cid: bigint, cq: array<bigint>>>>>`,
   * the `cid` of the sub-centroid minimizing exact squared L2 to the
   * sub-vector `vq[m*sub, m*sub+sub)` (dist ASC, cid ASC on ties — the
-  * `array_min(struct(dist, cid))` selection `pqEnc`/`routeAndEncode*` in
+  * `array_min(struct(dist, cid))` selection `pqEnc`/`routeAndEncode` in
   * [[graft.operators.Similarity]] specify, over the same
   * cid-sorted-within-m book layout). Returns one winning cid per book
   * element, in book (= m) order — the `codes` array every scale path

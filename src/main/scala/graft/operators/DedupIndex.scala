@@ -108,16 +108,9 @@ object DedupIndex {
           "left_anti"))
       .localCheckpoint()
     val n = fresh.select("doc_id").distinct().count()
-    if (n > 0) {
-      val tgt = stored.schema
-      cmds.insertInto(tableName("bands"), fresh.select(
-        tgt.fields.toSeq.map(f =>
-          org.apache.spark.sql.functions.col(f.name).cast(f.dataType)): _*))
-    }
-    parts.foreach { p =>
-      val nm = tableName(p)
-      TableCommands.registerCatalog(s, nm, cmds.dataPath(nm))
-    }
+    val bands = tableName("bands")
+    if (n > 0) cmds.insertInto(bands, cmds.conform(bands, fresh))
+    cmds.repoint(s, parts.map(tableName))
     n
   }
 

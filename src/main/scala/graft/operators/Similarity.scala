@@ -80,9 +80,8 @@ object Similarity {
   /** EXACT nearest-centroid assignment, map-side: the ~k centroid rows
     * collapse into ONE broadcast row (a sorted struct array) and each
     * vector takes `array_max` over struct(sim, -clabel, clabel) — the
-    * same argmax selection [[routeAndEncodeFrozen]]'s streaming route
-    * uses, and by construction the rank-1 row of a (sim DESC, clabel ASC)
-    * window: max sim wins, sim ties take the smaller clabel, and the
+    * selection the s93 oracle specifies, and by construction the rank-1
+    * row of a (sim DESC, clabel ASC) window: max sim wins, sim ties take the smaller clabel, and the
     * third field (the original-typed clabel, carried so `cluster` keeps
     * its input type) can never decide because (sim, -clabel) is already
     * unique per centroid. Every payload column on `vecs` passes through
@@ -2042,8 +2041,8 @@ object Similarity {
   }
 
   /** The one-row (m-sorted, cid-sorted-within-m) codebook frame every
-    * encode path broadcasts — the layout [[freezeIndex]] replicates and
-    * the fused `pq_codes_l` kernel iterates. */
+    * encode path broadcasts — the layout the fused `pq_codes_l` kernel
+    * iterates. */
   private def bookOneRow(trained: DataFrame): DataFrame =
     trained.groupBy("m")
       .agg(sort_array(collect_list(struct(col("cid"), col("cq"))))
@@ -2108,9 +2107,15 @@ object Similarity {
           x => round(x * 1000000).cast("long")).as("qv"))
       .withColumn("qn", dotl(col("qv"), col("qv")))
 
-  /** The four trained artifacts [[VectorIndex.build]] materializes —
-    * exactly the frames the inline search paths would compute, so stored
-    * and inline answers are bit-identical. */
+  /** True when embedding `v` holds a null, NaN or ±Infinity component —
+    * the values the 1e-6 quantization would silently turn into a
+    * valid-looking vector (NaN casts to 0L, Infinity saturates). Shared
+    * by the corpus audit, the caller-facing kernel guards and the stream
+    * twins' poison split. */
+  private[graft] def nonFiniteComponent(v: Column): Column =
+    exists(v, x =>
+      x.isNull || isnan(x) || abs(x) === lit(Float.PositiveInfinity))
+
   /** Train-side corpus audit for the STORED-index paths (BUILD/REFRESH):
     * a null/non-finite/ragged embedding in the corpus would silently
     * poison the trained artifacts — kmeans sums absorb NaN, the
@@ -2128,8 +2133,7 @@ object Similarity {
       .select(col("vec_id"), col("embedding"))
       .filter(col("vec_id").isNull || col("embedding").isNull ||
         size(col("embedding")) =!= dim ||
-        exists(col("embedding"), x => x.isNull || isnan(x) ||
-          abs(x) === lit(Float.PositiveInfinity)))
+        nonFiniteComponent(col("embedding")))
       .limit(1).collect()
     require(bad.isEmpty,
       s"corpus $d carries a null/non-finite/ragged embedding (vec_id " +
@@ -2138,6 +2142,9 @@ object Similarity {
         "code; clean the corpus before BUILD/REFRESH")
   }
 
+  /** The four trained artifacts [[VectorIndex.build]] materializes —
+    * exactly the frames the inline search paths would compute, so stored
+    * and inline answers are bit-identical. */
   private[graft] def indexArtifacts(s: SparkSession, d: String,
       mode: String = "exact",
       broadcastCap: Long = centBroadcastCap): Seq[(String, DataFrame)] = {
@@ -2434,8 +2441,7 @@ object Similarity {
       // non-finite guard BEFORE quantization — see searchVectors: a
       // NaN component casts to 0L and an Infinity saturates, so a
       // malformed candidate would otherwise audit as a VALID vector
-      when(exists(col("embedding"), x => x.isNull || isnan(x) ||
-          abs(x) === lit(Float.PositiveInfinity)),
+      when(nonFiniteComponent(col("embedding")),
         raise_error(concat(
           lit("decontamVectors: non-finite or null component in " +
             "candidate embedding (vec_id "),
@@ -2459,114 +2465,28 @@ object Similarity {
       .select(col("vec_id"), col("cluster"), col("eval_id"), col("sim"))
   }
 
-  /** Frozen index artifacts for the streaming ingest path: the coarse
-    * centroids and PQ codebook collected driver-side ONCE at stream start
-    * (both are k-bounded model frames, never corpus-sized) and baked into
-    * the streaming plan as literals — the freeze pattern every DocStreams
-    * twin uses for its model artifact. */
-  final case class FrozenCent(clabel: Long, cqa: Seq[Long], ncq: Long)
-  final case class FrozenBookC(cid: Long, cq: Seq[Long])
-  final case class FrozenBookM(m: Int, bm: Seq[FrozenBookC])
-
-  /** `typedlit(...)` backs its literal with GenericArrayData, whose
-    * element reads BOX on every access. The frozen-route kernel reads 64
-    * longs per (vector × centroid) candidate, and against a 10k-centroid
-    * model that boxing measured 604 s for one 500k-vector ingest batch
-    * (×1000 StreamMaint) — the arithmetic itself is ~2 s. One
-    * UnsafeProjection pass at PLAN BUILD converts the literal's value to
-    * UnsafeArrayData (primitive reads, identical content), after which
-    * the fused kernel runs at build-path speed. */
-  private def unsafeLit[T: scala.reflect.runtime.universe.TypeTag](
-      v: Seq[T]): Column = {
-    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow, ScalaReflection}
-    import org.apache.spark.sql.catalyst.expressions.{Literal, UnsafeProjection}
-    val dt = ScalaReflection.schemaFor[Seq[T]].dataType
-    val cat = CatalystTypeConverters.createToCatalystConverter(dt)(v)
-    val proj = UnsafeProjection.create(Array(dt))
-    val row = proj(InternalRow(cat))
-    org.apache.spark.sql.graftbridge.Bridge.column(
-      Literal(row.getArray(0).copy(), dt))
-  }
-
-  private[graft] def freezeIndex(centroids: DataFrame, codebook: DataFrame)
-      : (Seq[FrozenCent], Seq[FrozenBookM]) = {
-    val cents = centroids
-      .select(col("clabel").cast("long"), col("cqa"),
-        col("ncq").cast("long"))
-      .collect()
-      .map(r => FrozenCent(r.getLong(0), r.getSeq[Long](1), r.getLong(2)))
-      .sortBy(_.clabel).toSeq
-    val book = codebook
-      .select(col("m").cast("int"), col("cid").cast("long"), col("cq"))
-      .collect()
-      .map(r => (r.getInt(0), FrozenBookC(r.getLong(1), r.getSeq[Long](2))))
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (m, g) => FrozenBookM(m, g.map(_._2).sortBy(_.cid)) }
-    (cents, book)
-  }
-
-  /** Map-side coarse-route + PQ-encode of arriving vectors against a
-    * frozen index — the streaming ingest (growing-segment) path. The
-    * argmax-over-struct route reproduces `ivfAssignment`'s window ordering
-    * (sim DESC, clabel ASC ⟺ max (sim, -clabel)), and the per-subspace
-    * `array_min(struct(dist, cid))` is `pqEnc`'s own selection, over the
-    * SAME cid-sorted-within-m, m-sorted book layout `freezeIndex`
-    * replicates — so ingest rows are bit-identical to what BUILD would
-    * have written (proven by the StreamingSpec parity test). Stateless:
-    * no state store, any throughput. */
-  private[graft] def routeAndEncodeFrozen(vecs: DataFrame,
-      cents: Seq[FrozenCent], book: Seq[FrozenBookM]): DataFrame = {
-    val cl = unsafeLit(cents)
-    val bl = unsafeLit(book)
-    vecs
-      .select(col("vec_id"),
-        transform(col("embedding"),
-          x => round(x.cast("double") * 1000000).cast("long")).as("vq"))
-      .withColumn("nq", dotl(col("vq"), col("vq")))
-      // route via the fused codegen argmax (NearestCentroidL) — the
-      // FrozenCent literal IS the kernel's input shape, and the old
-      // array_max(transform(...)) form paid the interpreted
-      // higher-order path per (vector × centroid) candidate: ~1.1 ms
-      // per vector at k=1000 (SCALE.md round 12's gate row) was almost
-      // entirely that interpreter, and k ∝ n made it grow with the
-      // index. Selection unchanged: max sim, ties to the smaller
-      // clabel — ingest rows stay bit-identical to BUILD's.
-      .withColumn("cluster",
-        GraftFunctions.nearest_centroid_l(col("vq"), col("nq"), cl))
-      // encode via the fused codegen kernel too (same selection as
-      // pqEnc's array_min(struct(dist, cid)) over the same book layout
-      // — FunctionsSpec pins the equivalence; the interpreted form was
-      // the ingest batch's residual hot spot after the route was fused)
-      .select(col("vec_id"), col("cluster"),
-        GraftFunctions.pq_codes_l(col("vq"), bl, pqSub).as("codes"))
-  }
-
-  /** The JOIN-form twin of [[routeAndEncodeFrozen]]: identical rows
-    * (coarse route + PQ codes — the parity spec pins them), computed
-    * against the stored centroid and codebook TABLES as join build sides
-    * instead of a driver-collected typedlit. Nothing here is proportional
-    * to k on the driver or in the plan: the centroid side broadcasts as
-    * one row while k is under [[centBroadcastCap]] and degrades to the
-    * shuffled-agg argmax when not; the M×k codebook is 64 rows, always
-    * broadcast. [[VectorIndex.refresh]] routes deltas through this form —
-    * index MAINTENANCE now has no per-node ceiling however large k grows.
-    * The streaming gates keep the frozen-literal form (they freeze the
-    * model once at stream start into every micro-batch plan, and their
-    * models are k-bounded by the gate contract). */
-  private[graft] def routeAndEncodeJoined(vecs: DataFrame,
+  /** Coarse route + PQ encode of arriving vectors against an index's
+    * centroid and codebook frames — the one kernel behind REFRESH's
+    * delta, the streaming VECTOR gate and `VectorStreams.routeAndEncode`.
+    * Rows are bit-identical to BUILD's assign/codes for the same vectors
+    * (the parity spec pins both join forms). The centroid side broadcasts
+    * as one row while k is under [[centBroadcastCap]] and the argmax
+    * carries `vq` through to the encode; past the cap, the shuffled-agg
+    * argmax keeps no per-node structure ∝ k and joins `vq` back. The M×k
+    * codebook is 64 rows, always broadcast. On a streaming `vecs` with
+    * static model frames the broadcast form is stream–static joins only:
+    * no state store. */
+  private[graft] def routeAndEncode(vecs: DataFrame,
       cents: DataFrame, codebook: DataFrame,
       broadcastCap: Long = centBroadcastCap): DataFrame = {
     val vq = vecs.select(col("vec_id"),
       transform(col("embedding"),
         x => round(x.cast("double") * 1000000).cast("long")).as("vq"))
-    val slim = (
-      if (cents.count() <= broadcastCap)
-        assignArgmaxBroadcast(vq, cents)
-      else assignArgmaxShuffled(vq, cents, Seq.empty)
-      ).select(col("vec_id"), col("cluster").cast("long").as("cluster"))
-    slim.join(vq, "vec_id")
-      .crossJoin(broadcast(bookOneRow(codebook)))
-      .select(col("vec_id"), col("cluster"),
+    val routed =
+      if (cents.count() <= broadcastCap) assignArgmaxBroadcast(vq, cents)
+      else assignArgmaxShuffled(vq, cents, Seq.empty).join(vq, "vec_id")
+    routed.crossJoin(broadcast(bookOneRow(codebook)))
+      .select(col("vec_id"), col("cluster").cast("long").as("cluster"),
         GraftFunctions.pq_codes_l(col("vq"), col("book"), pqSub).as("codes"))
   }
 
@@ -2687,8 +2607,7 @@ object Similarity {
           // would otherwise quantize to a VALID-looking vector and serve
           // confidently wrong neighbors — the same silent failure mode
           // as a short slice, so the same in-plan raise
-          .when(exists(col("embedding"), x => x.isNull || isnan(x) ||
-              abs(x) === lit(Float.PositiveInfinity)),
+          .when(nonFiniteComponent(col("embedding")),
             raise_error(concat(
               lit("searchVectors: non-finite or null component in " +
                 "query embedding (q_id "),

@@ -478,7 +478,7 @@ object TextAnalysis {
     * ties) are frozen, so the collected map is provably bounded by
     * k × |classes| regardless of corpus vocabulary — at open-web scale
     * the vocabulary is 10⁸⁺ terms and an uncapped freeze would OOM the
-    * driver (the k-bounded discipline of `Similarity.freezeIndex`).
+    * driver (the k-bounded discipline of `VectorStreams.freeze`).
     * Evicted terms fall to the class's unseen-word default `dm` =
     * log(1/(n_tok+v)) — the model's own OOV floor, which every seen
     * term's likelihood strictly exceeds, so eviction only DAMPENS a

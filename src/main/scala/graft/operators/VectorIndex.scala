@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 import graft.commands.TableCommands
 
@@ -146,23 +145,19 @@ object VectorIndex {
     * this session's catalog (the Engine calls this at construction, like
     * its index-routing pre-seed). */
   def reregister(s: SparkSession, cmds: TableCommands): Unit =
-    if (parts.forall(p => cmds.tableExists(tableName(p))))
-      parts.foreach { p =>
-        val n = tableName(p)
-        TableCommands.registerCatalog(s, n, cmds.dataPath(n))
-      }
+    if (parts.forall(p => cmds.tableExists(tableName(p)))) repoint(s, cmds)
 
   /** Incremental maintenance (`REFRESH VECTOR INDEX`): vectors present in
     * the corpus but absent from the stored assignment are routed and
-    * PQ-encoded against the FROZEN stored model (coarse centroids + PQ
-    * codebook collected once — both k-bounded) and appended to the
-    * `assign`/`codes` tables. The quantizers are deliberately NOT
+    * PQ-encoded against the FROZEN stored model (the coarse centroid
+    * and PQ codebook tables, read as join build sides) and appended to
+    * the `assign`/`codes` tables. The quantizers are deliberately NOT
     * retrained — that is the production index-maintenance contract
     * (Lucene/FAISS growing segments): appends are O(delta) map work, model
     * drift is what the s105 health card audits, and a drifted index is
     * rebuilt wholesale via BUILD. Appended rows are bit-identical to what
     * BUILD would have written for the same vectors (the
-    * `routeAndEncodeFrozen` parity the streaming ingest spec proves), so
+    * [[Similarity.routeAndEncode]] parity Round13GuardsSpec proves), so
     * refresh-then-search ≡ build-then-search for any vector the model
     * routes identically.
     *
@@ -193,14 +188,7 @@ object VectorIndex {
       meta(0).getInt(3) == pqIters,
       "vector index was built for a different corpus or parameter set - " +
         "rebuild with BUILD VECTOR INDEX")
-    // a coarse-built index refuses incremental maintenance: the delta
-    // route below is EXACT nearest-centroid, and appending exact rows
-    // into a coarse assignment silently mixes policies — the recall
-    // audit would report a blended number that describes neither
-    require(buildMode(meta(0)) == "exact",
-      "vector index was built USING COARSE - REFRESH would mix exact " +
-        "delta routing into a coarse assignment; rebuild wholesale with " +
-        "BUILD VECTOR INDEX ON embeddings USING COARSE")
+    requireExactRouting(cmds, "REFRESH")
     // the delta rows feed the frozen encode exactly like BUILD's — the
     // same train-side audit applies (an external writer may have
     // appended garbage to the corpus since the build)
@@ -212,19 +200,16 @@ object VectorIndex {
     val missing = graft.Graft.tableParallel(s, d, "embeddings")
       .select("vec_id", "embedding")
       .join(covered, Seq("vec_id"), "left_anti")
-    // JOIN-form route+encode against the stored centroid/codebook tables
-    // (bit-identical rows to the frozen-literal form — parity spec): no
-    // driver collect, no typedlit ∝ k baked into the plan, so refresh
-    // keeps working at any centroid count (round-13 fix for the measured
-    // k ∝ n driver ceiling; the frozen form remains the streaming gates'
-    // per-stream model freeze).
+    // route+encode against the stored centroid/codebook tables — the one
+    // kernel the VECTOR gate also runs: no driver collect, so refresh
+    // keeps working at any centroid count.
     // localCheckpoint, NOT persist: the delta plan READS the table
     // versions the two appends supersede (and their sweeps may delete),
     // so a lazily re-evaluated delta could fail or, resolved against the
     // new versions, come out EMPTY for the second append. Truncating
     // lineage to the materialized rows makes both appends consume the
     // same frozen delta.
-    val enc = Similarity.routeAndEncodeJoined(missing,
+    val enc = Similarity.routeAndEncode(missing,
       cmds.table(tableName("centroids")), cmds.table(tableName("codebook")))
       .localCheckpoint()
     val n = enc.count()
@@ -232,12 +217,11 @@ object VectorIndex {
       // codes FIRST: a crash after it leaves an assign-missing straggler,
       // which the next refresh's intersection delta re-covers; each side
       // appends only what IT is missing (idempotent under stragglers)
-      insertConformed(cmds, tableName("codes"),
-        enc.select(col("vec_id"), col("codes"))
-          .join(codes.select("vec_id"), Seq("vec_id"), "left_anti"))
-      insertConformed(cmds, tableName("assign"),
-        enc.select(col("vec_id"), col("cluster"))
-          .join(assign.select("vec_id"), Seq("vec_id"), "left_anti"))
+      Seq("codes" -> codes, "assign" -> assign).foreach { case (p, live) =>
+        val t = tableName(p)
+        cmds.insertInto(t, cmds.conform(t,
+          enc.join(live.select("vec_id"), Seq("vec_id"), "left_anti")))
+      }
     }
     repoint(s, cmds)
     // parity audit: the two coverage tables must agree row-for-row after
@@ -250,25 +234,28 @@ object VectorIndex {
     n
   }
 
-  /** Append `rows` cast column-by-column to the stored table's exact
-    * schema — the frozen-model kernel carries wider integer types than the
-    * build artifacts, and a type-mixed parquet directory would poison
-    * every later read. */
-  private def insertConformed(cmds: TableCommands, n: String,
-      rows: DataFrame): Unit = {
-    val tgt = cmds.table(n).schema
-    cmds.insertInto(n,
-      rows.select(tgt.fields.toSeq.map(f => col(f.name).cast(f.dataType)): _*))
-  }
-
-  /** Drop + recreate the session-catalog entries against the CURRENT
-    * manifest version of every part (a DELETE/OPTIMIZE on a stored part
-    * version-bumps the manifest and strands a location-pinned entry). */
+  /** Re-point every part's session-catalog entry at its CURRENT
+    * manifest version, in `s` and the default session
+    * ([[TableCommands.repoint]]): an append, DELETE or OPTIMIZE on a
+    * stored part version-bumps the manifest and strands a location-pinned
+    * entry. */
   private[graft] def repoint(s: SparkSession, cmds: TableCommands): Unit =
-    parts.foreach { p =>
-      val n = tableName(p)
-      TableCommands.registerCatalog(s, n, cmds.dataPath(n))
-    }
+    cmds.repoint(s, parts.map(tableName))
+
+  /** Exact delta routing (REFRESH, the VECTOR ingest gate) appends only
+    * into an exact-built index: exact rows mixed into a coarse assignment
+    * silently blend policies, and the recall audit would report a number
+    * that describes neither. No stored meta is no refusal — the callers'
+    * stored-index checks own that message. */
+  private[graft] def requireExactRouting(cmds: TableCommands,
+      verb: String): Unit = {
+    val meta = tableName("meta")
+    require(!cmds.tableExists(meta) ||
+      cmds.table(meta).collect().forall(buildMode(_) == "exact"),
+      s"vector index was built USING COARSE - $verb would mix exact " +
+        "delta routing into a coarse assignment; rebuild wholesale with " +
+        "BUILD VECTOR INDEX ON embeddings USING COARSE")
+  }
 
   /** The stored index for corpus dir `d`, iff complete and provenance-
     * matching. The meta read is one 1-row parquet file on the driver —

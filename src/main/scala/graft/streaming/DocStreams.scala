@@ -539,14 +539,8 @@ object DocStreams {
           if (cmds.tableExists(verdictTable))
             cmds.compactTail(verdictTable, compactThresholdBytes)
           if (cmds.tableExists(bandTable) &&
-              cmds.compactTail(bandTable, compactThresholdBytes)) {
-            graft.commands.TableCommands.registerCatalog(
-              batch.sparkSession, bandTable, cmds.dataPath(bandTable))
-            org.apache.spark.sql.SparkSession.getDefaultSession
-              .filter(_ ne batch.sparkSession)
-              .foreach(s => graft.commands.TableCommands.registerCatalog(
-                s, bandTable, cmds.dataPath(bandTable)))
-          }
+              cmds.compactTail(bandTable, compactThresholdBytes))
+            cmds.repoint(batch.sparkSession, Seq(bandTable))
         }
         heartbeat()
       }
@@ -605,11 +599,9 @@ object DocStreams {
           col("matched_batch").isNull).as("admitted"))
       .localCheckpoint()
     cmds.appendCommitted(verdictTable, verdicts, batchId)
-    val tgt = cmds.table(bandTable).schema
-    val freshBands = bands
+    val freshBands = cmds.conform(bandTable, bands
       .join(verdicts.filter(col("admitted")).select("doc_id"),
-        Seq("doc_id"), "left_semi")
-      .select(tgt.fields.toSeq.map(f => col(f.name).cast(f.dataType)): _*)
+        Seq("doc_id"), "left_semi"))
     // the band append is UNCONDITIONAL — an all-rejected batch appends an
     // empty frame whose only effect is advancing the marker. That keeps
     // the pair invariant machine-checkable: verdicts marker == bands
@@ -620,17 +612,8 @@ object DocStreams {
     // the same O(batch) commit the verdict log already pays.
     cmds.appendCommitted(bandTable, freshBands, batchId)
     // the append published a NEW version dir: re-point the catalog
-    // entry the batch gate's served probe reads — in BOTH sessions,
-    // because foreachBatch hands a CLONED SparkSession whose
-    // registration updates the shared metadata but not the driver
-    // session's relation cache (see VectorStreams.ingestBatch)
-    graft.commands.TableCommands.registerCatalog(
-      batch.sparkSession, bandTable, cmds.dataPath(bandTable))
-    org.apache.spark.sql.SparkSession.getDefaultSession
-      .filter(_ ne batch.sparkSession)
-      .foreach(s => graft.commands.TableCommands.registerCatalog(
-        s, bandTable, cmds.dataPath(bandTable)))
-    ()
+    // entry the batch gate's served probe reads, in both sessions
+    cmds.repoint(batch.sparkSession, Seq(bandTable))
   }
 
   /** Streaming perplexity bucketing — the live twin of batch

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.commands.TableCommands
@@ -17,17 +17,25 @@ import graft.operators.{Similarity, VectorIndex}
   *
   * Possible statelessly because both model artifacts are k-bounded: the
   * coarse centroids and the PQ codebook freeze driver-side at stream start
-  * ([[Similarity.freezeIndex]]) and ride the plan as literals, so each
-  * arriving vector is one map-side argmax + 8 subspace argmins — no state
-  * store, no shuffle, any throughput.
+  * ([[freeze]]) into static frames, and each arriving vector runs
+  * REFRESH's own kernel ([[Similarity.routeAndEncode]]) against them —
+  * stream–static broadcast joins, one map-side argmax + 8 subspace
+  * argmins, no state store, any throughput.
   */
 object VectorStreams {
 
-  /** Collect the frozen model artifacts from served index frames (or any
-    * centroids/codebook pair with the build schema). */
+  /** Freeze the model artifacts of served index frames (or any
+    * centroids/codebook pair with the build schema): each frame's k rows
+    * are collected once and held on the driver as a local relation, so
+    * every micro-batch routes against the model as it stood at stream
+    * start (a later BUILD cannot shift a running stream's routing), and
+    * an executor loss cannot lose it. */
   def freeze(centroids: DataFrame, codebook: DataFrame)
-      : (Seq[Similarity.FrozenCent], Seq[Similarity.FrozenBookM]) =
-    Similarity.freezeIndex(centroids, codebook)
+      : (DataFrame, DataFrame) = {
+    def local(df: DataFrame): DataFrame = df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(df.collect(): _*), df.schema)
+    (local(centroids), local(codebook))
+  }
 
   /** Split a (id, embedding) micro-batch into (clean, poison): null id,
     * null embedding, dimension ≠ `dim`, or a non-finite/null COMPONENT
@@ -46,12 +54,11 @@ object VectorStreams {
     * absorbs the nulls SQL's three-valued OR would otherwise keep). */
   private def splitPoison(batch: DataFrame, idCol: String, dim: Int)
       : (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.functions.{abs, col, exists, isnan, lit, size, when}
+    import org.apache.spark.sql.functions.{col, size, when}
     val typed = batch.select(idCol, "embedding")
-    val nonFinite = exists(col("embedding"), x => x.isNull || isnan(x) ||
-      abs(x) === lit(Float.PositiveInfinity))
     val poisonCond = col(idCol).isNull || col("embedding").isNull ||
-      size(col("embedding")) =!= dim || nonFinite
+      size(col("embedding")) =!= dim ||
+      Similarity.nonFiniteComponent(col("embedding"))
     (typed.filter(!poisonCond),
       typed.filter(poisonCond).select(col(idCol),
         size(col("embedding")).as("n_dims"),
@@ -72,7 +79,7 @@ object VectorStreams {
     * OPTIMIZE/DML racing the twin's per-batch manifest commits — see
     * TableCommands.claimSink. */
   private[streaming] def withSinkClaims(cmds: TableCommands,
-      ss: org.apache.spark.sql.SparkSession, owner: String,
+      ss: SparkSession, owner: String,
       tables: Seq[String])(start: => StreamingQuery): StreamingQuery = {
     // claim first, remember each acquisition's NONCE: releases below go
     // through releaseSinkIfRun, so if a SUCCESSOR twin (same owner tag)
@@ -169,7 +176,7 @@ object VectorStreams {
     * so the retry is exactly-once by construction. A second failure
     * propagates (a genuine fault must kill the stream visibly, never
     * loop). */
-  private def retryOnceOnStaleRead(ss: org.apache.spark.sql.SparkSession)(
+  private def retryOnceOnStaleRead(ss: SparkSession)(
       body: => Unit): Unit =
     try body catch { case e: Throwable if staleRead(e) =>
       // re-planning alone is NOT enough: foreachBatch hands each twin
@@ -209,22 +216,21 @@ object VectorStreams {
   /** The corpus embedding dimension — one head-row read at stream START
     * (k-bounded driver read, the freeze convention), pinned for the
     * stream's lifetime like every other frozen artifact. */
-  private def corpusDim(s: org.apache.spark.sql.SparkSession,
-      d: String): Int = {
+  private def corpusDim(s: SparkSession, d: String): Int = {
     import org.apache.spark.sql.functions.{col, size}
     s.read.parquet(s"$d/embeddings.parquet")
       .select(size(col("embedding"))).head.getInt(0)
   }
 
-  /** Route + PQ-encode each arriving vector against the frozen index.
-    * Output rows (vec_id, cluster, codes) are bit-identical to what BUILD
-    * would have written for the same vectors — the parity spec proves it
-    * against the stored assign/codes tables. Identical code path for
-    * batch (`spark.read`) and stream (`spark.readStream`). */
-  def routeAndEncode(vecs: DataFrame,
-      cents: Seq[Similarity.FrozenCent],
-      book: Seq[Similarity.FrozenBookM]): DataFrame =
-    Similarity.routeAndEncodeFrozen(vecs, cents, book)
+  /** Route + PQ-encode each arriving vector against the frozen index
+    * with REFRESH's kernel ([[Similarity.routeAndEncode]]). Output rows
+    * (vec_id, cluster, codes) are bit-identical to what BUILD would have
+    * written for the same vectors — the parity spec proves it against the
+    * stored assign/codes tables. Identical code path for batch
+    * (`spark.read`) and stream (`spark.readStream`). */
+  def routeAndEncode(vecs: DataFrame, cents: DataFrame,
+      book: DataFrame): DataFrame =
+    Similarity.routeAndEncode(vecs, cents, book)
 
   /** SELF-MAINTAINING vector ingest — [[routeAndEncode]] closed into the
     * stored index, the vector twin of `DocStreams.admitAndIndex`: each
@@ -250,13 +256,15 @@ object VectorStreams {
     * append-only key — upstream contract, as for every ingest twin);
     * within-batch duplicates are collapsed defensively. After each
     * append the live version directories change, so every catalog entry
-    * is re-pointed (`VectorIndex.repoint`). */
+    * is re-pointed (`VectorIndex.repoint`). A coarse-built index is
+    * refused, as REFRESH refuses it ([[VectorIndex.requireExactRouting]]). */
   def ingest(vecStream: DataFrame, cmds: TableCommands,
       checkpoint: Option[String] = None,
       compactEvery: Int = 0,
       compactThresholdBytes: Long = 64L << 20,
       batchOffset: Long = 0L,
       heartbeat: () => Unit = () => ()): StreamingQuery = {
+    VectorIndex.requireExactRouting(cmds, "VECTOR INGEST")
     val (cents, book) = freeze(
       cmds.table(VectorIndex.tableName("centroids")),
       cmds.table(VectorIndex.tableName("codebook")))
@@ -282,12 +290,7 @@ object VectorStreams {
             compactThresholdBytes)
           val c2 = cmds.compactTail(VectorIndex.tableName("assign"),
             compactThresholdBytes)
-          if (c1 || c2) {
-            VectorIndex.repoint(batch.sparkSession, cmds)
-            org.apache.spark.sql.SparkSession.getDefaultSession
-              .filter(_ ne batch.sparkSession)
-              .foreach(VectorIndex.repoint(_, cmds))
-          }
+          if (c1 || c2) VectorIndex.repoint(batch.sparkSession, cmds)
         }
         heartbeat()
       }
@@ -297,10 +300,9 @@ object VectorStreams {
   /** One micro-batch of [[ingest]] — public so the replay/crash contract
     * is directly testable (call twice with one batchId). */
   def ingestBatch(batch: DataFrame, cmds: TableCommands,
-      cents: Seq[Similarity.FrozenCent],
-      book: Seq[Similarity.FrozenBookM], batchId: Long): Unit = {
+      cents: DataFrame, book: DataFrame, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, size}
     require(Seq("assign", "codes").forall(p =>
       cmds.tableExists(VectorIndex.tableName(p))),
       "ingest maintains a stored vector index - run BUILD VECTOR INDEX " +
@@ -318,7 +320,8 @@ object VectorStreams {
     // rejects append runs FIRST: if it crashes, nothing of the batch
     // committed and the replay is a full clean rerun; codes/assign keep
     // their crash convention untouched.
-    val dim = cents.headOption.map(_.cqa.length).getOrElse(0)
+    val dim = cents.select(size(col("cqa"))).take(1).headOption
+      .map(_.getInt(0)).getOrElse(0)
     val (clean, poison) = splitPoison(batch, "vec_id", dim)
     if (!poison.isEmpty)
       cmds.appendCommitted("vector_ingest_rejects", poison, batchId)
@@ -349,46 +352,48 @@ object VectorStreams {
       .groupBy(col("vec_id"))
       .agg(min(struct(col("embedding"))).as("__s"))
       .select(col("vec_id"), col("__s.embedding").as("embedding"))
-    val enc = Similarity.routeAndEncodeFrozen(deduped, cents, book)
+    val enc = Similarity.routeAndEncode(deduped, cents, book)
       .localCheckpoint()
-    def conformed(part: String, cols: Seq[String]): DataFrame = {
-      val tgt = cmds.table(VectorIndex.tableName(part)).schema
-      enc.select(cols.map(col): _*)
-        .select(tgt.fields.toSeq.map(f =>
-          col(f.name).cast(f.dataType)): _*)
-    }
-    cmds.appendCommitted(VectorIndex.tableName("codes"),
-      conformed("codes", Seq("vec_id", "codes")), batchId)
-    cmds.appendCommitted(VectorIndex.tableName("assign"),
-      conformed("assign", Seq("vec_id", "cluster")), batchId)
-    // repoint BOTH sessions: foreachBatch hands a CLONED SparkSession, and
-    // a relocation registered there updates the SHARED external catalog's
-    // metadata but not the driver session's relation cache — healCatalog
-    // then sees metadata == CURRENT and (correctly) skips, leaving the
-    // driver session scanning version files the sweep already deleted
+    Seq("codes", "assign").map(VectorIndex.tableName).foreach(t =>
+      cmds.appendCommitted(t, cmds.conform(t, enc), batchId))
     VectorIndex.repoint(batch.sparkSession, cmds)
-    org.apache.spark.sql.SparkSession.getDefaultSession
-      .filter(_ ne batch.sparkSession)
-      .foreach(VectorIndex.repoint(_, cmds))
   }
 
-  /** Streaming query SERVING — the fourth leg of the lifecycle: a live
-    * stream of (q_id, embedding) query vectors is answered one
-    * micro-batch at a time by the batch two-tier kernel
-    * ([[Similarity.searchVectors]] — stored-index ADC tier + fresh-delta
-    * brute force) and landed EXACTLY-ONCE in a warehouse results table
-    * (`appendCommitted`: the answer files and their batch marker commit
-    * in one pointer rename at O(batch) cost — a serving log grows
-    * without bound, so the COW-rewrite commit would get linearly slower
-    * per batch — and a crash-replayed batch is recognized and skipped:
-    * an online serving log must not double-answer). Each
-    * micro-batch plans exactly the batch plan (queries broadcast, one
-    * ADC chain + one coverage anti-join), so streamed answers are
-    * bit-identical to batch answers for the same query set — the parity
-    * spec proves it. Scale shape: per-batch cost is the serve kernel's
-    * (query-bounded broadcasts against the immutable index tables);
-    * nothing accumulates in the stream — no state store, any query
-    * rate that the per-batch serve latency sustains. */
+  /** The one driver behind the answer twins: each (id, embedding)
+    * micro-batch splits its poison rows into `<table>_rejects` (a
+    * malformed input costs its caller an absent answer plus a visible
+    * reject row, never the stream: the kernels' raises are right for a
+    * one-shot SQL call but would poison-pill-loop a checkpointed stream)
+    * and lands `answer(session, clean)` in `table`, both EXACTLY-ONCE via
+    * `appendCommitted`, under the twin's sink claims (owner
+    * `<kind>:<table>`). Empty sides are skipped: creating a table from
+    * one would publish a schema-less version. */
+  private def answerTwin(stream: DataFrame, d: String, cmds: TableCommands,
+      table: String, kind: String, idCol: String,
+      checkpoint: Option[String], heartbeat: () => Unit)(
+      answer: (SparkSession, DataFrame) => DataFrame): StreamingQuery = {
+    val dim = corpusDim(stream.sparkSession, d)
+    withSinkClaims(cmds, stream.sparkSession, s"$kind:$table",
+        Seq(table, s"${table}_rejects")) {
+      val w = stream.writeStream.outputMode("append")
+      checkpoint.foreach(c => w.option("checkpointLocation", c))
+      w
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          heartbeat()
+          retryOnceOnStaleRead(batch.sparkSession) {
+            val (clean, poison) = splitPoison(batch, idCol, dim)
+            if (!poison.isEmpty)
+              cmds.appendCommitted(s"${table}_rejects", poison, batchId)
+            if (!clean.isEmpty)
+              cmds.appendCommitted(table, answer(batch.sparkSession, clean),
+                batchId)
+          }
+          ()
+        }
+        .start()
+    }
+  }
+
   /** Streaming SEMANTIC-DECONTAMINATION gate — d103's ingest twin: each
     * arriving (vec_id, embedding) micro-batch is checked against the
     * corpus's eval slice by the batch kernel
@@ -408,65 +413,33 @@ object VectorStreams {
   def decontamGate(vecStream: DataFrame, d: String, cmds: TableCommands,
       table: String, thr: Double = 0.3,
       checkpoint: Option[String] = None,
-      heartbeat: () => Unit = () => ()): StreamingQuery = {
-    val dim = corpusDim(vecStream.sparkSession, d)
-    withSinkClaims(cmds, vecStream.sparkSession, s"decontam:$table",
-        Seq(table, s"${table}_rejects")) {
-      val w = vecStream.writeStream.outputMode("append")
-      checkpoint.foreach(c => w.option("checkpointLocation", c))
-      w
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          heartbeat()
-          // poison candidates quarantine into <table>_rejects instead of
-          // raising: the kernel's dimension raise is right for a one-shot
-          // SQL call but would poison-pill-loop a checkpointed stream
-          retryOnceOnStaleRead(batch.sparkSession) {
-            val (clean, poison) = splitPoison(batch, "vec_id", dim)
-            if (!poison.isEmpty)
-              cmds.appendCommitted(s"${table}_rejects", poison, batchId)
-            if (!clean.isEmpty)
-              cmds.appendCommitted(table,
-                Similarity.decontamVectors(batch.sparkSession, d, clean,
-                  thr),
-                batchId)
-          }
-          ()
-        }
-        .start()
-    }
-  }
+      heartbeat: () => Unit = () => ()): StreamingQuery =
+    answerTwin(vecStream, d, cmds, table, "decontam", "vec_id", checkpoint,
+      heartbeat)(Similarity.decontamVectors(_, d, _, thr))
 
+  /** Streaming query SERVING — the fourth leg of the lifecycle: a live
+    * stream of (q_id, embedding) query vectors is answered one
+    * micro-batch at a time by the batch two-tier kernel
+    * ([[Similarity.searchVectors]] — stored-index ADC tier + fresh-delta
+    * brute force) and landed EXACTLY-ONCE in a warehouse results table
+    * (`appendCommitted`: the answer files and their batch marker commit
+    * in one pointer rename at O(batch) cost — a serving log grows
+    * without bound, so the COW-rewrite commit would get linearly slower
+    * per batch — and a crash-replayed batch is recognized and skipped:
+    * an online serving log must not double-answer). Each
+    * micro-batch plans exactly the batch plan (queries broadcast, one
+    * ADC chain + one coverage anti-join), so streamed answers are
+    * bit-identical to batch answers for the same query set — the parity
+    * spec proves it. Scale shape: per-batch cost is the serve kernel's
+    * (query-bounded broadcasts against the immutable index tables);
+    * nothing accumulates in the stream — no state store, any query
+    * rate that the per-batch serve latency sustains. */
   def serve(queryStream: DataFrame, d: String, cmds: TableCommands,
       table: String, k: Int = 3,
       checkpoint: Option[String] = None,
-      heartbeat: () => Unit = () => ()): StreamingQuery = {
-    val dim = corpusDim(queryStream.sparkSession, d)
-    withSinkClaims(cmds, queryStream.sparkSession, s"serve:$table",
-        Seq(table, s"${table}_rejects")) {
-      val w = queryStream.writeStream.outputMode("append")
-      checkpoint.foreach(c => w.option("checkpointLocation", c))
-      w
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          heartbeat()
-          // skip empty batches: creating a table from one would publish a
-          // schema-less version, and replaying an empty append is a no-op.
-          // Poison queries quarantine into <table>_rejects (see
-          // decontamGate) — a malformed query must cost its caller an
-          // absent answer plus a visible reject row, never the stream.
-          retryOnceOnStaleRead(batch.sparkSession) {
-            val (clean, poison) = splitPoison(batch, "q_id", dim)
-            if (!poison.isEmpty)
-              cmds.appendCommitted(s"${table}_rejects", poison, batchId)
-            if (!clean.isEmpty)
-              cmds.appendCommitted(table,
-                Similarity.searchVectors(batch.sparkSession, d, clean, k),
-                batchId)
-          }
-          ()
-        }
-        .start()
-    }
-  }
+      heartbeat: () => Unit = () => ()): StreamingQuery =
+    answerTwin(queryStream, d, cmds, table, "serve", "q_id", checkpoint,
+      heartbeat)(Similarity.searchVectors(_, d, _, k))
 
   /** Streaming DIVERSIFIED serving — [[serve]]'s MMR sibling, the online
     * twin of s110: each query micro-batch is answered by the batch
@@ -483,29 +456,8 @@ object VectorStreams {
       cmds: TableCommands, table: String, k: Int = 3, shortK: Int = 10,
       lambdaTenths: Int = 7,
       checkpoint: Option[String] = None,
-      heartbeat: () => Unit = () => ()): StreamingQuery = {
-    val dim = corpusDim(queryStream.sparkSession, d)
-    withSinkClaims(cmds, queryStream.sparkSession, s"serve_mmr:$table",
-        Seq(table, s"${table}_rejects")) {
-      val w = queryStream.writeStream.outputMode("append")
-      checkpoint.foreach(c => w.option("checkpointLocation", c))
-      w
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          heartbeat()
-          // poison queries quarantine into <table>_rejects (see serve)
-          retryOnceOnStaleRead(batch.sparkSession) {
-            val (clean, poison) = splitPoison(batch, "q_id", dim)
-            if (!poison.isEmpty)
-              cmds.appendCommitted(s"${table}_rejects", poison, batchId)
-            if (!clean.isEmpty)
-              cmds.appendCommitted(table,
-                Similarity.searchVectorsDiversified(batch.sparkSession, d,
-                  clean, k, shortK, lambdaTenths),
-                batchId)
-          }
-          ()
-        }
-        .start()
-    }
-  }
+      heartbeat: () => Unit = () => ()): StreamingQuery =
+    answerTwin(queryStream, d, cmds, table, "serve_mmr", "q_id", checkpoint,
+      heartbeat)(Similarity.searchVectorsDiversified(_, d, _, k, shortK,
+        lambdaTenths))
 }

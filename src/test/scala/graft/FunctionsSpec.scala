@@ -318,11 +318,11 @@ class FunctionsSpec extends AnyFunSuite {
       "codebook drawn from a TIE-RICH domain (values in {0,1} force " +
       "frequent equal distances, so the cid-ASC tiebreak is exercised, " +
       "not just the distance order)") {
-    import operators.Similarity.{FrozenBookC, FrozenBookM}
+    import FunctionsSpec.{BookC, BookM}
     val rnd = new scala.util.Random(13)
-    val book = (0 until 8).map(m => FrozenBookM(m,
+    val book = (0 until 8).map(m => BookM(m,
       (0L until 8L).map(cid =>
-        FrozenBookC(cid, Seq.fill(8)(rnd.nextInt(2).toLong)))))
+        BookC(cid, Seq.fill(8)(rnd.nextInt(2).toLong)))))
     val rows = (0 until 500).map(i =>
       (i.toLong, Seq.fill(64)(rnd.nextInt(2).toLong), book))
     val df = rows.toDF("id", "vq", "book")
@@ -386,7 +386,7 @@ class FunctionsSpec extends AnyFunSuite {
       "cq arrays): null cq, window/cq length mismatch, and null vq " +
       "elements all read as NULL distance, which array_min's struct " +
       "ordering sorts FIRST — poisoned candidates WIN, ties by cid ASC") {
-    import operators.Similarity.{FrozenBookC, FrozenBookM}
+    import FunctionsSpec.{BookC, BookM}
     def interpTwin(df: org.apache.spark.sql.DataFrame)
         : org.apache.spark.sql.DataFrame =
       df.select(col("id"),
@@ -402,13 +402,13 @@ class FunctionsSpec extends AnyFunSuite {
     def asMap(d: org.apache.spark.sql.DataFrame): Map[Long, Seq[Any]] =
       d.collect().map(r => r.getLong(0) -> r.getSeq[Any](1)).toMap
     val poisonedBook = Seq(
-      FrozenBookM(0, Seq(
-        FrozenBookC(3L, Seq.fill(8)(1L)),
-        FrozenBookC(7L, null),          // null cq -> null dist
-        FrozenBookC(5L, null))),        // null-dist tie -> cid 5 wins
-      FrozenBookM(1, Seq(
-        FrozenBookC(2L, Seq.fill(4)(0L)),  // length mismatch -> null dist
-        FrozenBookC(9L, Seq.fill(8)(0L)))))
+      BookM(0, Seq(
+        BookC(3L, Seq.fill(8)(1L)),
+        BookC(7L, null),          // null cq -> null dist
+        BookC(5L, null))),        // null-dist tie -> cid 5 wins
+      BookM(1, Seq(
+        BookC(2L, Seq.fill(4)(0L)),  // length mismatch -> null dist
+        BookC(9L, Seq.fill(8)(0L)))))
     val clean = Seq((1L, Seq.fill(64)(1L), poisonedBook))
       .toDF("id", "vq", "book")
     val fusedClean = asMap(clean.select(col("id"),
@@ -420,10 +420,10 @@ class FunctionsSpec extends AnyFunSuite {
     // null vq ELEMENT: every m=0 candidate's window covers it -> all null
     // dist -> smallest cid wins; m=1 window is clean
     val goodBook = Seq(
-      FrozenBookM(0, Seq(FrozenBookC(3L, Seq.fill(8)(1L)),
-        FrozenBookC(6L, Seq.fill(8)(2L)))),
-      FrozenBookM(1, Seq(FrozenBookC(4L, Seq.fill(8)(1L)),
-        FrozenBookC(8L, Seq.fill(8)(9L)))))
+      BookM(0, Seq(BookC(3L, Seq.fill(8)(1L)),
+        BookC(6L, Seq.fill(8)(2L)))),
+      BookM(1, Seq(BookC(4L, Seq.fill(8)(1L)),
+        BookC(8L, Seq.fill(8)(9L)))))
     val holed = Seq((2L, Seq.fill(64)(1L), goodBook))
       .toDF("id", "vq", "book")
       .withColumn("vq",
@@ -483,9 +483,9 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("pq_codes_l edges: empty bm -> null element; empty book -> empty " +
       "codes; null vq or book -> null result") {
-    import operators.Similarity.{FrozenBookC, FrozenBookM}
-    val full = FrozenBookM(0, Seq(FrozenBookC(7L, Seq.fill(8)(1L))))
-    val empty = FrozenBookM(1, Seq.empty)
+    import FunctionsSpec.{BookC, BookM}
+    val full = BookM(0, Seq(BookC(7L, Seq.fill(8)(1L))))
+    val empty = BookM(1, Seq.empty)
     val df = Seq((1L, Seq.fill(16)(1L), Seq(full, empty)))
       .toDF("id", "vq", "book")
     val got = df.select(
@@ -506,4 +506,11 @@ class FunctionsSpec extends AnyFunSuite {
         8)).head()
     assert(nulled.isNullAt(0) && nulled.isNullAt(1))
   }
+}
+
+object FunctionsSpec {
+  /** A `pq_codes_l` codebook row: the field names and types the kernel's
+    * `book` argument reads (array<struct<m, bm: array<struct<cid, cq>>>>). */
+  final case class BookC(cid: Long, cq: Seq[Long])
+  final case class BookM(m: Int, bm: Seq[BookC])
 }

@@ -10,9 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * argmax) must be bit-invisible; the opt-in two-level COARSE build must
   * cover the corpus, route into real clusters, and be judged by the
   * recall machinery; index maintenance (REFRESH) must route deltas
-  * through the stored tables with no driver-collected model, identically
-  * to the frozen-literal streaming form. Each test is a "done" criterion
-  * of a round-12 verdict ask (#1, #2). */
+  * through the stored tables with no driver-collected model, to exactly
+  * the rows BUILD writes. Each test is a "done" criterion of a round-12
+  * verdict ask (#1, #2). */
 class Round13GuardsSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -75,7 +75,8 @@ class Round13GuardsSpec extends AnyFunSuite {
       "the served search stack stays well-formed, the s102 recall audit " +
       "judges it, and REFRESH refuses to mix exact deltas into a coarse " +
       "assignment") {
-    val engine = new Engine(spark, d, freshWh("coarse"))
+    val wh = freshWh("coarse")
+    val engine = new Engine(spark, d, wh)
     def s102Mean(): Double = {
       val recall = SparkEntry.queries("s102_index_recall")(spark, d).collect()
       assert(recall.length == 10, s"recall card rows: ${recall.length}")
@@ -109,6 +110,27 @@ class Round13GuardsSpec extends AnyFunSuite {
       val err = intercept[IllegalArgumentException](
         engine.sql("REFRESH VECTOR INDEX ON embeddings"))
       assert(err.getMessage.contains("COARSE"), err.getMessage)
+      // so does the VECTOR ingest gate, which appends the same exact-
+      // routed rows into the same assignment — refused before it claims
+      // a registry entry or a sink
+      val watch = Files.createTempDirectory("graft_coarse_watch").toString
+      val gate = intercept[IllegalArgumentException](
+        engine.sql(s"START VECTOR INGEST FROM '$watch' AS coarse_gate"))
+      assert(gate.getMessage.contains("COARSE"), gate.getMessage)
+      assert(engine.sql("SHOW INGESTS").count() == 0,
+        engine.sql("SHOW INGESTS").collect().mkString)
+      val reg = java.nio.file.Paths.get(wh, "_ingest_registry")
+      val regEntries =
+        if (!Files.isDirectory(reg)) Nil
+        else {
+          val ls = Files.list(reg)
+          try ls.toArray.toSeq.map(_.toString) finally ls.close()
+        }
+      assert(regEntries.isEmpty, regEntries.mkString(", "))
+      Seq(operators.VectorIndex.tableName("codes"),
+        operators.VectorIndex.tableName("assign"),
+        "vector_ingest_rejects").foreach(t =>
+        assert(engine.storage.sinkOwner(t).isEmpty, s"$t left claimed"))
       // unknown modes are refused loudly
       val bad = intercept[IllegalArgumentException](
         engine.sql("BUILD VECTOR INDEX ON embeddings USING APPROXIMATE"))
@@ -128,14 +150,11 @@ class Round13GuardsSpec extends AnyFunSuite {
     }
   }
 
-  test("routeAndEncodeJoined == routeAndEncodeFrozen, row for row, in both " +
-      "join forms (broadcast-argmax and past-the-cap shuffled-agg): index " +
-      "maintenance now routes deltas through the STORED tables with no " +
-      "driver-collected model, and the streaming gates' frozen-literal " +
-      "form is pinned to the same answers") {
+  test("routeAndEncode == BUILD's assign/codes rows, row for row, in " +
+      "both join forms (broadcast-argmax and past-the-cap shuffled-agg): " +
+      "REFRESH and the VECTOR gate route and encode through the STORED " +
+      "model frames with no driver-collected literal") {
     val arts = operators.Similarity.indexArtifacts(spark, d).toMap
-    val (cents, book) =
-      operators.Similarity.freezeIndex(arts("centroids"), arts("codebook"))
     val vecs = spark.read.parquet(s"$d/embeddings.parquet")
       .select("vec_id", "embedding")
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -144,16 +163,17 @@ class Round13GuardsSpec extends AnyFunSuite {
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2)))
         .sortBy(_._1).toSeq
-    val frozen = rows(
-      operators.Similarity.routeAndEncodeFrozen(vecs, cents, book))
-    val joinedB = rows(operators.Similarity.routeAndEncodeJoined(
+    val built = rows(arts("assign").join(arts("codes"), "vec_id"))
+    val joinedB = rows(operators.Similarity.routeAndEncode(
       vecs, arts("centroids"), arts("codebook")))
-    val joinedS = rows(operators.Similarity.routeAndEncodeJoined(
+    val joinedS = rows(operators.Similarity.routeAndEncode(
       vecs, arts("centroids"), arts("codebook"), broadcastCap = 1L))
-    assert(frozen.nonEmpty && frozen == joinedB,
-      "joined (broadcast form) diverges from the frozen-literal route")
-    assert(frozen == joinedS,
-      "joined (shuffled form) diverges from the frozen-literal route")
+    assert(built.nonEmpty && built.size.toLong == vecs.count(),
+      s"BUILD artifacts cover ${built.size} vectors")
+    assert(joinedB == built,
+      "broadcast form diverges from BUILD's assign/codes rows")
+    assert(joinedS == built,
+      "shuffled form diverges from BUILD's assign/codes rows")
   }
 
   /** Reconstruct the forked test JVM's --add-opens flags (build.sbt's

@@ -622,6 +622,10 @@ class StreamingSpec extends AnyFunSuite {
         assert(streamed.size == raw.length)
         assert(streamed == stored,
           "streamed ingest rows diverge from the BUILD artifacts")
+        // stream–static joins only: the encode keeps no state store
+        assert(q.lastProgress.stateOperators.isEmpty,
+          s"routeAndEncode ran ${q.lastProgress.stateOperators.length} " +
+            "state operator(s)")
       } finally q.stop()
     } finally operators.VectorIndex.drop(spark, cmds)
   }
@@ -660,7 +664,7 @@ class StreamingSpec extends AnyFunSuite {
         .getOrElse(fail("index no longer serves after stream appends"))
       val (cents, book) = streaming.VectorStreams.freeze(
         ix.centroids, ix.codebook)
-      val enc = operators.Similarity.routeAndEncodeFrozen(
+      val enc = streaming.VectorStreams.routeAndEncode(
         raw.toSeq.toDF("vec_id", "embedding"), cents, book).collect()
       val expA = enc.map(r => r.getLong(0) ->
         Seq[Any](r.getLong(0), r.getAs[Number](1).intValue)).toMap
