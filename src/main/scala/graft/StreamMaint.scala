@@ -43,7 +43,7 @@ object StreamMaint {
     }
     // ── VectorStreams.ingest ───────────────────────────────────────────
     operators.VectorIndex.build(spark, sfDir, cmds)
-    val (cents, book) = streaming.VectorStreams.freeze(
+    val model = streaming.VectorStreams.freeze(
       cmds.table(operators.VectorIndex.tableName("centroids")),
       cmds.table(operators.VectorIndex.tableName("codebook")))
     val vecs = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -52,7 +52,7 @@ object StreamMaint {
     val nVecs = vecs.count()
     val ingestT = (0 until k).map { i =>
       val t = time(streaming.VectorStreams.ingestBatch(
-        vecs.filter(col("vec_id") % k === i), cmds, cents, book, i.toLong))
+        vecs.filter(col("vec_id") % k === i), cmds, model, i.toLong))
       println(f"MAINT ingest $i $t%.3f")
       t
     }

@@ -170,8 +170,10 @@ object Dedup {
     QueryDef(
       "d87_dedup_components", // candidate pairs -> dedup groups: alternating
                               // large-star/small-star rounds (O(log n) rounds
-                              // vs O(diameter) for one-hop label propagation;
-                              // the driver only checks a convergence checksum)
+                              // vs O(diameter) for one-hop label propagation)
+                              // until the edge set fits the session's
+                              // broadcast threshold at 16 B per edge, then
+                              // union-find on the driver
       (s, d) => connectedComponents(s, minhashPairs(s, d))._1,
       Some(s"""WITH RECURSIVE $minhashCtes,
                |pairs AS ($minhashPairsSelect),
@@ -1243,20 +1245,35 @@ object Dedup {
     * and Beyond"), which converges in O(log n) rounds regardless of
     * component diameter (one-hop min-label propagation is O(diameter): on a
     * 100 TB corpus a single long near-dup chain would dominate the round
-    * count).
+    * count) — finished on the driver once the edge set is small, the
+    * paper's own hybrid.
     *
     * Scale posture: every round is a bounded number of shuffles on the
-    * shrinking edge set; the driver sees only an 8-byte convergence
-    * checksum. Lineage is cut per round — against a reliable store when
+    * shrinking edge set, and its one action (the convergence checksum)
+    * also counts the edges left. While that count is above
+    * `localMaxEdges`, the rounds stay distributed; once it is at or below,
+    * the edge set is collected and finished by union-find in driver
+    * memory, returned as one driver-held local relation. The bound is the
+    * session's `spark.sql.autoBroadcastJoinThreshold` ÷ 16 (two longs per
+    * edge: the size the session already ships through the driver for a
+    * broadcast; ~655k edges at the 10 MB default, none when broadcast is
+    * disabled). Star rounds preserve the node set and the components, so
+    * the labels are the same whichever round the switch happens after.
+    * Lineage is cut per round — against a reliable store when
     * `GRAFT_CHECKPOINT_DIR` is set (cluster deployment: survives executor
     * loss), falling back to `localCheckpoint` for single-JVM tests.
     *
     * Returns (labels, rounds): labels maps every node to its component
-    * minimum (`doc`, `root`); rounds is the number of large+small rounds
-    * executed (spec-asserted ≤ log₂(n) + c).
+    * minimum (`doc`, `root`); rounds is the number of distributed
+    * large+small rounds executed (spec-asserted ≤ log₂(n) + c).
+    * `localMaxEdges` overrides the bound (specs force either path; 0
+    * keeps every round distributed).
     */
-  private[graft] def connectedComponents(
-      s: SparkSession, edges0: DataFrame): (DataFrame, Int) = {
+  private[graft] def connectedComponents(s: SparkSession,
+      edges0: DataFrame, localMaxEdges: Option[Long] = None)
+      : (DataFrame, Int) = {
+    val bound = localMaxEdges.getOrElse(
+      s.sessionState.conf.autoBroadcastJoinThreshold / 16)
     // lazy cut: the convergence checksum is the materializing action, so
     // each round stays one Spark job (reliable-vs-local dispatch lives in
     // Graft.cut, shared with every other lineage cut)
@@ -1287,30 +1304,86 @@ object Dedup {
     }
 
     var e = cut(edges0.select(col("d1").as("u"), col("d2").as("v")))
-    // order-independent multiset checksum; hashes are reduced mod 2^30 so
-    // the sum stays below 2^63 up to ~8.5 billion edges (ANSI mode — the
-    // Spark 4 default — throws on overflow rather than wrapping)
-    def checksum(df: DataFrame): Long = {
+    // (edge count, order-independent multiset checksum); hashes are
+    // reduced mod 2^30 so the sum stays below 2^63 up to ~8.5 billion
+    // edges (ANSI mode — the Spark 4 default — throws on overflow rather
+    // than wrapping)
+    def checksum(df: DataFrame): (Long, Long) = {
       val r = df.agg(count(lit(1)),
         sum(pmod(xxhash64(col("u"), col("v")), lit(1L << 30)))).head()
-      r.getLong(0) ^ (if (r.isNullAt(1)) 0L else r.getLong(1))
+      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
+    def small(sig: (Long, Long)): Boolean = bound > 0 && sig._1 <= bound
     var prev = checksum(e)
     var rounds = 0; var done = false
     // 64 is a safety cap far above log2 of any plausible node count —
     // non-convergence is an error, never a silent partial answer
-    while (!done && rounds < 64) {
+    while (!done && !small(prev) && rounds < 64) {
       e = cut(smallStar(largeStar(e)))
       val sig = checksum(e)
       done = sig == prev // fixed point: the star edge set reproduces itself
       prev = sig
       rounds += 1
     }
-    require(done, s"component propagation did not converge in $rounds rounds")
-    // converged edges are stars (child -> component min); roots label themselves
-    val labels = e.select(col("u").as("doc"), col("v").as("root"))
-      .union(e.select(col("v").as("doc"), col("v").as("root")).distinct())
-    (labels, rounds)
+    if (!done && small(prev)) (localComponents(s, e), rounds)
+    else {
+      require(done,
+        s"component propagation did not converge in $rounds rounds")
+      // converged edges are stars (child -> component min); roots label
+      // themselves
+      (e.select(col("u").as("doc"), col("v").as("root"))
+        .union(e.select(col("v").as("doc"), col("v").as("root"))
+          .distinct()), rounds)
+    }
+  }
+
+  /** The driver-side finish of [[connectedComponents]]: collect the (u, v)
+    * edge set, compact the ids to 0..n-1 by sorting, union-find over an
+    * int parent array (path halving; the root is always the smaller
+    * index, so a component's root is its minimum id), and return every
+    * node labelled with its component minimum as one local relation —
+    * no job to build it. Both columns are nullable BIGINT, as the star
+    * rounds' `min` aggregates leave them on the distributed path. */
+  private def localComponents(s: SparkSession, e: DataFrame): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val rows = e.select(col("u"), col("v")).collect()
+    val m = rows.length
+    val ends = new Array[Long](2 * m)
+    var i = 0
+    while (i < m) {
+      ends(2 * i) = rows(i).getLong(0); ends(2 * i + 1) = rows(i).getLong(1)
+      i += 1
+    }
+    val sorted = ends.clone()
+    java.util.Arrays.sort(sorted)
+    var n = 0 // distinct ids, compacted in place
+    i = 0
+    while (i < sorted.length) {
+      if (n == 0 || sorted(i) != sorted(n - 1)) {
+        sorted(n) = sorted(i); n += 1
+      }
+      i += 1
+    }
+    val ids = java.util.Arrays.copyOf(sorted, n)
+    val parent = Array.tabulate(n)(identity)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    i = 0
+    while (i < m) {
+      val a = find(java.util.Arrays.binarySearch(ids, ends(2 * i)))
+      val b = find(java.util.Arrays.binarySearch(ids, ends(2 * i + 1)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      i += 1
+    }
+    val labels = new java.util.ArrayList[Row](n)
+    i = 0
+    while (i < n) { labels.add(Row(ids(i), ids(find(i)))); i += 1 }
+    s.createDataFrame(labels, StructType(Seq(
+      StructField("doc", LongType), StructField("root", LongType))))
   }
 
   /** Mersenne prime 2^31-1: the minhash lane space. All lane/band mixing is

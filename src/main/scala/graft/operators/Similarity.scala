@@ -94,7 +94,7 @@ object Similarity {
     * stream through one whole-stage-codegen map with nothing widening the
     * plan, so build cost is the arithmetic itself, map-side parallel. */
   private def assignArgmaxBroadcast(vecs: DataFrame,
-      centArr: DataFrame): DataFrame = {
+      centArr: DataFrame, centsOne: Option[DataFrame] = None): DataFrame = {
     // the argmax itself is the fused codegen kernel
     // (functions.NearestCentroidL), NOT array_max(transform(...)):
     // higher-order functions are CodegenFallback, so the transform form
@@ -102,9 +102,7 @@ object Similarity {
     // boxed struct per candidate — measured minutes-to-hours at the
     // ×1000 fixture where the fused loop takes the arithmetic's time
     val clabelType = centArr.schema("clabel").dataType
-    val one = centArr.agg(sort_array(collect_list(
-      struct(col("clabel").cast("long").as("clabel"), col("cqa"),
-        col("ncq").cast("long").as("ncq")))).as("cents"))
+    val one = centsOne.getOrElse(centsOneRow(centArr))
     vecs
       .withColumn("nq", dotl(col("vq"), col("vq")))
       .crossJoin(broadcast(one))
@@ -112,6 +110,13 @@ object Similarity {
         col("vq"), col("nq"), col("cents")).cast(clabelType))
       .drop("cents", "nq")
   }
+
+  /** The one-row (clabel-sorted) centroid array
+    * [[assignArgmaxBroadcast]] broadcasts. */
+  private def centsOneRow(centArr: DataFrame): DataFrame =
+    centArr.agg(sort_array(collect_list(
+      struct(col("clabel").cast("long").as("clabel"), col("cqa"),
+        col("ncq").cast("long").as("ncq")))).as("cents"))
 
   /** EXACT nearest-centroid assignment with NO per-node centroid
     * structure: vectors × centroid-chunks as a plain (non-broadcast)
@@ -2465,27 +2470,51 @@ object Similarity {
       .select(col("vec_id"), col("cluster"), col("eval_id"), col("sim"))
   }
 
-  /** Coarse route + PQ encode of arriving vectors against an index's
-    * centroid and codebook frames — the one kernel behind REFRESH's
-    * delta, the streaming VECTOR gate and `VectorStreams.routeAndEncode`.
-    * Rows are bit-identical to BUILD's assign/codes for the same vectors
-    * (the parity spec pins both join forms). The centroid side broadcasts
-    * as one row while k is under [[centBroadcastCap]] and the argmax
-    * carries `vq` through to the encode; past the cap, the shuffled-agg
-    * argmax keeps no per-node structure ∝ k and joins `vq` back. The M×k
-    * codebook is 64 rows, always broadcast. On a streaming `vecs` with
-    * static model frames the broadcast form is stream–static joins only:
-    * no state store. */
+  /** A vector index's route+encode model in the form the kernel joins:
+    * the centroid frame, its one-row array while k is under the
+    * broadcast cap (None past it: the shuffled-agg argmax reads `cents`
+    * itself) and the one-row codebook. [[encodeModel]] builds it lazily
+    * per REFRESH call; `VectorStreams.freeze` builds it once per stream
+    * and holds every frame as a driver-side local relation. */
+  final case class EncodeModel(cents: DataFrame,
+      centsOne: Option[DataFrame], book: DataFrame)
+
+  /** The [[EncodeModel]] of a centroid and codebook frame: one count of
+    * the centroids picks the join form. */
+  private[graft] def encodeModel(cents: DataFrame, codebook: DataFrame,
+      broadcastCap: Long = centBroadcastCap): EncodeModel =
+    EncodeModel(cents,
+      if (cents.count() <= broadcastCap) Some(centsOneRow(cents)) else None,
+      bookOneRow(codebook))
+
+  /** [[routeAndEncode]] against an index's centroid and codebook frames
+    * (REFRESH's delta; the parity spec crosses `broadcastCap`). */
   private[graft] def routeAndEncode(vecs: DataFrame,
       cents: DataFrame, codebook: DataFrame,
-      broadcastCap: Long = centBroadcastCap): DataFrame = {
+      broadcastCap: Long = centBroadcastCap): DataFrame =
+    routeAndEncode(vecs, encodeModel(cents, codebook, broadcastCap))
+
+  /** Coarse route + PQ encode of arriving vectors against an index's
+    * model — the one kernel behind REFRESH's delta, the streaming VECTOR
+    * gate and `VectorStreams.routeAndEncode`. Rows are bit-identical to
+    * BUILD's assign/codes for the same vectors (the parity spec pins both
+    * join forms). The centroid side broadcasts as one row while k is
+    * under [[centBroadcastCap]] and the argmax carries `vq` through to
+    * the encode; past the cap, the shuffled-agg argmax keeps no per-node
+    * structure ∝ k and joins `vq` back. The M×k codebook is 64 rows,
+    * always broadcast. On a streaming `vecs` with static model frames the
+    * broadcast form is stream–static joins only: no state store. */
+  private[graft] def routeAndEncode(vecs: DataFrame,
+      model: EncodeModel): DataFrame = {
     val vq = vecs.select(col("vec_id"),
       transform(col("embedding"),
         x => round(x.cast("double") * 1000000).cast("long")).as("vq"))
-    val routed =
-      if (cents.count() <= broadcastCap) assignArgmaxBroadcast(vq, cents)
-      else assignArgmaxShuffled(vq, cents, Seq.empty).join(vq, "vec_id")
-    routed.crossJoin(broadcast(bookOneRow(codebook)))
+    val routed = model.centsOne match {
+      case Some(one) => assignArgmaxBroadcast(vq, model.cents, Some(one))
+      case None =>
+        assignArgmaxShuffled(vq, model.cents, Seq.empty).join(vq, "vec_id")
+    }
+    routed.crossJoin(broadcast(model.book))
       .select(col("vec_id"), col("cluster").cast("long").as("cluster"),
         GraftFunctions.pq_codes_l(col("vq"), col("book"), pqSub).as("codes"))
   }

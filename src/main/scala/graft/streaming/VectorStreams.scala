@@ -25,16 +25,20 @@ import graft.operators.{Similarity, VectorIndex}
 object VectorStreams {
 
   /** Freeze the model artifacts of served index frames (or any
-    * centroids/codebook pair with the build schema): each frame's k rows
-    * are collected once and held on the driver as a local relation, so
-    * every micro-batch routes against the model as it stood at stream
-    * start (a later BUILD cannot shift a running stream's routing), and
-    * an executor loss cannot lose it. */
+    * centroids/codebook pair with the build schema) into the kernel's
+    * [[Similarity.EncodeModel]]: each frame's k rows are collected once,
+    * the join form is picked and the one-row centroid and codebook
+    * arrays are aggregated once, and every frame is held on the driver
+    * as a local relation. Every micro-batch then routes against the
+    * model as it stood at stream start (a later BUILD cannot shift a
+    * running stream's routing), an executor loss cannot lose it, and a
+    * batch pays no count or model aggregate of its own. */
   def freeze(centroids: DataFrame, codebook: DataFrame)
-      : (DataFrame, DataFrame) = {
+      : Similarity.EncodeModel = {
     def local(df: DataFrame): DataFrame = df.sparkSession.createDataFrame(
       java.util.Arrays.asList(df.collect(): _*), df.schema)
-    (local(centroids), local(codebook))
+    val m = Similarity.encodeModel(local(centroids), local(codebook))
+    Similarity.EncodeModel(m.cents, m.centsOne.map(local), local(m.book))
   }
 
   /** Split a (id, embedding) micro-batch into (clean, poison): null id,
@@ -228,9 +232,9 @@ object VectorStreams {
     * written for the same vectors — the parity spec proves it against the
     * stored assign/codes tables. Identical code path for batch
     * (`spark.read`) and stream (`spark.readStream`). */
-  def routeAndEncode(vecs: DataFrame, cents: DataFrame,
-      book: DataFrame): DataFrame =
-    Similarity.routeAndEncode(vecs, cents, book)
+  def routeAndEncode(vecs: DataFrame,
+      model: Similarity.EncodeModel): DataFrame =
+    Similarity.routeAndEncode(vecs, model)
 
   /** SELF-MAINTAINING vector ingest — [[routeAndEncode]] closed into the
     * stored index, the vector twin of `DocStreams.admitAndIndex`: each
@@ -265,7 +269,7 @@ object VectorStreams {
       batchOffset: Long = 0L,
       heartbeat: () => Unit = () => ()): StreamingQuery = {
     VectorIndex.requireExactRouting(cmds, "VECTOR INGEST")
-    val (cents, book) = freeze(
+    val model = freeze(
       cmds.table(VectorIndex.tableName("centroids")),
       cmds.table(VectorIndex.tableName("codebook")))
     // checkpoint: same restart contract as DocStreams.admitAndIndex —
@@ -275,7 +279,7 @@ object VectorStreams {
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val id = batchId + batchOffset
-        ingestBatch(batch, cmds, cents, book, id)
+        ingestBatch(batch, cmds, model, id)
         // in-gate TAIL compaction of the link-forward small files — see
         // DocStreams.admitAndIndex for the single-writer rationale
         // (foreachBatch serializes the gate's writes) and the O(tail)
@@ -300,7 +304,7 @@ object VectorStreams {
   /** One micro-batch of [[ingest]] — public so the replay/crash contract
     * is directly testable (call twice with one batchId). */
   def ingestBatch(batch: DataFrame, cmds: TableCommands,
-      cents: DataFrame, book: DataFrame, batchId: Long): Unit = {
+      model: Similarity.EncodeModel, batchId: Long): Unit = {
     if (batch.isEmpty) return
     import org.apache.spark.sql.functions.{col, size}
     require(Seq("assign", "codes").forall(p =>
@@ -320,7 +324,7 @@ object VectorStreams {
     // rejects append runs FIRST: if it crashes, nothing of the batch
     // committed and the replay is a full clean rerun; codes/assign keep
     // their crash convention untouched.
-    val dim = cents.select(size(col("cqa"))).take(1).headOption
+    val dim = model.cents.select(size(col("cqa"))).take(1).headOption
       .map(_.getInt(0)).getOrElse(0)
     val (clean, poison) = splitPoison(batch, "vec_id", dim)
     if (!poison.isEmpty)
@@ -352,7 +356,7 @@ object VectorStreams {
       .groupBy(col("vec_id"))
       .agg(min(struct(col("embedding"))).as("__s"))
       .select(col("vec_id"), col("__s.embedding").as("embedding"))
-    val enc = Similarity.routeAndEncode(deduped, cents, book)
+    val enc = Similarity.routeAndEncode(deduped, model)
       .localCheckpoint()
     Seq("codes", "assign").map(VectorIndex.tableName).foreach(t =>
       cmds.appendCommitted(t, cmds.conform(t, enc), batchId))

@@ -231,7 +231,7 @@ object FenceProbe {
           }
         }
         check("foreign_replay_heals_then_purge_completes") {
-          val (cents, book) = streaming.VectorStreams.freeze(
+          val model = streaming.VectorStreams.freeze(
             cmds.table(operators.VectorIndex.tableName("centroids")),
             cmds.table(operators.VectorIndex.tableName("codebook")))
           val batch = spark.read.parquet(s"$scratch/torn_batch.parquet")
@@ -239,7 +239,7 @@ object FenceProbe {
             Paths.get(scratch, "torn_batch_id")).trim.toLong
           // the replay Spark would run on resume, driven directly: the
           // committed side skips its marker, the torn side catches up
-          streaming.VectorStreams.ingestBatch(batch, cmds, cents, book, bid)
+          streaming.VectorStreams.ingestBatch(batch, cmds, model, bid)
           assert(cmds.lastCommittedBatch(codesT) ==
             cmds.lastCommittedBatch(assignT), "replay did not heal")
           val msg = engine.sql("STOP INGEST vgate FORCE PURGE")

@@ -31,7 +31,7 @@ class GateSoakSpec extends AnyFunSuite {
     val codesT = operators.VectorIndex.tableName("codes")
     val assignT = operators.VectorIndex.tableName("assign")
     try {
-      val (cents, book) = streaming.VectorStreams.freeze(
+      val model = streaming.VectorStreams.freeze(
         cmds.table(operators.VectorIndex.tableName("centroids")),
         cmds.table(operators.VectorIndex.tableName("codebook")))
       val base = spark.read.parquet(s"$d/embeddings.parquet")
@@ -60,7 +60,7 @@ class GateSoakSpec extends AnyFunSuite {
       }
       def runBatch(rows: Seq[(Long, Seq[Float])], id: Long): Unit =
         streaming.VectorStreams.ingestBatch(
-          rows.toDF("vec_id", "embedding"), cmds, cents, book, id)
+          rows.toDF("vec_id", "embedding"), cmds, model, id)
       (1 to 40).foreach { step =>
         rng.nextInt(10) match {
           case n if n <= 5 => // a fresh micro-batch, possibly poisoned,
@@ -114,7 +114,7 @@ class GateSoakSpec extends AnyFunSuite {
       }
       // ── final contents equal an exactly-once recompute ──────────────
       val expected = streaming.VectorStreams.routeAndEncode(
-        committedClean.toSeq.toDF("vec_id", "embedding"), cents, book)
+        committedClean.toSeq.toDF("vec_id", "embedding"), model)
         .collect().map(_.toSeq).toSet
       val gotCodes = cmds.table(codesT)
         .filter(col("vec_id") >= 9600000L)

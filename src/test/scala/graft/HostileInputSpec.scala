@@ -68,7 +68,7 @@ class HostileInputSpec extends AnyFunSuite {
     val cmds = new commands.TableCommands(spark, java.nio.file.Files
       .createTempDirectory("graft_hostile_vec_wh").toString)
     operators.VectorIndex.build(spark, d, cmds)
-    val (cents, book) = streaming.VectorStreams.freeze(
+    val model = streaming.VectorStreams.freeze(
       cmds.table(operators.VectorIndex.tableName("centroids")),
       cmds.table(operators.VectorIndex.tableName("codebook")))
     val vecSchema = StructType(Seq(StructField("vec_id", LongType),
@@ -97,7 +97,7 @@ class HostileInputSpec extends AnyFunSuite {
           good.updated(1, Float.PositiveInfinity)),
         Row(java.lang.Long.valueOf(9100009L), nullElem),
         Row(java.lang.Long.valueOf(9100004L), good.map(_ + 0.01f)))
-      streaming.VectorStreams.ingestBatch(poisoned, cmds, cents, book, 0L)
+      streaming.VectorStreams.ingestBatch(poisoned, cmds, model, 0L)
       // the ONLY index entry from this batch is the clean 64-dim row
       assert(codesOf.collect().map(_.get(0)).toSeq == Seq(9100004L),
         "poison rows reached the codes table")
@@ -116,7 +116,7 @@ class HostileInputSpec extends AnyFunSuite {
         (Some(9100009L), "non_finite_embedding")), s"quarantine wrong: $rej")
       // replay of the same batch id: BOTH the quarantine and the index
       // appends are marker-skipped
-      streaming.VectorStreams.ingestBatch(poisoned, cmds, cents, book, 0L)
+      streaming.VectorStreams.ingestBatch(poisoned, cmds, model, 0L)
       assert(cmds.table("vector_ingest_rejects").count() == 7L,
         "replay duplicated quarantined rows")
       assert(codesOf.count() == 1L && assignOf.count() == 1L,
@@ -125,12 +125,12 @@ class HostileInputSpec extends AnyFunSuite {
       // still encodes the next clean batch
       streaming.VectorStreams.ingestBatch(rows(vecSchema,
         Row(java.lang.Long.valueOf(9100005L), Seq(7.0f))),
-        cmds, cents, book, 1L)
+        cmds, model, 1L)
       assert(cmds.table("vector_ingest_rejects").count() == 8L)
       assert(codesOf.count() == 1L, "all-poison batch touched the index")
       streaming.VectorStreams.ingestBatch(rows(vecSchema,
         Row(java.lang.Long.valueOf(9100006L), good.map(_ + 0.02f))),
-        cmds, cents, book, 2L)
+        cmds, model, 2L)
       assert(codesOf.collect().map(_.get(0)).toSet ==
         Set(9100004L, 9100006L), "gate stopped encoding after poison")
     } finally { operators.VectorIndex.drop(spark, cmds); () }

@@ -264,14 +264,14 @@ class LifecycleGuardsSpec extends AnyFunSuite {
       // with a crash armed AFTER the codes publish — codes commits batch
       // 1, assign never runs (exactly what a process kill between the
       // paired appends leaves)
-      val (cents, book) = streaming.VectorStreams.freeze(
+      val model = streaming.VectorStreams.freeze(
         cmds.table(operators.VectorIndex.tableName("centroids")),
         cmds.table(operators.VectorIndex.tableName("codebook")))
       val batch1 = Seq(9500002L -> base.map(_ + 0.02f))
         .toDF("vec_id", "embedding")
       cmds.crashPoint = Some("published")
       intercept[IllegalStateException] {
-        streaming.VectorStreams.ingestBatch(batch1, cmds, cents, book, 1L)
+        streaming.VectorStreams.ingestBatch(batch1, cmds, model, 1L)
       }
       cmds.crashPoint = None
       assert(cmds.lastCommittedBatch(codesT).contains(1L) &&
@@ -287,7 +287,7 @@ class LifecycleGuardsSpec extends AnyFunSuite {
       // the directed recovery: the replay (Spark would re-run batch 1 on
       // resume; here the kernel is driven directly) heals the pair —
       // codes skips its marker, assign catches up, rows land exactly once
-      streaming.VectorStreams.ingestBatch(batch1, cmds, cents, book, 1L)
+      streaming.VectorStreams.ingestBatch(batch1, cmds, model, 1L)
       assert(cmds.lastCommittedBatch(codesT) ==
         cmds.lastCommittedBatch(assignT))
       val counts = Seq(codesT, assignT).map(t => cmds.table(t)
@@ -1036,7 +1036,7 @@ class LifecycleGuardsSpec extends AnyFunSuite {
       // replay the next batch through the kernel with a crash armed
       // after the codes publish — codes commits, assign never runs
       val cmds = new commands.TableCommands(spark, wh)
-      val (cents, book) = streaming.VectorStreams.freeze(
+      val model = streaming.VectorStreams.freeze(
         cmds.table(operators.VectorIndex.tableName("centroids")),
         cmds.table(operators.VectorIndex.tableName("codebook")))
       val batch1 = Seq(9500002L -> base.map(_ + 0.02f))
@@ -1045,7 +1045,7 @@ class LifecycleGuardsSpec extends AnyFunSuite {
       Files.writeString(scratch.resolve("torn_batch_id"), "1")
       cmds.crashPoint = Some("published")
       intercept[IllegalStateException] {
-        streaming.VectorStreams.ingestBatch(batch1, cmds, cents, book, 1L)
+        streaming.VectorStreams.ingestBatch(batch1, cmds, model, 1L)
       }
       cmds.crashPoint = None
       val codesT = operators.VectorIndex.tableName("codes")

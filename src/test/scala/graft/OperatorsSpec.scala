@@ -745,10 +745,76 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("d87 components: large-star/small-star converges in O(log n) rounds") {
     val edges = run("d83_dedup_minhash")
-    val (labels, rounds) = operators.Dedup.connectedComponents(spark, edges)
+    // localMaxEdges = 0: every round stays distributed, so the bound below
+    // is exercised rather than met by a driver finish after zero rounds
+    val (labels, rounds) = operators.Dedup.connectedComponents(spark, edges,
+      localMaxEdges = Some(0L))
     val n = labels.count()
     val bound = (math.log(n.toDouble.max(2)) / math.log(2)).ceil.toInt + 3
     assert(rounds <= bound, s"$rounds rounds for $n nodes (bound $bound)")
+  }
+
+  /** d83's candidate edges at sf0.01, collected once for the parity spec
+    * (a real near-dup graph: cliques that the star rounds shrink). */
+  private lazy val d83Sf001: (Array[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType) = {
+    val df = SparkEntry.queries("d83_dedup_minhash")(spark,
+      new java.io.File(d).getParent + "/sf0.01")
+    (df.collect(), df.schema)
+  }
+
+  test("d87 components: distributed, driver-finished and switch-mid-loop " +
+      "runs give identical labels and schema") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val schema = StructType(Seq(StructField("d1", LongType, false),
+      StructField("d2", LongType, false)))
+    def frame(es: Seq[(Long, Long)]) = spark.createDataFrame(
+      java.util.Arrays.asList(es.map { case (a, b) => Row(a, b) }: _*),
+      schema)
+    // a chain with skip edges: diameter ~n/2 >> log2 n, and the skips give
+    // the star rounds edges to shed, so a bound can trip mid-loop
+    val chain = frame((0L until 2000L).flatMap(i =>
+      Seq(i -> (i + 1), i -> (i + 2))))
+    // disjoint components: cliques with scattered ids, a star, a path
+    def id(i: Long) = i * 7919L % 1000003L
+    val disjoint = frame(
+      (2 to 12).flatMap { c =>
+        val base = c * 100L
+        for (a <- 0 until c; b <- a + 1 until c)
+          yield (id(base + a), id(base + b))
+      }.map { case (a, b) => (a min b, a max b) } ++
+        (1L to 30L).map(i => 2000000L -> (2000000L + i)) ++
+        (3000000L until 3000040L).map(i => i -> (i + 1)))
+    val empty = frame(Seq.empty)
+    val (d83Rows, d83Schema) = d83Sf001
+    val d83 = spark.createDataFrame(
+      java.util.Arrays.asList(d83Rows: _*), d83Schema)
+    Seq("d83 sf0.01" -> d83, "chain" -> chain, "disjoint" -> disjoint,
+        "empty" -> empty).foreach { case (name, edges) =>
+      val n0 = edges.count()
+      def cc(bound: Long) = {
+        val (labels, rounds) = operators.Dedup.connectedComponents(spark,
+          edges, localMaxEdges = Some(bound))
+        (labels.schema, labels.collect()
+          .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq, rounds)
+      }
+      val (distSchema, distRows, distRounds) = cc(0L)
+      val (localSchema, localRows, localRounds) = cc(Long.MaxValue)
+      assert(localRounds == 0, s"$name: driver finish ran star rounds")
+      assert(localSchema == distSchema, s"$name: $localSchema vs $distSchema")
+      assert(localRows == distRows, s"$name: driver labels diverge")
+      assert(distRows.map(_._1).distinct.length == distRows.length,
+        s"$name: a node has two labels")
+      if (n0 > 0) {
+        // one edge fewer than the input: trips once a round sheds edges
+        val (swSchema, swRows, swRounds) = cc(n0 - 1)
+        assert(swRounds >= 1 && swRounds < distRounds,
+          s"$name: switch after $swRounds of $distRounds rounds")
+        assert(swSchema == distSchema, s"$name: $swSchema vs $distSchema")
+        assert(swRows == distRows, s"$name: mid-loop labels diverge")
+      }
+    }
   }
 
   test("tableParallel: shuffles a row-group-starved scan, leaves a multi-file one alone") {

@@ -593,7 +593,7 @@ class StreamingSpec extends AnyFunSuite {
     try {
       val ix = operators.VectorIndex.served(spark, TestSpark.sfDir)
         .getOrElse(fail("index build did not serve"))
-      val (cents, book) = streaming.VectorStreams.freeze(
+      val model = streaming.VectorStreams.freeze(
         ix.centroids, ix.codebook)
       // replay the corpus as the arriving stream
       val raw = spark.read
@@ -602,7 +602,7 @@ class StreamingSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getSeq[Float](1)))
       val src = MemoryStream[(Long, Seq[Float])]
       val q = streaming.VectorStreams.routeAndEncode(
-          src.toDF().toDF("vec_id", "embedding"), cents, book)
+          src.toDF().toDF("vec_id", "embedding"), model)
         .writeStream.format("memory").queryName("vingest")
         .outputMode("append").start()
       try {
@@ -662,10 +662,10 @@ class StreamingSpec extends AnyFunSuite {
       } finally q.stop()
       val ix = operators.VectorIndex.served(spark, TestSpark.sfDir)
         .getOrElse(fail("index no longer serves after stream appends"))
-      val (cents, book) = streaming.VectorStreams.freeze(
+      val model = streaming.VectorStreams.freeze(
         ix.centroids, ix.codebook)
       val enc = streaming.VectorStreams.routeAndEncode(
-        raw.toSeq.toDF("vec_id", "embedding"), cents, book).collect()
+        raw.toSeq.toDF("vec_id", "embedding"), model).collect()
       val expA = enc.map(r => r.getLong(0) ->
         Seq[Any](r.getLong(0), r.getAs[Number](1).intValue)).toMap
       val expC = enc.map(r => r.getLong(0) ->
@@ -689,7 +689,7 @@ class StreamingSpec extends AnyFunSuite {
       // and rows bit-identical
       streaming.VectorStreams.ingestBatch(
         raw.drop(raw.length / 2).toSeq.toDF("vec_id", "embedding"),
-        cmds, cents, book, 1L)
+        cmds, model, 1L)
       assert(cmds.table(operators.VectorIndex.tableName("assign")).count()
         == na && cmds.table(
         operators.VectorIndex.tableName("codes")).count() == nc,
