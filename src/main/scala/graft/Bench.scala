@@ -12,7 +12,10 @@ import org.apache.spark.sql.graftbridge.Bridge
 /** The measurement main. With no arguments it runs every SparkEntry query
   * against SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`
-  * plus a compact summary line, the two lines a stdout parser reads.
+  * plus a compact summary line, the two lines a stdout parser reads. The
+  * full line also carries each query's first-rep codegen compiles
+  * (`"compiles"`) and the Metaspace bytes in use after the pass
+  * (`"metaspace_mb"`).
   *
   * Three modes serve one-off measurement, each under the same session
   * rule, [[Graft.prepare]] step and sf0.001 warm-up as the suite; an
@@ -57,6 +60,19 @@ object Bench {
     df.write.format("noop").mode("overwrite").save()
 
   private def since(t0: Long): Double = (System.nanoTime() - t0) / 1e9
+
+  /** `body`'s result and the generated classes compiled while it ran. */
+  private def compiling[A](body: => A): (A, Long) = {
+    val c0 = Graft.compiledClasses
+    val a = body
+    (a, Graft.compiledClasses - c0)
+  }
+
+  /** Used bytes of the JVM's Metaspace pool, where generated classes
+    * live for as long as the codegen cache holds them. */
+  private def metaspaceBytes: Long =
+    java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(_.getName == "Metaspace").map(_.getUsage.getUsed).sum
 
   /** The named queries, or every query when none is named. */
   private def queryNames(named: Seq[String]): Seq[String] = {
@@ -145,14 +161,17 @@ object Bench {
           None
         }
       }
-      val base = (1 to n).flatMap(_ => once())
+      // generated classes the first rep compiled: 0 once the warm-up
+      // left every class of the query in the codegen cache
+      val (first, compiled) = compiling(once())
+      val base = first.toSeq ++ (2 to n).flatMap(_ => once())
       val times =
         if (base.nonEmpty && base.min > slowThresh)
           base ++ (base.size until nSlow).flatMap(_ => once())
         else base
-      name -> times
+      (name, times, compiled)
     }
-    val results = resultsFull.map { case (name, times) =>
+    val results = resultsFull.map { case (name, times, _) =>
       name -> (if (times.isEmpty) 0.0 else times.min)
     }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
@@ -160,7 +179,7 @@ object Bench {
     // per-query variance envelope: [min, max, repeats] — lets a reader
     // separate a plan regression (min moved) from host noise (max swings,
     // min stable) without rerunning anything
-    val spreadJson = resultsFull.map { case (k, ts) =>
+    val spreadJson = resultsFull.map { case (k, ts, _) =>
       if (ts.isEmpty) "\"" + k + "\":[0.0,0.0,0]"
       else "\"" + k + "\":[" + f"${ts.min}%.3f,${ts.max}%.3f,${ts.size}]"
     }.mkString("{", ",", "}")
@@ -170,6 +189,9 @@ object Bench {
     val sorted = results.map(_._2).sorted
     def pct(p: Double) = sorted((p * (sorted.size - 1)).round.toInt)
     val failedJson = failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val compilesJson = resultsFull.map { case (k, _, c) => "\"" + k + "\":" + c }
+      .mkString("{", ",", "}")
+    val metaspaceMb = metaspaceBytes / 1e6
     spark.stop()
     // Same-session per-query DuckDB anchor, embedded in the artifact so
     // host-load drift is self-evident (a query whose Spark time doubled
@@ -231,7 +253,8 @@ object Bench {
     }).getOrElse("null")
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","run_id":"$runId",""" +
-        s""""queries":$qs,"spread":$spreadJson,""" +
+        s""""queries":$qs,"spread":$spreadJson,"compiles":$compilesJson,""" +
+        f""""metaspace_mb":$metaspaceMb%.1f,""" +
         f""""p50":${pct(0.5)}%.3f,"p95":${pct(0.95)}%.3f,""" +
         s""""failed":$failedJson,"duckdb":$duck,"sf":"$sfDir"}"""
     println(line)
@@ -312,20 +335,22 @@ object Bench {
       if (i == 0) warmUp(spark, names, prep)
       val totals = Array.fill(arms.size)(0.0)
       names.foreach { n =>
-        val runs = (1 to reps).map(_ => arms.map { case (_, set) =>
+        def rep() = arms.map { case (_, set) =>
           set()
           prep.release()
           System.gc()
           val t0 = System.nanoTime()
           noop(SparkEntry.queries(n)(spark, d))
           since(t0)
-        })
+        }
+        val (first, compiled) = compiling(rep())
+        val runs = first +: (2 to reps).map(_ => rep())
         val cols = arms.indices.map { a =>
           val ts = runs.map(_(a))
           totals(a) += ts.min
           f"${arms(a)._1}min=${ts.min}%.3f max=${ts.max}%.3f"
         }
-        println(s"TIME $d $n ${cols.mkString(" ")} n=$reps")
+        println(s"TIME $d $n ${cols.mkString(" ")} n=$reps compiles=$compiled")
       }
       val sums = arms.indices.map(a => f"${arms(a)._1}${totals(a)}%.3f")
       println(s"TIME_TOTAL $d ${sums.mkString(" ")} s " +

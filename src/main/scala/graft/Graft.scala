@@ -67,14 +67,41 @@ object Graft {
     spark
   }
 
+  /** The size of Spark's generated-class cache (`CodeGenerator.cache`, one
+    * LRU per JVM keyed by generated source text; Spark's default is 100
+    * entries). At 100 entries a workload that interleaves queries evicts
+    * each query's classes before the query runs again, so it recompiles
+    * them on every statement. The 185-query inventory needs 2,349 distinct
+    * classes (`graft.Verify` at sf0.01 with both indexes built and the
+    * cache unbounded); 4,096 is the smallest power of two that holds them
+    * with headroom, so a long-lived [[Engine]] or `SharedServer` serving
+    * the inventory compiles each class once. */
+  val codegenCache: (String, String) =
+    "spark.sql.codegen.cache.maxEntries" -> "4096"
+
+  /** Generated classes compiled in this JVM so far: every miss of the
+    * [[codegenCache]] compiles one. */
+  def compiledClasses: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+      .getCount
+
   /** The one session rule, as data: AQE on (skew-join + coalesce),
     * data-sized shuffle partitions + advisory for `sfDir`, UTC for oracle
-    * parity, and checkpoint files deleted with their RDDs (a reliable
-    * [[cut]] under GRAFT_CHECKPOINT_DIR otherwise leaks one file set per
-    * call for the life of the session). */
+    * parity, checkpoint files deleted with their RDDs (a reliable [[cut]]
+    * under GRAFT_CHECKPOINT_DIR otherwise leaks one file set per call for
+    * the life of the session), and the [[codegenCache]] size.
+    *
+    * The codegen cache size is a STATIC conf that `CodeGenerator` reads
+    * once, at the first code generation in the JVM: it takes effect only
+    * if the session that carries it is built before any query runs, and
+    * a later session (or a runtime `SET`) cannot change it. On a cluster,
+    * pass it on the submitting session (`--conf
+    * spark.sql.codegen.cache.maxEntries=…` beside `spark.sql.extensions=
+    * graft.GraftExtensions`; OPERATIONS.md). */
   def sessionConfs(cpus: Int, sfDir: String): Seq[(String, String)] = {
     val (parts, advisory) = dataSizedConfs(sfDir, cpus)
     Seq(
+      codegenCache,
       "spark.sql.shuffle.partitions" -> parts,
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> advisory,
       "spark.sql.adaptive.enabled" -> "true",

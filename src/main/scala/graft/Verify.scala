@@ -27,6 +27,10 @@ object Verify {
       prep.release()
     }
     writeOracleSql(Paths.get(outDir))
+    // with no eviction (fewer compiles than Graft.codegenCache entries)
+    // this is the number of distinct generated classes the run needed
+    System.err.println(
+      s"[verify] generated classes compiled: ${Graft.compiledClasses}")
     spark.stop()
   }
 

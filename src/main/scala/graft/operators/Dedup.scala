@@ -562,7 +562,7 @@ object Dedup {
         val feats = shingleHashes(s, d).groupBy("doc_id")
           .agg(laneMinCols.head,
             (laneMinCols.tail :+ collect_set(col("h")).as("hs")): _*)
-        val cand = minhashPairsFromSig(feats)
+        val cand = bandPairs(bandsOf(feats))
         val a = feats.toDF(feats.columns.map(c =>
           if (c == "doc_id") "d1" else s"a_$c"): _*)
         val b = feats.toDF(feats.columns.map(c =>
@@ -1575,8 +1575,18 @@ object Dedup {
         col("matched_doc").isNotNull.as("is_near_dup")): _*)
   }
 
+  /** The MinHash candidate pairs (d1 < d2) of the near-dup corpus. With a
+    * stored [[DedupIndex]] for `d` (as d101 consults it) the pairs come
+    * from the stored band table: no shingle or hash stage runs. The ADMIT
+    * gate appends bands for documents outside the corpus, so the stored
+    * bands are first semi-joined to the corpus ids. Without an index the
+    * bands are computed inline; both paths give the same rows. */
   private def minhashPairs(s: SparkSession, d: String): DataFrame =
-    minhashPairsFromSig(minhashSig(s, d))
+    DedupIndex.served(s, d) match {
+      case Some(stored) => bandPairs(stored
+        .join(corpusNear(s, d).select("doc_id"), Seq("doc_id"), "left_semi"))
+      case None => bandPairs(allBands(s, d))
+    }
 
   /** The banded projection of a signature frame — (doc_id, band,
     * band_key); order-independent band key: sum of universally-hashed
@@ -1591,15 +1601,15 @@ object Dedup {
       posexplode(array(bandKeys: _*)).as(Seq("band", "band_key")))
   }
 
-  private def minhashPairsFromSig(sig: DataFrame): DataFrame = {
-    val bands = bandsOf(sig)
+  /** The band self-join: one (d1, d2) row per document pair sharing at
+    * least one (band, band_key). */
+  private def bandPairs(bands: DataFrame): DataFrame =
     bands.as("a").join(bands.as("b"),
         col("a.band") === col("b.band") &&
           col("a.band_key") === col("b.band_key") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .distinct()
-  }
 
   /** The per-seed constants as an inline VALUES table — the oracle carries
     * the LITERAL values the Scala side derived, so the two engines can

@@ -21,11 +21,14 @@ import graft.commands.TableCommands
   *
   * Build is invoked from SQL (`BUILD DEDUP INDEX ON documents`, the Engine
   * route), from [[graft.Verify]]/[[graft.Bench]] as the setup step of
-  * their serve-path runs, and from specs. d101 consults [[served]]:
-  * present-and-matching → one stored-table read, ZERO shingle/hash stages
-  * in the plan; absent → inline computation, bit-identical output either
-  * way (the stored frame IS the inline frame, round-tripped through
-  * parquet with exact integer types).
+  * their serve-path runs, and from specs. d101 consults [[served]], and so
+  * does `Dedup.minhashPairs`, the candidate-pair generator of d83, d87,
+  * d93, d94, d96, d97 and d99: present-and-matching → one stored-table
+  * read, ZERO shingle/hash stages in the plan; absent → inline
+  * computation, bit-identical output either way (the stored frame IS the
+  * inline frame, round-tripped through parquet with exact integer types).
+  * The pair generator semi-joins the stored bands to the corpus ids,
+  * because the ADMIT gate appends bands for documents outside the corpus.
   */
 object DedupIndex {
 

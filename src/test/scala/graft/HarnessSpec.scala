@@ -47,6 +47,8 @@ class HarnessConfSpec extends AnyFunSuite {
       assert(confs.map(_._1).distinct.size == confs.size, confs)
       val m = confs.toMap
       assert(m("spark.cleaner.referenceTracking.cleanCheckpoints") == "true")
+      // above Spark's default of 100 (Graft.codegenCache)
+      assert(m(Graft.codegenCache._1).toInt > 100)
       val (parts, advisory) = Graft.dataSizedConfs(d, cpus)
       assert(m("spark.sql.shuffle.partitions") == parts)
       assert(m("spark.sql.adaptive.advisoryPartitionSizeInBytes") == advisory)

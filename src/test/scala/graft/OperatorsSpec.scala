@@ -470,6 +470,59 @@ class OperatorsSpec extends AnyFunSuite {
     targets.foreach(n => assert(run(n).collect().toSet == inline(n)))
   }
 
+  test("dedup-index serve path: d83/d87/d93 answer with the inline " +
+      "pipeline's rows and schema, also after ADMIT appends and with " +
+      "bands of a document outside the corpus in the index") {
+    val targets = Seq("d83_dedup_minhash", "d87_dedup_components",
+      "d93_dedup_decisions")
+    def answers() = targets.map { n =>
+      val df = run(n)
+      n -> ((df.schema, df.collect().toSet))
+    }.toMap
+    // inline (no index built) is the baseline
+    val inline = answers()
+    def servedAsInline(when: String): Unit = {
+      assert(operators.DedupIndex.served(spark, d).isDefined)
+      val got = answers()
+      targets.foreach { n =>
+        assert(got(n)._1 == inline(n)._1, s"$n: served schema differs $when")
+        assert(got(n)._2 == inline(n)._2, s"$n: served rows differ $when")
+      }
+    }
+    val cmds = new commands.TableCommands(spark,
+      java.nio.file.Files.createTempDirectory("graft_didx_wh").toString)
+    val bandsT = operators.DedupIndex.tableName("bands")
+    operators.DedupIndex.build(spark, d, cmds)
+    try {
+      servedAsInline("after BUILD")
+      import spark.implicits._
+      // a copy of a corpus document (a near-duplicate at Jaccard 1, so
+      // every band collides) and a fresh document
+      val copyOf = Graft.table(spark, d, "documents")
+        .filter(size(split(col("text"), " ")) >= 20)
+        .orderBy("doc_id").select("text").head().getString(0)
+      val fresh = "the amber lighthouse keeper walks a winding cliff " +
+        "path toward the harbor beacon every misty evening"
+      val before = cmds.table(bandsT).count()
+      streaming.DocStreams.admitAndIndexBatch(
+        Seq((9100001L, copyOf), (9100002L, fresh)).toDF("doc_id", "text"),
+        cmds, "ingest_verdicts", 0L)
+      val admitted = cmds.table("ingest_verdicts").filter(col("admitted"))
+        .select("doc_id").as[Long].collect().toSet
+      assert(admitted == Set(9100002L), s"admitted: $admitted")
+      assert(cmds.table(bandsT).count() == before + 3,
+        "the admitted document's bands were not appended")
+      servedAsInline("after an ADMIT append")
+      // the copy's bands in the index, as if admitted before the corpus
+      // changed: they pair with the original, and only the semi-join to
+      // the corpus ids keeps that pair out
+      cmds.insertInto(bandsT, cmds.conform(bandsT, operators.Dedup
+        .bandsForCorpus(Seq((9100001L, copyOf)).toDF("doc_id", "text"))))
+      cmds.repoint(spark, Seq(bandsT))
+      servedAsInline("with an outside-corpus copy's bands in the index")
+    } finally operators.DedupIndex.drop(spark, cmds)
+  }
+
   test("s102 index recall: every query reported, hits bounded, audit agrees with s101") {
     val rows = run("s102_index_recall").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))

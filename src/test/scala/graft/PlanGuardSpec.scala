@@ -430,4 +430,61 @@ class PlanGuardSpec extends AnyFunSuite {
       }
     } finally operators.VectorIndex.drop(spark, cmds)
   }
+
+  test("dedup-index serve path: the seven MinHash pair consumers read the " +
+      "stored bands and run no shingle or hash stage") {
+    import scala.jdk.CollectionConverters._
+    // the plans of every action a query runs, its construction-time cuts
+    // included: d87/d96/d99 checkpoint the pairs before the final plan,
+    // which then only reads the checkpoint
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
+        plans.add(qe.executedPlan.toString); ()
+      }
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    def allPlans(name: String): String = {
+      plans.clear()
+      val df = SparkEntry.queries(name)(spark, d)
+      df.queryExecution.toRdd.foreach(_ => ())
+      org.apache.spark.sql.graftbridge.Bridge.drainListeners(spark)
+      spark.catalog.clearCache()
+      (df.queryExecution.executedPlan.toString +: plans.asScala.toSeq)
+        .mkString("\n")
+    }
+    spark.listenerManager.register(listener)
+    val cmds = new commands.TableCommands(spark,
+      java.nio.file.Files.createTempDirectory("graft_guard_dwh").toString)
+    try {
+      // the fingerprint is real: the inline pipeline shingles
+      assert(allPlans("d83_dedup_minhash").contains("word_shingles"))
+      operators.DedupIndex.build(spark, d, cmds)
+      // (query, hashes nothing of its own): d94's split rule hashes the
+      // pair ids and d99's exact layer hashes the text, both with md5
+      Seq(
+        ("d83_dedup_minhash", true),
+        ("d87_dedup_components", true),
+        ("d93_dedup_decisions", true),
+        ("d94_split_leakage", false),
+        ("d96_transitivity_audit", true),
+        ("d97_editdist_verify", true),
+        ("d99_dedup_card", false)
+      ).foreach { case (name, noMd5) =>
+        val plan = allPlans(name)
+        assert(plan.contains("dedup_index_documents_bands"),
+          s"$name does not read the stored band index:\n$plan")
+        assert(!plan.contains("word_shingles"),
+          s"$name still shingles the corpus:\n$plan")
+        if (noMd5) assert(!plan.contains("md5("),
+          s"$name still hashes shingles:\n$plan")
+      }
+    } finally {
+      spark.listenerManager.unregister(listener)
+      operators.DedupIndex.drop(spark, cmds)
+    }
+  }
 }

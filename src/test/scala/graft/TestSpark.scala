@@ -18,6 +18,8 @@ object TestSpark {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // static: this session must be the JVM's first codegen (Graft.sessionConfs)
+      .config(Graft.codegenCache._1, Graft.codegenCache._2)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
