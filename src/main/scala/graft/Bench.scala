@@ -93,10 +93,13 @@ object Bench {
         s"GRAFT_AB must be one confKey=valA|valB entry, got: '$s'")
     }
 
-  /** Warm-up: run `names` once at the smallest scale factor so JIT +
-    * whole-stage-codegen compilation (cached by generated source, which
-    * is identical across scale factors) is excluded from the timed runs —
-    * the measurement is steady-state execution, not compiler cost. */
+  /** Warm-up: run `names` once at the smallest scale factor so JIT and
+    * most whole-stage-codegen compilation are excluded from the timed
+    * runs. Generated classes are cached by their source text, and that
+    * text is not always the same across scale factors: in a pass at
+    * sf0.01, 37 queries still compiled 393 classes on their first timed
+    * rep (s107 42, s110 38, s111 32), so that rep of those queries
+    * includes compiler cost (the `compiles` field shows how much). */
   private def warmUp(spark: SparkSession, names: Seq[String],
       prep: Graft.Prepared): Unit = {
     val warmDir = "/root/testdata/sf0.001"

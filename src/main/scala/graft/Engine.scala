@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias}
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** SQL-string entry point — the engine's primary declared interface.
   *
@@ -502,7 +505,7 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
   private def bucketColsOf(idx: String, base: String,
       colsJoined: String): Option[Seq[String]] =
     try {
-      val cat = org.apache.spark.sql.graftbridge.Bridge.sessionState(spark).catalog
+      val cat = Bridge.sessionState(spark).catalog
       val meta = cat.getTableMetadata(
         org.apache.spark.sql.catalyst.TableIdentifier(idx))
       meta.bucketSpec
@@ -730,16 +733,13 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
   // BEFORE deciding a RELEASE SINK ... FORCE (the SHOW INGESTS of the
   // per-table claims)
   private val showSinksStmt = """(?is)\s*SHOW\s+SINKS\s*;?\s*""".r
-  // storage DML/DDL accept an optional qualifier so `default.t` (and the
-  // spark_catalog spellings) route to the same warehouse table as `t`,
-  // while a genuinely foreign database is REJECTED with an engine error
-  // instead of falling through to Spark SQL's non-catalog path (whose
-  // "UPDATE ... not supported" error hides the actual problem)
-  // EXPLAIN over engine-routed DML: Spark SQL cannot see the COW rewrite
-  // plan that UPDATE/DELETE would run, so the engine prints it itself
-  // (reference `commands/ExplainCommand.java` covers DML statements too)
-  private val explainDml =
-    """(?is)\s*EXPLAIN\s+((?:UPDATE|DELETE|MERGE)\s+.+?)\s*;?\s*""".r
+  // UPDATE, DELETE and MERGE, and EXPLAIN of each: Spark SQL parses them
+  // but cannot run them on parquet tables, so the engine owns them —
+  // [[dml]] parses the statement with Spark's parser and builds the COW
+  // rewrite (EXPLAIN prints it; reference `commands/ExplainCommand.java`
+  // covers DML statements too)
+  private val dmlHead =
+    """(?is)\s*(?:EXPLAIN\s+)?(?:UPDATE|DELETE|MERGE)\b.*""".r
   // reference grammar: `ANALYZE [VERBOSE] <table>, <table>, ...`
   // (commands/AnalyzeCommand.java:93-115 iterates a table list;
   // nanosql.g:695-715) and `EXPLAIN <select>` with per-node PlanCost
@@ -750,30 +750,23 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
     """(?is)\s*ANALYZE\s+(VERBOSE\s+)?(\w+(?:\s*,\s*\w+)*)\s*;?\s*""".r
   private val explainQuery =
     """(?is)\s*EXPLAIN\s+((?:SELECT\b|WITH\b|\().+?)\s*;?\s*""".r
-  private val updateStmt =
-    """(?is)\s*UPDATE\s+((?:`?\w+`?\.)*)`?(\w+)`?\s+SET\s+(.+?)\s*;?\s*""".r
-  private val deleteStmt =
-    """(?is)\s*DELETE\s+FROM\s+((?:`?\w+`?\.)*)`?(\w+)`?(?:\s+WHERE\s+(.+?))?\s*;?\s*""".r
+  // storage DML/DDL accept an optional qualifier so `default.t` (and the
+  // spark_catalog spellings) route to the same warehouse table as `t`,
+  // while a genuinely foreign database is REJECTED with an engine error
+  // instead of falling through to Spark SQL's non-catalog path (whose
+  // "UPDATE ... not supported" error hides the actual problem)
   private val dropTableStmt =
     """(?is)\s*DROP\s+TABLE\s+(IF\s+EXISTS\s+)?((?:`?\w+`?\.)*)`?(\w+)`?\s*;?\s*""".r
-  // MERGE INTO t [AS a] USING <tbl|(query)> [AS b] ON cond WHEN ... — the
-  // warehouse upsert; Spark SQL has the grammar but no executable MERGE for
-  // plain parquet tables, so the engine owns the whole statement. Only the
-  // head is regex-matched; the USING/ON/WHEN splits are paren- and
-  // string-aware ([[parseMerge]]) so a join ON inside the source subquery
-  // or a CASE WHEN inside the merge condition cannot derail them.
-  private val mergeStmt =
-    """(?is)\s*MERGE\s+INTO\s+((?:`?\w+`?\.)*)`?(\w+)`?(?:\s+(?:AS\s+)?(\w+))?\s+USING\s+(.+?)\s*;?\s*""".r
-  private val mergeSrc =
-    """(?is)\s*(\(.+\)|`?\w+`?)(?:\s+(?:AS\s+)?(\w+))?\s*""".r
   // the ENGINE-ONLY statement heads: keywords Spark SQL does not own (or
   // owns with incompatible semantics we must not reach), matched LAST —
   // a statement that leads with one of these but matched no engine regex
   // is malformed and must error crisply, never fall through to spark.sql
   // (a near-miss like `STOP INGEST 'gate'` or `OPTIMIZE t ZORDER BY(a b)`
   // silently reinterpreted by Spark is the hazard). Heads Spark shares
-  // (CREATE, DROP TABLE/VIEW, INSERT, SELECT, EXPLAIN, ANALYZE, SHOW,
-  // UPDATE/DELETE/MERGE on non-warehouse targets) are NOT listed.
+  // (CREATE, DROP TABLE/VIEW, INSERT, SELECT, EXPLAIN, ANALYZE, SHOW) are
+  // NOT listed. UPDATE, DELETE and MERGE never reach this guard or Spark
+  // SQL: [[dmlHead]] sends every statement they head to [[dml]], which
+  // parses it with Spark's parser and refuses what it cannot run.
   private val engineOnlyHead =
     ("""(?is)\s*(START\s+(?:ADMIT|VECTOR|SERVE|DECONTAM)\b|""" +
       """STOP\s+(?:INGEST|SERVE)\b|SNAPSHOT\b|""" +
@@ -784,15 +777,6 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
       """DROP\s+(?:SNAPSHOT|INDEX|VECTOR\s+INDEX|DEDUP\s+INDEX)\b|""" +
       """SHOW\s+(?:INGESTS|SNAPSHOTS|VERSIONS|INDEXES|QUERIES|SINKS|""" +
       """SERVES|VECTOR\s+INDEXES|DEDUP\s+INDEXES)\b).*""").r
-  // each clause takes the SQL:2003 optional `AND <cond>` refinement
-  private val whenUpdate =
-    """(?is)WHEN\s+MATCHED\s+(?:AND\s+(.+?)\s+)?THEN\s+UPDATE\s+SET\s+(.+?)\s*(?=WHEN\s+NOT\s+MATCHED|$)""".r
-  private val whenDelete =
-    """(?is)WHEN\s+MATCHED\s+(?:AND\s+(.+?)\s+)?THEN\s+DELETE""".r
-  private val whenInsertValues =
-    """(?is)WHEN\s+NOT\s+MATCHED\s+(?:AND\s+(.+?)\s+)?THEN\s+INSERT\s*(?:\(([^)]*)\)\s*)?VALUES\s*\((.+)\)\s*$""".r
-  private val whenInsertStar =
-    """(?is)WHEN\s+NOT\s+MATCHED\s+(?:AND\s+(.+?)\s+)?THEN\s+INSERT\s+\*\s*$""".r
 
   /** True iff the captured qualifier names this engine's (single) database:
     * empty, `default`, `spark_catalog`, or `spark_catalog.default`. */
@@ -1016,11 +1000,11 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
   private val plainQuery =
     """(?is)\s*(?:SELECT\b.*|WITH\b(?!.*\bINSERT\b).*)""".r
 
-  /** The copy-on-write rewrites: they stage under the writer lock alone
-    * and take the commit lock only in [[commitSection]]. */
-  private def isRewrite(stmt: String): Boolean =
-    Seq(updateStmt, deleteStmt, mergeStmt, optimizeStmt)
-      .exists(_.matches(stmt))
+  /** The copy-on-write rewrites, by verb head: they stage under the
+    * writer lock alone and take the commit lock only in [[commitSection]].
+    * A malformed one fails before it publishes anything. */
+  private val rewriteHead =
+    """(?is)\s*(?:UPDATE|DELETE|MERGE|OPTIMIZE)\b.*""".r
 
   /** The commit section of every warehouse write routed here (INSERT,
     * LOAD, UPDATE, DELETE, MERGE, OPTIMIZE): the pointer swap, the catalog
@@ -1062,7 +1046,7 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
     val stmt = rewriteSimilarTo(command)
     if (plainQuery.matches(stmt)) holding(commitLock)(query(stmt))
     else holding(writerLock) {
-      if (isRewrite(stmt)) route(stmt)
+      if (rewriteHead.matches(stmt)) route(stmt)
       else holding(commitLock)(route(stmt))
     }
   }
@@ -1386,30 +1370,7 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
       val dir = Option(dirOpt).getOrElse(sfDir)
       Graft.invalidate(spark, dir)
       status(s"refreshed corpus $dir")
-    case explainDml(dml) =>
-      // the rewrite frame is BUILT but never published — EXPLAIN must not
-      // mutate. One row, one `plan` column, like Spark's own EXPLAIN.
-      val planned = dml match {
-        case updateStmt(q, tblRaw, rest) =>
-          val tbl = localName(q, tblRaw, "EXPLAIN UPDATE")
-          val (setMap, cond) = updateParts(rest)
-          s"COW rewrite of $tbl (UPDATE)\n" +
-            cmds.explain(cmds.updatePlan(tbl, cond, setMap))
-        case deleteStmt(q, tblRaw, cond) =>
-          val tbl = localName(q, tblRaw, "EXPLAIN DELETE")
-          s"COW rewrite of $tbl (DELETE)\n" +
-            cmds.explain(cmds.deletePlan(tbl, condExpr(cond)))
-        case mergeStmt(q, tblRaw, tAliasRaw, rest) =>
-          val p = parseMerge(q, tblRaw, tAliasRaw, rest)
-          s"COW rewrite of ${p.tbl} (MERGE)\n" +
-            cmds.explain(cmds.mergePlan(p.tbl, p.src, p.tAlias, p.sAlias,
-              p.cond, p.sets, p.matchedDelete, p.insert, p.matchedCond,
-              p.insertCond))
-        case other =>
-          throw new IllegalArgumentException(s"cannot EXPLAIN: $other")
-      }
-      import spark.implicits._
-      Seq(planned).toDF("plan")
+    case dmlHead() => dml(stmt)
     case analyzeStmt(verbose, tblList) =>
       // warehouse tables re-register at the live version + compute column
       // stats; plain catalog tables get the stats pass directly. Either
@@ -1445,28 +1406,6 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
       // appends the optimizer-statistics section (TableCommands.explain)
       import spark.implicits._
       Seq(cmds.explain(query(sel))).toDF("plan")
-    case mergeStmt(q, tblRaw, tAliasRaw, rest) =>
-      // warehouse-native upsert (no reference analog — its grammar stops at
-      // INSERT/UPDATE/DELETE): one COW publish for all three merge effects.
-      // Spark SQL parses MERGE but cannot execute it on parquet catalog
-      // tables, so the engine owns the statement end-to-end.
-      val p = parseMerge(q, tblRaw, tAliasRaw, rest)
-      cmds.merge(p.tbl, p.src, p.tAlias, p.sAlias, p.cond, p.sets,
-        p.matchedDelete, p.insert, p.matchedCond, p.insertCond,
-        commitSection(dropRoutes = true))
-      status(s"merged into ${p.tbl}")
-    case updateStmt(q, tblRaw, rest) =>
-      // reference: UpdateCommand.java — Spark SQL cannot mutate plain
-      // parquet tables, so UPDATE/DELETE route to the COW rewrite
-      val tbl = localName(q, tblRaw, "UPDATE")
-      val (setMap, cond) = updateParts(rest)
-      cmds.update(tbl, cond, setMap, commitSection(dropRoutes = true))
-      status(s"updated $tbl")
-    case deleteStmt(q, tblRaw, cond) =>
-      val tbl = localName(q, tblRaw, "DELETE")
-      // reference: DeleteCommand.java
-      cmds.delete(tbl, condExpr(cond), commitSection(dropRoutes = true))
-      status(s"deleted from $tbl")
     case txnStmt(kw) => // reference: BeginCommand/CommitCommand/RollbackCommand
       val before = cmds.warehouseTables
       val r = kw.toUpperCase.replaceAll("\\s+", " ") match {
@@ -2119,18 +2058,6 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
     case other => query(other)
   }
 
-  /** Automatic index usage (the reference's intent for
-    * `commands/CreateIndexCommand.java` feeding `plans/IndexScanNode.java`,
-    * itself a stub): a PLAIN query against `t` that joins, filters, or
-    * groups on an indexed column is transparently re-pointed at the
-    * bucketed clone `<t>_by_<c>` — same rows, pre-clustered, so the join/
-    * agg runs exchange-free. Implemented as a rewrite of the PARSED (still
-    * unresolved) plan: each single-part relation with a usable index is
-    * replaced by `SubqueryAlias(t, <t>_by_<c>)`, so column references keep
-    * resolving under the original name. The substitution is always
-    * row-equivalent; the key-column check just keeps it to queries that can
-    * benefit. Non-SELECT statements and parse failures fall straight
-    * through to `spark.sql`. */
   /** Mutating statements that are VALID as plain Spark SQL over the
     * registered tables and therefore reach [[query]]'s fallthrough (the
     * engine's own UPDATE/DELETE/LOAD routes invalidate in their handlers):
@@ -2140,10 +2067,6 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
     """(?is)\s*((?:INSERT\s+(?:INTO|OVERWRITE)(?:\s+TABLE)?)|TRUNCATE\s+TABLE|ALTER\s+TABLE|(?:CREATE\s+OR\s+)?REPLACE\s+TABLE)\s+(?:`?\w+`?\.)*`?(\w+)`?\b.*""".r
 
   private def query(stmt: String): DataFrame = {
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
-    import org.apache.spark.sql.catalyst.expressions.{BinaryComparison, Expression => CExpr}
-    import org.apache.spark.sql.catalyst.plans.UsingJoin
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, SubqueryAlias, UnresolvedWith}
     stmt match {
       case fallthroughMutation(verb, tbl) =>
         // a MANIFEST-BACKED table mutated by plain Spark SQL would bypass
@@ -2186,9 +2109,34 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
         !(head == "SELECT" || head == "WITH" || stmt.trim.startsWith("(")))
       return spark.sql(stmt)
     val parsed =
-      try org.apache.spark.sql.graftbridge.Bridge.sessionState(spark)
-        .sqlParser.parsePlan(stmt)
+      try parse(stmt)
       catch { case scala.util.control.NonFatal(_) => return spark.sql(stmt) }
+    routeIndexes(parsed).map(Bridge.ofRows(spark, _))
+      .getOrElse(spark.sql(stmt))
+  }
+
+  /** Spark's own parser: the one grammar of queries and of UPDATE, DELETE
+    * and MERGE. */
+  private def parse(stmt: String): LogicalPlan =
+    Bridge.sessionState(spark).sqlParser.parsePlan(stmt)
+
+  /** Automatic index usage (the reference's intent for
+    * `commands/CreateIndexCommand.java` feeding `plans/IndexScanNode.java`,
+    * itself a stub): a PLAIN query against `t` that joins, filters, or
+    * groups on an indexed column is transparently re-pointed at the
+    * bucketed clone `<t>_by_<c>` — same rows, pre-clustered, so the join/
+    * agg runs exchange-free. Implemented as a rewrite of the PARSED (still
+    * unresolved) plan: each single-part relation with a usable index is
+    * replaced by `SubqueryAlias(t, <t>_by_<c>)`, so column references keep
+    * resolving under the original name. The substitution is always
+    * row-equivalent; the key-column check just keeps it to queries that can
+    * benefit. The rewritten plan, or None when no relation was re-pointed;
+    * [[query]] runs it for a SELECT, [[dml]] for a MERGE source. */
+  private def routeIndexes(parsed: LogicalPlan): Option[LogicalPlan] = {
+    import org.apache.spark.sql.catalyst.expressions.{BinaryComparison, Expression => CExpr}
+    import org.apache.spark.sql.catalyst.plans.UsingJoin
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, UnresolvedWith}
+    if (indexes.isEmpty) return None
     def attrs(e: CExpr): Seq[String] =
       e.collect { case a: UnresolvedAttribute => a.nameParts.last.toLowerCase }
     // columns the query joins on, compares in a filter, or groups by —
@@ -2224,8 +2172,7 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
           case None => r
         }
     }
-    if (used) org.apache.spark.sql.graftbridge.Bridge.ofRows(spark, rewritten)
-    else spark.sql(stmt)
+    if (used) Some(rewritten) else None
   }
 
   /** Parse a reference-grammar column-declaration list (`nanosql.g:293-341`
@@ -2328,194 +2275,154 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
     }
   }
 
-  private case class MergeParts(tbl: String, src: DataFrame, tAlias: String,
-      sAlias: String, cond: Column, sets: Map[String, Column],
-      matchedDelete: Boolean, insert: Option[Seq[(String, Column)]],
-      matchedCond: Option[Column], insertCond: Option[Column])
-
-  /** First TOP-LEVEL word-bounded occurrence of `kw` in `s` (outside parens
-    * and string literals), or -1. */
-  private def topLevelIndex(s: String, kw: String, from: Int = 0): Int = {
-    val top = topLevel(s)
-    var i = math.max(from, 0)
-    while (i + kw.length <= s.length) {
-      if (top(i) && s.regionMatches(true, i, kw, 0, kw.length) &&
-          (i == 0 || !s.charAt(i - 1).isLetterOrDigit) &&
-          (i + kw.length == s.length || !s.charAt(i + kw.length).isLetterOrDigit))
-        return i
-      i += 1
+  /** UPDATE, DELETE and MERGE, and EXPLAIN of each, as Spark's parser
+    * reads them: the target is resolved and guarded ([[localName]]), each
+    * catalyst expression becomes a Column, and the COW rewrite is
+    * published. Under EXPLAIN the rewrite frame is only built and printed
+    * — EXPLAIN must not mutate, and for MERGE it skips the ambiguity
+    * guard — as one row in one `plan` column, like Spark's own EXPLAIN. */
+  private def dml(stmt: String): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, MergeIntoTable, UpdateTable}
+    import org.apache.spark.sql.execution.command.ExplainCommand
+    val (plan, explain) = parse(stmt) match {
+      case ExplainCommand(p, _) => (p, true)
+      case p => (p, false)
     }
-    -1
+    def verb(v: String) = if (explain) s"EXPLAIN $v" else v
+    val commit = commitSection(dropRoutes = true)
+    // the rewrite's kind, table, frame, publish step and status line
+    val (kind, tbl, frame, publish, done) = plan match {
+      case UpdateTable(target, assignments, condition) =>
+        // reference: UpdateCommand.java
+        val (tbl, alias) = dmlTarget(target, verb("UPDATE"))
+        val sets = assigned(assignments, tbl, alias).toMap
+        val cond = condition.fold(org.apache.spark.sql.functions.lit(true))(
+          Bridge.column)
+        ("UPDATE", tbl, () => cmds.updatePlan(tbl, cond, sets, alias),
+          () => cmds.update(tbl, cond, sets, commit, alias), s"updated $tbl")
+      case DeleteFromTable(target, condition) =>
+        // reference: DeleteCommand.java
+        val (tbl, alias) = dmlTarget(target, verb("DELETE"))
+        val cond = Bridge.column(condition)
+        ("DELETE", tbl, () => cmds.deletePlan(tbl, cond, alias),
+          () => cmds.delete(tbl, cond, commit, alias), s"deleted from $tbl")
+      case m: MergeIntoTable =>
+        // warehouse-native upsert (no reference analog — its grammar stops
+        // at INSERT/UPDATE/DELETE): one COW publish for all three effects
+        val spec = mergeOf(m, verb("MERGE INTO"))
+        ("MERGE", spec.name, () => cmds.mergePlan(spec),
+          () => cmds.merge(spec, commit), s"merged into ${spec.name}")
+      case other => throw new IllegalArgumentException(
+        s"cannot run ${other.nodeName} as UPDATE, DELETE or MERGE")
+    }
+    if (!explain) { publish(); status(done) }
+    else {
+      import spark.implicits._
+      Seq(s"COW rewrite of $tbl ($kind)\n" + cmds.explain(frame())).toDF("plan")
+    }
   }
 
-  /** Shared by the MERGE route and EXPLAIN MERGE: resolve the target, split
-    * `USING <src> ON <cond> WHEN ...` at TOP-LEVEL keywords (a join ON
-    * inside the source subquery, or a CASE WHEN inside the condition, is
-    * inside parens or lacks the MATCHED/NOT follow-word and cannot split),
-    * build the source frame, and parse the WHEN clauses. */
-  private def parseMerge(q: String, tblRaw: String, tAliasRaw: String,
-      rest: String): MergeParts = {
-    val onIdx = topLevelIndex(rest, "ON")
-    require(onIdx >= 0, "MERGE: missing ON <condition>")
-    val srcRaw = rest.substring(0, onIdx).trim
-    val afterOn = rest.substring(onIdx + 2)
-    // first top-level WHEN followed by MATCHED / NOT starts the clause list
-    var whenIdx = topLevelIndex(afterOn, "WHEN")
-    while (whenIdx >= 0 && {
-      val tail = afterOn.substring(whenIdx + 4).trim.toUpperCase
-      !(tail.startsWith("MATCHED") || tail.startsWith("NOT"))
-    }) whenIdx = topLevelIndex(afterOn, "WHEN", whenIdx + 4)
-    require(whenIdx >= 0, "MERGE: missing WHEN [NOT] MATCHED clause")
-    val onCond = afterOn.substring(0, whenIdx).trim
-    val whens = afterOn.substring(whenIdx).trim
-    parseMergeParts(q, tblRaw, tAliasRaw, srcRaw, onCond, whens)
+  /** The warehouse table a DML statement writes, and the alias its
+    * expressions qualify target columns with (the table name when the
+    * statement gives none). */
+  private def dmlTarget(target: LogicalPlan, verb: String): (String, String) = {
+    val (parts, alias) = target match {
+      case SubqueryAlias(a, r: UnresolvedRelation) =>
+        (r.multipartIdentifier, Some(a.name))
+      case r: UnresolvedRelation => (r.multipartIdentifier, None)
+      case other => throw new IllegalArgumentException(
+        s"$verb: the target must be a table name, got ${other.nodeName}")
+    }
+    val tbl = localName(parts.init.map(_ + ".").mkString, parts.last, verb)
+    (tbl, alias.getOrElse(tbl))
   }
 
-  private def parseMergeParts(q: String, tblRaw: String, tAliasRaw: String,
-      srcRaw: String, onCond: String, whens: String): MergeParts = {
-    val tbl = localName(q, tblRaw, "MERGE INTO")
+  /** SET / INSERT assignments as target column -> value. A key may be
+    * qualified only by the target's alias or name: a source column cannot
+    * be assigned. */
+  private def assigned(
+      assignments: Seq[org.apache.spark.sql.catalyst.plans.logical.Assignment],
+      tbl: String, alias: String): Seq[(String, Column)] =
+    assignments.map { a =>
+      val c = a.key match {
+        case UnresolvedAttribute(Seq(c)) => c
+        case UnresolvedAttribute(Seq(q, c))
+            if q.equalsIgnoreCase(alias) || q.equalsIgnoreCase(tbl) => c
+        case k => throw new IllegalArgumentException(
+          s"target column '$k' must be unqualified or '$alias.'-qualified")
+      }
+      c -> Bridge.column(a.value)
+    }
+
+  /** A parsed MERGE as the merge kernel's input. The kernel runs one WHEN
+    * MATCHED action (UPDATE SET, UPDATE SET * or DELETE) and one WHEN NOT
+    * MATCHED insert (INSERT (...) VALUES or INSERT *), each with an
+    * optional `AND <cond>`. Any other clause Spark's grammar accepts is
+    * refused by name before anything runs. `*` maps target columns from
+    * the source by name. The source plan gets the index routing a SELECT
+    * gets ([[routeIndexes]]). */
+  private def mergeOf(m: org.apache.spark.sql.catalyst.plans.logical.MergeIntoTable,
+      verb: String): commands.TableCommands.Merge = {
+    import org.apache.spark.sql.catalyst.plans.logical.{
+      DeleteAction, InsertAction, InsertStarAction, MergeAction,
+      UpdateAction, UpdateStarAction}
+    val (tbl, tAlias) = dmlTarget(m.targetTable, verb)
     if (!cmds.tableExists(tbl)) throw new IllegalArgumentException(
       s"MERGE INTO $tbl: not a warehouse table")
-    val tAlias = Option(tAliasRaw).getOrElse(tbl)
-    val (srcDf, sAlias) = srcRaw match {
-      case mergeSrc(body, aliasRaw) =>
-        val alias = Option(aliasRaw).getOrElse(
-          body.replaceAll("`", "").trim)
-        if (body.trim.startsWith("("))
-          (query(body.trim.stripPrefix("(").stripSuffix(")")), alias)
-        else (query(s"SELECT * FROM ${body.trim}"), alias)
-      case other => throw new IllegalArgumentException(
-        s"cannot parse MERGE source: $other")
+    def refuse(clause: String) = throw new UnsupportedOperationException(
+      s"MERGE INTO $tbl: $clause is not supported - the merge runs one " +
+        "WHEN MATCHED and one WHEN NOT MATCHED clause; the table is unchanged")
+    Seq("WHEN NOT MATCHED BY SOURCE" -> m.notMatchedBySourceActions.nonEmpty,
+      "a second WHEN MATCHED clause" -> (m.matchedActions.sizeIs > 1),
+      "a second WHEN NOT MATCHED clause" -> (m.notMatchedActions.sizeIs > 1),
+      "WITH SCHEMA EVOLUTION" -> m.withSchemaEvolution)
+      .collectFirst { case (clause, true) => refuse(clause) }
+    val (srcPlan, sAlias) = m.sourceTable match {
+      case SubqueryAlias(a, p) => (p, a.name)
+      case r: UnresolvedRelation => (r, r.multipartIdentifier.last)
+      case p => (p, "__graft_merge_source")
     }
-    def optCond(g: String): Option[Column] =
-      Option(g).map(c => org.apache.spark.sql.functions.expr(c.trim))
-    val upd = whenUpdate.findFirstMatchIn(whens)
-    // LHS may be alias-qualified (t.balance); the key is the column
-    val sets = upd.map(m =>
-      assignments(m.group(2))(stripQualifier(_, tAlias, tbl)))
-      .getOrElse(Map.empty[String, Column])
-    val del = whenDelete.findFirstMatchIn(whens)
-    val matchedDelete = del.isDefined
-    require(!(matchedDelete && sets.nonEmpty),
-      "MERGE supports one WHEN MATCHED action (UPDATE or DELETE)")
-    val matchedCond = upd.map(m => optCond(m.group(1)))
-      .orElse(del.map(m => optCond(m.group(1)))).flatten
-    val star = whenInsertStar.findFirstMatchIn(whens)
-    val insVals = whenInsertValues.findFirstMatchIn(whens)
-    val insertCond = star.map(m => optCond(m.group(1)))
-      .orElse(insVals.map(m => optCond(m.group(1)))).flatten
-    val insert: Option[Seq[(String, Column)]] =
-      if (star.isDefined)
-        Some(srcDf.columns.toSeq.map(c =>
-          c -> org.apache.spark.sql.functions.col(s"`$sAlias`.`$c`")))
-      else insVals.map { m =>
-        val exprs = splitTopLevel(m.group(3))
-          .map(e => org.apache.spark.sql.functions.expr(e.trim))
-        val cols = Option(m.group(2)) match {
-          case Some(cl) => cl.split(",").map(c =>
-            stripQualifier(c.trim.replaceAll("`", ""), tAlias, tbl)).toSeq
-          case None => cmds.table(tbl).columns.toSeq
-        }
-        require(cols.length == exprs.length,
-          s"MERGE INSERT has ${cols.length} columns for ${exprs.length} values")
-        cols.zip(exprs)
-      }
-    require(sets.nonEmpty || matchedDelete || insert.nonEmpty,
-      "MERGE needs at least one WHEN clause")
-    MergeParts(tbl, srcDf, tAlias, sAlias,
-      org.apache.spark.sql.functions.expr(onCond), sets, matchedDelete,
-      insert, matchedCond, insertCond)
+    val src = Bridge.ofRows(spark, routeIndexes(srcPlan).getOrElse(srcPlan))
+    val star = src.columns.toSeq.map(c =>
+      c -> org.apache.spark.sql.functions.col(s"`$sAlias`.`$c`"))
+    def cond(a: MergeAction) = a.condition.map(Bridge.column)
+    val matched = m.matchedActions.headOption
+    val sets = matched match {
+      case Some(u: UpdateAction) => assigned(u.assignments, tbl, tAlias).toMap
+      case Some(_: UpdateStarAction) => star.toMap
+      case Some(_: DeleteAction) | None => Map.empty[String, Column]
+      case Some(a) => refuse(s"WHEN MATCHED ${a.nodeName}")
+    }
+    val notMatched = m.notMatchedActions.headOption
+    val insert = notMatched.map {
+      case i: InsertAction => assigned(i.assignments, tbl, tAlias)
+      case _: InsertStarAction => star
+      case a => refuse(s"WHEN NOT MATCHED ${a.nodeName}")
+    }
+    commands.TableCommands.Merge(tbl, src, tAlias, sAlias,
+      Bridge.column(m.mergeCondition), sets,
+      matched.exists(_.isInstanceOf[DeleteAction]), insert,
+      matched.flatMap(cond), notMatched.flatMap(cond))
   }
 
-  /** Drop a leading `t.`/alias qualifier from a MERGE assignment/insert
-    * column — the remaining name is the target column. Any other qualifier
-    * is an error (a source column cannot be assigned). */
-  private def stripQualifier(c: String, alias: String, tbl: String): String = {
-    val parts = c.replaceAll("`", "").split("\\.")
-    parts.length match {
-      case 1 => parts(0)
-      case 2 if parts(0).equalsIgnoreCase(alias) ||
-          parts(0).equalsIgnoreCase(tbl) => parts(1)
-      case _ => throw new IllegalArgumentException(
-        s"MERGE target column '$c' must be unqualified or '$alias.'-qualified")
-    }
-  }
-
-  private def condExpr(cond: String): Column =
-    if (cond == null) org.apache.spark.sql.functions.lit(true)
-    else org.apache.spark.sql.functions.expr(cond)
-
-  /** One lexing pass shared by [[splitTopLevel]] and [[splitWhere]]: flags
-    * each position that is TOP LEVEL — outside parens and outside
-    * single-quoted SQL string literals ('' escapes). Keeping a single
-    * scanner means the two splitters can never disagree on where a string
-    * ends. */
-  private def topLevel(s: String): Array[Boolean] = {
-    val top = new Array[Boolean](s.length)
-    var depth = 0; var inStr = false; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) {
-        if (c == '\'') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') i += 1
-          else inStr = false
-        }
-      } else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ => top(i) = depth == 0
-      }
-      i += 1
-    }
-    top
-  }
-
-  /** Split SET assignments on top-level commas — commas inside function-call
-    * parens or string literals don't split. */
+  /** Split a column-declaration list on top-level commas — commas inside
+    * parens (`DECIMAL(p,s)`) or single-quoted literals ('' escapes toggle
+    * twice) don't split. */
   private def splitTopLevel(s: String): Seq[String] = {
-    val top = topLevel(s)
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var start = 0
+    var depth = 0; var inStr = false; var start = 0
     s.indices.foreach { i =>
-      if (top(i) && s.charAt(i) == ',') {
-        out += s.substring(start, i); start = i + 1
+      s.charAt(i) match {
+        case '\'' => inStr = !inStr
+        case '(' if !inStr => depth += 1
+        case ')' if !inStr => depth -= 1
+        case ',' if !inStr && depth == 0 =>
+          out += s.substring(start, i); start = i + 1
+        case _ => ()
       }
     }
     out += s.substring(start)
     out.toSeq
-  }
-
-  /** `c = e, ...` (split on top-level commas) as column -> expression;
-    * `key` maps each left-hand side to its column name. */
-  private def assignments(sets: String)(
-      key: String => String): Map[String, Column] =
-    splitTopLevel(sets).map { a =>
-      val Array(c, e) = a.split("=", 2)
-      key(c.trim) -> org.apache.spark.sql.functions.expr(e.trim)
-    }.toMap
-
-  /** UPDATE's `SET` tail, shared with EXPLAIN UPDATE: the assignments and
-    * the WHERE condition (true when absent). */
-  private def updateParts(rest: String): (Map[String, Column], Column) = {
-    val (sets, cond) = splitWhere(rest)
-    (assignments(sets)(identity), condExpr(cond))
-  }
-
-  /** Split "assignments [WHERE cond]" at the first TOP-LEVEL WHERE keyword
-    * — a 'where' inside a SET string literal must not terminate the
-    * assignment list. */
-  private def splitWhere(s: String): (String, String) = {
-    val top = topLevel(s)
-    var i = 0
-    while (i + 5 <= s.length) {
-      if (top(i) && s.substring(i, i + 5).equalsIgnoreCase("where") &&
-          (i == 0 || s.charAt(i - 1).isWhitespace) &&
-          (i + 5 == s.length || s.charAt(i + 5).isWhitespace))
-        return (s.substring(0, i).trim, s.substring(i + 5).trim)
-      i += 1
-    }
-    (s.trim, null)
   }
 
   /** VERIFY's cross-table audit of the vector index (reference analog:

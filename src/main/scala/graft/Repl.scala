@@ -22,22 +22,55 @@ object Repl {
     spark.stop()
   }
 
-  /** Read one semicolon-terminated statement; quote-aware for single AND
-    * double quotes (Spark also lexes `"…"` as a string literal) plus
-    * backtick identifiers, so a `;` inside any of them does not split
+  /** Read one semicolon-terminated statement, lexed the way Spark lexes
+    * it so a `;` splits only at top level: single- and double-quoted
+    * literals (Spark lexes `"…"` as a string too) honour backslash escapes
     * (doubled-quote escapes degrade to exit+re-enter — harmless for
-    * delimiter scanning). EOF with only whitespace pending → None. */
+    * delimiter scanning), backtick identifiers do not, and `--` and
+    * `/* */` comments are dropped, so a quote or `;` inside one neither
+    * opens a literal nor splits. `/*+ hints */` are kept verbatim. EOF
+    * with only whitespace pending → None. */
   private[graft] def nextStatement(r: java.io.Reader): Option[String] = {
     val sb = new StringBuilder
     var quote: Char = 0 // 0 = top level, else the open quote char
+    var ahead = -2 // a character read ahead of its turn, or -2
+    def next(): Int =
+      if (ahead == -2) r.read() else { val c = ahead; ahead = -2; c }
+    // the rest of a `/* … */` comment; `keep` appends it (a hint)
+    def blockComment(keep: Boolean): Unit = {
+      var prev = 0
+      var c = next()
+      while (c >= 0 && !(prev == '*' && c == '/')) {
+        if (keep) sb += c.toChar
+        prev = c; c = next()
+      }
+      sb ++= (if (keep) "/" else " ")
+    }
     while (true) {
-      val c = r.read()
+      val c = next()
       if (c < 0)
         return if (sb.toString.trim.nonEmpty) Some(sb.toString) else None
       val ch = c.toChar
-      if (quote != 0) { sb += ch; if (ch == quote) quote = 0 }
+      if (quote != 0) {
+        sb += ch
+        if (ch == '\\' && quote != '`') {
+          val e = r.read()
+          if (e >= 0) sb += e.toChar
+        } else if (ch == quote) quote = 0
+      }
       else if (ch == '\'' || ch == '"' || ch == '`') { sb += ch; quote = ch }
       else if (ch == ';') return Some(sb.toString)
+      else if (ch == '-' || ch == '/') {
+        val n = r.read()
+        if (ch == '-' && n == '-') {
+          while ({ val e = r.read(); e >= 0 && e != '\n' }) ()
+          sb += '\n'
+        } else if (ch == '/' && n == '*') {
+          val h = r.read()
+          if (h == '+') { sb ++= "/*+"; blockComment(keep = true) }
+          else { ahead = h; blockComment(keep = false) }
+        } else { sb += ch; ahead = n }
+      }
       else sb += ch
     }
     None // unreachable

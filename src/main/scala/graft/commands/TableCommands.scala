@@ -1095,18 +1095,22 @@ class TableCommands(spark: SparkSession, warehouse: String) {
   /** UPDATE t SET <col> = <expr> WHERE <cond>: copy-on-write rewrite.
     * All SET expressions evaluate against the OLD row (standard SQL UPDATE
     * semantics — `SET a = b, b = a` swaps), via a single simultaneous
-    * projection. Distributed end-to-end — no driver-side row handling. */
+    * projection. Distributed end-to-end — no driver-side row handling.
+    * `alias` names the target in `cond` and `sets` (`t.id`). */
   def update(name: String, cond: Column, sets: Map[String, Column],
-      commit: TableCommands.Commit = TableCommands.bareCommit): Unit =
-    publish(name, commit = commit)(write(updatePlan(name, cond, sets)))
+      commit: TableCommands.Commit = TableCommands.bareCommit,
+      alias: String = ""): Unit =
+    publish(name, commit = commit)(write(updatePlan(name, cond, sets, alias)))
 
   /** The rewrite frame [[update]] would publish — shared with EXPLAIN
     * (reference `commands/ExplainCommand.java` covers DML too). */
-  def updatePlan(name: String, cond: Column,
-      sets: Map[String, Column]): DataFrame = {
-    val cur = table(name)
+  def updatePlan(name: String, cond: Column, sets: Map[String, Column],
+      alias: String = ""): DataFrame = {
+    val cur = aliased(name, alias)
+    requireColumns(name, "UPDATE", cur.columns, sets.keys)
+    val byLower = sets.map { case (k, v) => k.toLowerCase -> v }
     cur.select(cur.columns.map { c =>
-      sets.get(c) match {
+      byLower.get(c.toLowerCase) match {
         case Some(e) => when(cond, e).otherwise(col(c)).as(c)
         case None => col(c)
       }
@@ -1115,12 +1119,28 @@ class TableCommands(spark: SparkSession, warehouse: String) {
 
   /** DELETE FROM t WHERE <cond>: copy-on-write rewrite keeping survivors. */
   def delete(name: String, cond: Column,
-      commit: TableCommands.Commit = TableCommands.bareCommit): Unit =
-    publish(name, commit = commit)(write(deletePlan(name, cond)))
+      commit: TableCommands.Commit = TableCommands.bareCommit,
+      alias: String = ""): Unit =
+    publish(name, commit = commit)(write(deletePlan(name, cond, alias)))
 
   /** The rewrite frame [[delete]] would publish — shared with EXPLAIN. */
-  def deletePlan(name: String, cond: Column): DataFrame =
-    table(name).filter(!coalesce(cond, lit(false)))
+  def deletePlan(name: String, cond: Column, alias: String = ""): DataFrame =
+    aliased(name, alias).filter(!coalesce(cond, lit(false)))
+
+  /** Table `name` under the statement's alias (the table name when
+    * empty), so conditions and assignments may qualify their columns. */
+  private def aliased(name: String, alias: String): DataFrame =
+    table(name).alias(if (alias.isEmpty) name else alias)
+
+  /** Every assigned column must exist in the target — a misspelling must
+    * error, not leave the table silently unchanged. */
+  private def requireColumns(name: String, verb: String,
+      columns: Array[String], assigned: Iterable[String]): Unit = {
+    val have = columns.map(_.toLowerCase).toSet
+    val unknown = assigned.filterNot(c => have(c.toLowerCase))
+    require(unknown.isEmpty,
+      s"$verb column(s) ${unknown.mkString(", ")} do not exist in $name")
+  }
 
   /** MERGE INTO <name> USING <src> ON <cond> — atomic COW upsert (no analog
     * in the reference, whose grammar stops at INSERT/UPDATE/DELETE
@@ -1140,26 +1160,20 @@ class TableCommands(spark: SparkSession, warehouse: String) {
     * source (shuffle or broadcast by Catalyst's choice), the insert side is
     * the same join left_anti, and both union into a single published
     * rewrite — O(table + source), no per-row driver work. */
-  def merge(name: String, srcRaw: DataFrame, tAlias: String, sAlias: String,
-      cond: Column, updateSets: Map[String, Column], matchedDelete: Boolean,
-      insert: Option[Seq[(String, Column)]],
-      matchedCond: Option[Column] = None,
-      insertCond: Option[Column] = None,
+  def merge(m: TableCommands.Merge,
       commit: TableCommands.Commit = TableCommands.bareCommit): Unit = {
-    val tgt = table(name)
-    val marker = "__graft_merge_src"
-    val s = srcRaw.withColumn(marker, lit(true)).alias(sAlias)
+    val s = m.src.withColumn(TableCommands.mergeMarker, lit(true))
+      .alias(m.sAlias)
     // ambiguity guard: >1 source row per target row is an error (ANSI MERGE)
     val uid = "__graft_merge_uid"
-    val dup = tgt.withColumn(uid, monotonically_increasing_id()).alias(tAlias)
-      .join(s, cond).groupBy(col(uid)).count()
+    val dup = table(m.name).withColumn(uid, monotonically_increasing_id())
+      .alias(m.tAlias).join(s, m.cond).groupBy(col(uid)).count()
       .filter(col("count") > 1).limit(1).count() > 0
     if (dup) throw new IllegalArgumentException(
-      s"MERGE into $name: a target row matches more than one source row")
-    val result = mergePlan(name, srcRaw, tAlias, sAlias, cond, updateSets,
-      matchedDelete, insert, matchedCond, insertCond)
-    checkNotNull(name, result)
-    publish(name, commit = commit)(write(result))
+      s"MERGE into ${m.name}: a target row matches more than one source row")
+    val result = mergePlan(m)
+    checkNotNull(m.name, result)
+    publish(m.name, commit = commit)(write(result))
   }
 
   /** The rewrite frame [[merge]] would publish — shared with EXPLAIN
@@ -1169,21 +1183,19 @@ class TableCommands(spark: SparkSession, warehouse: String) {
     * <cond>` refinements: the action applies only where the extra condition
     * is TRUE (a NULL condition means not-satisfied, per the standard —
     * hence the coalesce-to-false). */
-  def mergePlan(name: String, srcRaw: DataFrame, tAlias: String,
-      sAlias: String, cond: Column, updateSets: Map[String, Column],
-      matchedDelete: Boolean, insert: Option[Seq[(String, Column)]],
-      matchedCond: Option[Column] = None,
-      insertCond: Option[Column] = None): DataFrame = {
-    val tgt = table(name)
-    val marker = "__graft_merge_src"
-    val s = srcRaw.withColumn(marker, lit(true)).alias(sAlias)
+  def mergePlan(m: TableCommands.Merge): DataFrame = {
+    val tgt = table(m.name)
+    val tAlias = m.tAlias
+    val s = m.src.withColumn(TableCommands.mergeMarker, lit(true))
+      .alias(m.sAlias)
     val t = tgt.alias(tAlias)
-    val joined = t.join(s, cond, "left")
-    val hit = col(s"$sAlias.$marker").isNotNull &&
-      coalesce(matchedCond.getOrElse(lit(true)), lit(false))
-    val setsLower = updateSets.map { case (k, v) => k.toLowerCase -> v }
+    val joined = t.join(s, m.cond, "left")
+    val hit = col(s"${m.sAlias}.${TableCommands.mergeMarker}").isNotNull &&
+      coalesce(m.matchedCond.getOrElse(lit(true)), lit(false))
+    requireColumns(m.name, "MERGE UPDATE", tgt.columns, m.sets.keys)
+    val setsLower = m.sets.map { case (k, v) => k.toLowerCase -> v }
     val kept =
-      if (matchedDelete)
+      if (m.matchedDelete)
         joined.filter(!hit)
           .select(tgt.schema.fields.map(f =>
             col(s"$tAlias.${f.name}").as(f.name)): _*)
@@ -1196,15 +1208,12 @@ class TableCommands(spark: SparkSession, warehouse: String) {
             case None => col(s"$tAlias.${f.name}").as(f.name)
           }
         }: _*)
-    insert match {
+    m.insert match {
       case Some(colExprs) =>
+        requireColumns(m.name, "MERGE INSERT", tgt.columns, colExprs.map(_._1))
         val byLower = colExprs.map { case (c, e) => c.toLowerCase -> e }.toMap
-        val unknown = colExprs.map(_._1.toLowerCase)
-          .filterNot(tgt.schema.fieldNames.map(_.toLowerCase).contains)
-        require(unknown.isEmpty,
-          s"MERGE INSERT column(s) ${unknown.mkString(", ")} do not exist in $name")
-        val srcOnly = s.join(t, cond, "left_anti")
-        val ins = insertCond
+        val srcOnly = s.join(t, m.cond, "left_anti")
+        val ins = m.insertCond
           .map(c => srcOnly.filter(coalesce(c, lit(false))))
           .getOrElse(srcOnly)
           .select(tgt.schema.fields.map { f =>
@@ -1339,6 +1348,19 @@ object TableCommands {
     * commit section and repoints its catalog between the two. */
   type Commit = (String, () => Unit, () => Unit) => Unit
   val bareCommit: Commit = (_, swap, sweep) => { swap(); sweep() }
+
+  /** One MERGE INTO `name` statement for [[TableCommands.merge]]: the
+    * source frame, the target and source aliases, the ON condition, the
+    * WHEN MATCHED action (`sets` to update, or `matchedDelete`) and the
+    * WHEN NOT MATCHED insert (target column -> expression), each with its
+    * optional `AND <cond>` refinement. */
+  case class Merge(name: String, src: DataFrame, tAlias: String,
+      sAlias: String, cond: Column, sets: Map[String, Column],
+      matchedDelete: Boolean, insert: Option[Seq[(String, Column)]],
+      matchedCond: Option[Column] = None, insertCond: Option[Column] = None)
+
+  /** The source-side column whose presence marks a matched join row. */
+  private val mergeMarker = "__graft_merge_src"
 
   /** Delete `f` and, for a directory, everything under it. */
   private[graft] def rm(f: java.io.File): Unit = {

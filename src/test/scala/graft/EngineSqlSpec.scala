@@ -620,6 +620,61 @@ class EngineSqlSpec extends AnyFunSuite {
     } finally engine.sql("DROP TABLE IF EXISTS exp_t")
   }
 
+  test("UPDATE, DELETE and MERGE read as Spark's parser reads them: " +
+      "literals, comments, escapes, SET *, qualified and aliased columns; " +
+      "MERGE clauses the kernel does not run are refused by name") {
+    engine.sql("DROP TABLE IF EXISTS sp_t")
+    engine.sql("DROP TABLE IF EXISTS sp_s")
+    engine.sql("CREATE TABLE sp_t (id INT, v STRING)")
+    engine.sql("CREATE COLSTORE sp_s AS SELECT * FROM VALUES (1, 'z'), " +
+      "(9, 'n') AS x(id, v)")
+    def rows() = engine.sql("SELECT id, v FROM sp_t ORDER BY id").collect()
+      .map(r => (r.getInt(0), r.getString(1))).toSeq
+    try {
+      engine.sql("INSERT INTO sp_t VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+      val merge = "MERGE INTO sp_t t USING sp_s s ON t.id = s.id "
+      Seq(
+        "WHEN NOT MATCHED BY SOURCE" -> (merge +
+          "WHEN MATCHED THEN UPDATE SET v = s.v " +
+          "WHEN NOT MATCHED BY SOURCE THEN DELETE"),
+        "second WHEN MATCHED" -> (merge +
+          "WHEN MATCHED AND s.id = 1 THEN UPDATE SET v = 'p' " +
+          "WHEN MATCHED THEN UPDATE SET v = 'q'"),
+        "second WHEN NOT MATCHED" -> (merge +
+          "WHEN NOT MATCHED AND s.id > 5 THEN INSERT * " +
+          "WHEN NOT MATCHED THEN INSERT (id) VALUES (s.id)"),
+        "WITH SCHEMA EVOLUTION" -> ("MERGE WITH SCHEMA EVOLUTION INTO sp_t t " +
+          "USING sp_s s ON t.id = s.id WHEN MATCHED THEN UPDATE SET v = s.v")
+      ).foreach { case (clause, stmt) =>
+        val e = intercept[UnsupportedOperationException](engine.sql(stmt))
+        assert(e.getMessage.contains(clause), s"$stmt -> ${e.getMessage}")
+        assert(rows() == Seq((1, "a"), (2, "b"), (3, "c")),
+          s"a refused MERGE changed the table: $stmt")
+      }
+      val unknown = intercept[IllegalArgumentException](
+        engine.sql("UPDATE sp_t SET nosuch = 'x' WHERE id = 1"))
+      assert(unknown.getMessage.contains("nosuch"), unknown.getMessage)
+      // a comma and a WHERE inside double-quoted literals, a quote inside
+      // a comment, a backslash escape
+      engine.sql("UPDATE sp_t SET v = \"k, l\" WHERE id = 1")
+      engine.sql("UPDATE sp_t SET v = \"here where there\" WHERE id = 2")
+      engine.sql("UPDATE sp_t SET v = 'y' /* don't */ WHERE id = 3")
+      assert(rows() == Seq((1, "k, l"), (2, "here where there"), (3, "y")))
+      engine.sql("UPDATE sp_t SET v = 'x\\'y' WHERE id = 2")
+      // SET * takes each target column from the source column of its name
+      engine.sql(merge + "WHEN MATCHED THEN UPDATE SET *")
+      assert(rows() == Seq((1, "z"), (2, "x'y"), (3, "y")))
+      engine.sql("UPDATE sp_t SET v = 'x' WHERE sp_t.id = 1")
+      engine.sql("DELETE FROM sp_t WHERE sp_t.id = 3")
+      assert(rows() == Seq((1, "x"), (2, "x'y")))
+      engine.sql("DELETE FROM sp_t AS d WHERE d.id = 1")
+      assert(rows() == Seq((2, "x'y")))
+    } finally {
+      engine.sql("DROP TABLE IF EXISTS sp_t")
+      engine.sql("DROP TABLE IF EXISTS sp_s")
+    }
+  }
+
   test("JSONL ingest: CREATE COLSTORE and LOAD accept .jsonl files") {
     val j1 = Files.createTempFile("graft_docs", ".jsonl")
     Files.writeString(j1,

@@ -52,4 +52,23 @@ class ReplSpec extends AnyFunSuite {
     assert(n == 3, out)
     assert(out.contains("x;y") && out.contains("se;mi"))
   }
+
+  test("framing honours backslash escapes inside quotes") {
+    val (n, out) = drive("SELECT 'x\\';y' AS s3;QUIT;")
+    assert(n == 2, out)
+    assert(out.contains("x';y"), out)
+  }
+
+  test("framing skips -- and /* */ comments: a quote or ';' inside one " +
+      "neither opens a literal nor splits") {
+    val (n, out) = drive(
+      """SELECT 1 AS c1; -- don't
+        |/* it's; here */ SELECT 2 AS c2;
+        |EXIT;
+        |SELECT 'never runs' AS dead;
+        |""".stripMargin)
+    assert(n == 3, s"EXIT must be the third statement:\n$out")
+    assert(out.contains("c2") && out.contains("bye"), out)
+    assert(!out.contains("never runs"), out)
+  }
 }
