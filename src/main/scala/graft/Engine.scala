@@ -1,8 +1,15 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute,
+  UnresolvedIdentifier, UnresolvedRelation, UnresolvedTable, UnresolvedTableOrView}
+import org.apache.spark.sql.catalyst.plans.logical.{Assignment, Command,
+  DeleteFromTable, DropTable, InsertIntoStatement, LogicalPlan, MergeIntoTable,
+  OverwriteByExpression, ParsedStatement, ReplaceTable, ReplaceTableAsSelect,
+  SubqueryAlias, UnresolvedWith, UpdateTable}
+import org.apache.spark.sql.execution.SimpleMode
+import org.apache.spark.sql.execution.command.ExplainCommand
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graftbridge.Bridge
 
 /** SQL-string entry point — the engine's primary declared interface.
@@ -13,23 +20,25 @@ import org.apache.spark.sql.graftbridge.Bridge
   * which parses and executes it; every reference test is a SQL string
   * (`sql/SqlTestCase.java:28-230`). [[Engine.sql]] is that surface on Spark.
   * `route` tries three things in order:
-  *  - the engine verbs, one route per statement family: warehouse DDL and
-  *    DML (CREATE COLSTORE/TABLE, INSERT and LOAD into, UPDATE, DELETE,
-  *    MERGE, DROP TABLE, OPTIMIZE, transactions, VERIFY, RETAIN,
-  *    SNAPSHOT) through [[commands.TableCommands]], CREATE/DROP INDEX, the
-  *    corpus-index verbs (BUILD/DROP/REFRESH VECTOR|DEDUP INDEX), the
-  *    inventory verbs ([EXPLAIN|ANALYZE] RUN QUERY), the vector verbs
-  *    (SEARCH and DECONTAM VECTORS and their START ... streaming faces),
-  *    the ingest gates, and the engine's own SHOW, EXPLAIN and ANALYZE
-  *    forms;
+  *  - the engine verbs, one regex per statement family of the engine's
+  *    own grammar: CREATE COLSTORE/TABLE, LOAD, OPTIMIZE, transactions,
+  *    VERIFY, RETAIN, SNAPSHOT through [[commands.TableCommands]],
+  *    CREATE/DROP INDEX, the corpus-index verbs (BUILD/DROP/REFRESH
+  *    VECTOR|DEDUP INDEX), the inventory verbs ([EXPLAIN|ANALYZE] RUN
+  *    QUERY), the vector verbs (SEARCH and DECONTAM VECTORS and their
+  *    START ... streaming faces), the ingest gates, and the engine's own
+  *    SHOW and ANALYZE forms;
   *  - the malformed-head guard: a statement that opens with an
   *    engine-only keyword but matched no engine form is an error, never a
   *    fallthrough;
-  *  - the Spark fallthrough: every other statement — queries, persistent
-  *    `CREATE VIEW`/`DROP VIEW`, Spark's own DDL — goes to Spark SQL
-  *    (plain queries through `query`, which may serve them from a
-  *    bucketed index), so the whole relational surface (SURVEY.md §2) is
-  *    reachable from a string exactly as from the DataFrame API.
+  *  - [[dispatch]]: every other statement is parsed once by Spark's
+  *    parser and dispatched on its plan. Queries run with index routing;
+  *    INSERT, UPDATE, DELETE, MERGE and DROP TABLE of a warehouse table,
+  *    and EXPLAIN of a query or of UPDATE/DELETE/MERGE, run in the engine;
+  *    the rest — persistent `CREATE VIEW`/`DROP VIEW`, Spark's own DDL —
+  *    runs as Spark SQL behind the write guard, so the whole relational
+  *    surface (SURVEY.md §2) is reachable from a string exactly as from
+  *    the DataFrame API.
   *
   * Tables are registered in the session CATALOG (external Parquet tables in
   * the current database), not as temp views: the reference's
@@ -567,10 +576,6 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
     }
     depth == 0
   }
-  // INSERT targeting a WAREHOUSE table routes to the engine (append through
-  // the manifest + NOT NULL checks + txn COW); other targets fall through.
-  private val insertStmt =
-    """(?is)\s*INSERT\s+INTO\s+((?:`?\w+`?\.)*)`?(\w+)`?\s*(?:\(([^)]*)\)\s*)?(VALUES\b.+?|SELECT\b.+?|WITH\b.+?)\s*;?\s*""".r
   private val loadFile =
     """(?is)\s*LOAD\s+'([^']+)'\s+INTO\s+(\w+)\s*;?\s*""".r
   // full reference grammar (`nanosql.g:426-448`): optional index name,
@@ -733,40 +738,22 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
   // BEFORE deciding a RELEASE SINK ... FORCE (the SHOW INGESTS of the
   // per-table claims)
   private val showSinksStmt = """(?is)\s*SHOW\s+SINKS\s*;?\s*""".r
-  // UPDATE, DELETE and MERGE, and EXPLAIN of each: Spark SQL parses them
-  // but cannot run them on parquet tables, so the engine owns them —
-  // [[dml]] parses the statement with Spark's parser and builds the COW
-  // rewrite (EXPLAIN prints it; reference `commands/ExplainCommand.java`
-  // covers DML statements too)
-  private val dmlHead =
-    """(?is)\s*(?:EXPLAIN\s+)?(?:UPDATE|DELETE|MERGE)\b.*""".r
   // reference grammar: `ANALYZE [VERBOSE] <table>, <table>, ...`
   // (commands/AnalyzeCommand.java:93-115 iterates a table list;
-  // nanosql.g:695-715) and `EXPLAIN <select>` with per-node PlanCost
-  // (commands/QueryCommand.java). A statement with trailing words beyond
-  // the comma-list (Spark's own ANALYZE TABLE ... COMPUTE STATISTICS)
+  // nanosql.g:695-715). A statement with trailing words beyond the
+  // comma-list (Spark's own ANALYZE TABLE ... COMPUTE STATISTICS)
   // deliberately fails this match and falls through to Spark SQL.
   private val analyzeStmt =
     """(?is)\s*ANALYZE\s+(VERBOSE\s+)?(\w+(?:\s*,\s*\w+)*)\s*;?\s*""".r
-  private val explainQuery =
-    """(?is)\s*EXPLAIN\s+((?:SELECT\b|WITH\b|\().+?)\s*;?\s*""".r
-  // storage DML/DDL accept an optional qualifier so `default.t` (and the
-  // spark_catalog spellings) route to the same warehouse table as `t`,
-  // while a genuinely foreign database is REJECTED with an engine error
-  // instead of falling through to Spark SQL's non-catalog path (whose
-  // "UPDATE ... not supported" error hides the actual problem)
-  private val dropTableStmt =
-    """(?is)\s*DROP\s+TABLE\s+(IF\s+EXISTS\s+)?((?:`?\w+`?\.)*)`?(\w+)`?\s*;?\s*""".r
   // the ENGINE-ONLY statement heads: keywords Spark SQL does not own (or
   // owns with incompatible semantics we must not reach), matched LAST —
   // a statement that leads with one of these but matched no engine regex
   // is malformed and must error crisply, never fall through to spark.sql
   // (a near-miss like `STOP INGEST 'gate'` or `OPTIMIZE t ZORDER BY(a b)`
-  // silently reinterpreted by Spark is the hazard). Heads Spark shares
-  // (CREATE, DROP TABLE/VIEW, INSERT, SELECT, EXPLAIN, ANALYZE, SHOW) are
-  // NOT listed. UPDATE, DELETE and MERGE never reach this guard or Spark
-  // SQL: [[dmlHead]] sends every statement they head to [[dml]], which
-  // parses it with Spark's parser and refuses what it cannot run.
+  // silently reinterpreted by Spark is the hazard). Heads Spark's grammar
+  // owns (CREATE, DROP TABLE/VIEW, INSERT, UPDATE, DELETE, MERGE, SELECT,
+  // EXPLAIN, ANALYZE, SHOW) are NOT listed: [[dispatch]] parses them with
+  // Spark's parser and refuses, by plan node, what the engine cannot run.
   private val engineOnlyHead =
     ("""(?is)\s*(START\s+(?:ADMIT|VECTOR|SERVE|DECONTAM)\b|""" +
       """STOP\s+(?:INGEST|SERVE)\b|SNAPSHOT\b|""" +
@@ -778,13 +765,12 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
       """SHOW\s+(?:INGESTS|SNAPSHOTS|VERSIONS|INDEXES|QUERIES|SINKS|""" +
       """SERVES|VECTOR\s+INDEXES|DEDUP\s+INDEXES)\b).*""").r
 
-  /** True iff the captured qualifier names this engine's (single) database:
-    * empty, `default`, `spark_catalog`, or `spark_catalog.default`. */
-  private def isLocalDb(qualifier: String): Boolean = {
-    val q = qualifier.replace("`", "").stripSuffix(".").toLowerCase
-    q.isEmpty || q == "default" || q == "spark_catalog" ||
-      q == "spark_catalog.default"
-  }
+  /** True iff a table name's qualifier parts name this engine's (single)
+    * database: none, `default`, `spark_catalog`, or
+    * `spark_catalog.default`. */
+  private def isLocalDb(qualifier: Seq[String]): Boolean =
+    Set(Nil, Seq("default"), Seq("spark_catalog"), Seq("spark_catalog", "default"))
+      .contains(qualifier.map(_.toLowerCase(java.util.Locale.ROOT)))
 
   /** Refuse statements against index-internal tables (and reserve their
     * name prefixes): the two-table coverage invariant (assign/codes
@@ -819,8 +805,12 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
         "gates; a dead claim is released deliberately with " +
         s"RELEASE SINK $table FORCE)"))
 
-  private def localName(qualifier: String, tbl: String, verb: String): String =
-    if (isLocalDb(qualifier)) {
+  /** The warehouse table a statement writes, by its name parts: a foreign
+    * database is refused with an engine error naming the problem rather
+    * than left to Spark SQL's non-catalog path. */
+  private def localName(parts: Seq[String], verb: String): String =
+    if (isLocalDb(parts.init)) {
+      val tbl = parts.last
       val n = guardSystemTable(cmds.resolveTable(tbl).getOrElse(tbl), verb)
       // a table some live stream appendCommits into is single-writer
       // while that stream is registered — a concurrent COW/append from
@@ -830,8 +820,9 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
         requireNoSinkClaim(n, s"$verb on $n")
       n
     } else throw new UnsupportedOperationException(
-      s"graft engine: $verb on qualified table '$qualifier$tbl' is not " +
-        s"supported — the warehouse is single-database; use the bare name '$tbl'")
+      s"graft engine: $verb on qualified table '${parts.mkString(".")}' is " +
+        "not supported — the warehouse is single-database; use the bare " +
+        s"name '${parts.last}'")
 
   /** Ingest-file reader: format by extension. The reference's ingest is
     * CSV-only (`storage/FileAnalyzer.java` profiles CSV columns); JSONL is
@@ -1044,7 +1035,7 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
     * from several threads; see the statement-concurrency note above. */
   def sql(command: String): DataFrame = {
     val stmt = rewriteSimilarTo(command)
-    if (plainQuery.matches(stmt)) holding(commitLock)(query(stmt))
+    if (plainQuery.matches(stmt)) holding(commitLock)(dispatch(parse(stmt)))
     else holding(writerLock) {
       if (rewriteHead.matches(stmt)) route(stmt)
       else holding(commitLock)(route(stmt))
@@ -1168,7 +1159,7 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
       // a catalog-managed table outside the storage engine
       create("CREATE", name, temp != null,
         s"created colstore table $name from query")(
-        cmds.createTable(name, query(select)))
+        cmds.createTable(name, query(parse(select))))
     case createTableDdl(temp, ifNotExists, name, colsDdl)
         if balancedParens(colsDdl) =>
       // reference: the canonical CREATE TABLE declares columns+constraints
@@ -1181,27 +1172,12 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
         val (schema, notNull, pk) = parseColumnDdl(colsDdl)
         cmds.createEmpty(name, schema, notNull, pk)
       }
-    case insertStmt(q, tblRaw, colList, body) if isLocalDb(q) &&
-        cmds.resolveTable(tblRaw).isDefined =>
-      // reference: InsertCommand.java:34-281 (VALUES and SELECT forms, with
-      // an optional column list; unlisted columns insert NULL). The target
-      // resolves CASE-INSENSITIVELY (SQL identifier semantics): a
-      // case-variant spelling must not slip past the engine to Spark's
-      // catalog append, which would bypass NOT NULL checks and the
-      // versioned publish.
-      val tbl = localName(q, tblRaw, "INSERT")
-      cmds.insertInto(tbl, insertRows(tbl, Option(colList), body),
-        commitSection(dropRoutes = true))
-      status(s"inserted into $tbl")
     case loadFile(path, nameRaw) =>
       // reference: LOAD <file> INTO <table> appends (LoadFileCommand.java)
-      val name = guardSystemTable(
-        cmds.resolveTable(nameRaw).getOrElse(nameRaw), "LOAD INTO")
-      // LOAD appends through the same manifest as INSERT and must honor
-      // the same fence: loading into a live twin's caller-named sink
-      // would race its per-batch commit (the one DML-shaped verb that
-      // didn't route through localName)
-      requireNoSinkClaim(name, "LOAD INTO")
+      // through the same manifest as INSERT, with the same guards: a
+      // system table is refused, and loading into a live twin's sink
+      // would race its per-batch commit
+      val name = localName(Seq(nameRaw), "LOAD INTO")
       cmds.insertInto(name, readIngest(path, Some(cmds.table(name).schema)),
         commitSection(dropRoutes = true))
       status(s"loaded $path into $name")
@@ -1220,15 +1196,9 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
       recordIndex(tbl, cols.head, idx)
       status(s"indexed $tbl by ${cols.mkString(", ")} as $idx")
     case dropIndexStmt(ifExists, idxRaw) =>
-      val found = indexes.toSeq.flatMap { case (base, m) =>
-        m.collectFirst { case (c, i) if i.equalsIgnoreCase(idxRaw) =>
-          (base, c, i)
-        }
-      }.headOption
-      found match {
-        case Some((base, c, idx)) =>
-          indexes(base).remove(c)
-          if (indexes(base).isEmpty) indexes.remove(base)
+      indexes.values.flatMap(_.values).find(_.equalsIgnoreCase(idxRaw)) match {
+        case Some(idx) =>
+          dropRoutesOf(idx)
           spark.sql(s"DROP TABLE IF EXISTS `$idx`")
           status(s"dropped index $idx")
         case None if ifExists != null =>
@@ -1254,10 +1224,9 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
       // not pay a corpus scan). One row, one `plan` column, matching
       // EXPLAIN UPDATE's convention.
       val (_, df) = inventoryQuery("EXPLAIN RUN QUERY", quoted, bare, dirOpt)
-      import spark.implicits._
-      Seq(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-        .toDF("plan")
+      status(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")),
+        "plan")
     case analyzeRunQueryStmt(quoted, bare, dirOpt) =>
       // EXECUTE the inventory query, then read the final adaptive plan's
       // operator metrics. Driving THIS DataFrame's QueryExecution (not a
@@ -1370,7 +1339,6 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
       val dir = Option(dirOpt).getOrElse(sfDir)
       Graft.invalidate(spark, dir)
       status(s"refreshed corpus $dir")
-    case dmlHead() => dml(stmt)
     case analyzeStmt(verbose, tblList) =>
       // warehouse tables re-register at the live version + compute column
       // stats; plain catalog tables get the stats pass directly. Either
@@ -1400,12 +1368,6 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
             st.sizeInBytes.toLong, df.columns.length)
         }.toDF("table", "row_count", "size_bytes", "n_columns")
       } else status(s"analyzed ${resolved.mkString(", ")}")
-    case explainQuery(sel) =>
-      // engine-owned EXPLAIN for queries: Spark's own EXPLAIN output has no
-      // cost numbers; the reference prints PlanCost per node, so this route
-      // appends the optimizer-statistics section (TableCommands.explain)
-      import spark.implicits._
-      Seq(cmds.explain(query(sel))).toDF("plan")
     case txnStmt(kw) => // reference: BeginCommand/CommitCommand/RollbackCommand
       val before = cmds.warehouseTables
       val r = kw.toUpperCase.replaceAll("\\s+", " ") match {
@@ -1429,18 +1391,6 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
         // tables were already dropped at mutation time)
         indexes.keys.toSeq.foreach(dropIndexesOf)
       status(r)
-    case dropTableStmt(ifExists, q, tblRaw) if isLocalDb(q) &&
-        cmds.resolveTable(tblRaw).isDefined =>
-      val tbl = guardSystemTable(cmds.resolveTable(tblRaw).get, "DROP TABLE")
-      // dropping a live stream's sink deletes the manifests mid-append —
-      // same fence as OPTIMIZE/DML
-      requireNoSinkClaim(tbl, "DROP TABLE")
-      // warehouse tables need BOTH the manifest dirs and the catalog entry
-      // gone, or a later CREATE COLSTORE of the same name would refuse.
-      // (A genuinely foreign-qualified DROP falls through to Spark SQL,
-      // which owns other catalogs/databases and errors clearly if absent.)
-      dropWarehouseTable(tbl, ifExists != null)
-      status(s"dropped $tbl")
     case exitStmt() =>
       // reference: ExitCommand.java — a session-control acknowledgement;
       // the owning edge decides what "ending the session" means
@@ -2048,77 +1998,127 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
       // worse: silently executing a near-miss through a different code
       // path (reference analog: nanosql.g rejects at the statement rule,
       // never reinterprets). Shared keywords (CREATE/DROP TABLE, SELECT,
-      // INSERT, EXPLAIN, ANALYZE, SHOW) still fall through by design —
-      // Spark SQL owns their general forms.
+      // INSERT, UPDATE, DELETE, MERGE, EXPLAIN, ANALYZE, SHOW) go on to
+      // [[dispatch]] by design — Spark's parser owns their grammar.
       throw new IllegalArgumentException(
         s"malformed ${head.trim.toUpperCase(java.util.Locale.ROOT)
           .replaceAll("\\s+", " ")} statement - check quoting and " +
           "argument forms (engine statements take unquoted \\w+ names, " +
           "single-quoted paths, and balanced quotes)")
-    case other => query(other)
+    case other => dispatch(parse(other))
   }
 
-  /** Mutating statements that are VALID as plain Spark SQL over the
-    * registered tables and therefore reach [[query]]'s fallthrough (the
-    * engine's own UPDATE/DELETE/LOAD routes invalidate in their handlers):
-    * their target's indexes must be dropped BEFORE delegation, or routing
-    * would keep serving the pre-mutation bucketed snapshot. */
-  private val fallthroughMutation =
-    """(?is)\s*((?:INSERT\s+(?:INTO|OVERWRITE)(?:\s+TABLE)?)|TRUNCATE\s+TABLE|ALTER\s+TABLE|(?:CREATE\s+OR\s+)?REPLACE\s+TABLE)\s+(?:`?\w+`?\.)*`?(\w+)`?\b.*""".r
+  /** Every statement no engine verb took, as Spark's parser reads it:
+    *  - a query runs with index routing; EXPLAIN of one (simple mode)
+    *    prints the engine's cost EXPLAIN: Spark's own has no cost numbers,
+    *    the reference prints PlanCost per node (TableCommands.explain);
+    *  - UPDATE, DELETE and MERGE, and EXPLAIN of each, run in [[dml]];
+    *  - an INSERT into a warehouse table appends a new version
+    *    ([[insert]]); a CTE ahead of it (`WITH s AS (...) INSERT ...`)
+    *    moves onto its source query;
+    *  - DROP TABLE [PURGE] of a warehouse table drops its manifest dirs,
+    *    catalog entry and indexes — a catalog-only drop would wedge the
+    *    name (unreadable, yet refused by CREATE);
+    *  - anything else runs as Spark SQL behind the write guard
+    *    ([[writes]]). */
+  private def dispatch(plan: LogicalPlan): DataFrame = plan match {
+    case ExplainCommand(q, SimpleMode) if isQuery(q) =>
+      status(cmds.explain(query(q)), "plan")
+    case ExplainCommand(d, _) if isDml(d) => dml(d, explain = true)
+    case d if isDml(d) => dml(d, explain = false)
+    case w @ UnresolvedWith(i: InsertIntoStatement, _, _) =>
+      dispatch(i.copy(query = w.copy(child = i.query)))
+    case i @ InsertIntoStatement(Warehouse(_), part, _, _, false, _, _)
+        if part.isEmpty => insert(i)
+    case DropTable(ref @ Warehouse(_), _, _) =>
+      val tbl = localName(nameParts(ref), "DROP TABLE")
+      dropWarehouseTable(tbl)
+      status(s"dropped $tbl")
+    case q if isQuery(q) => query(q)
+    case other =>
+      // a warehouse table written by Spark SQL would bypass versioning:
+      // the files land in the LIVE version directory — no version bump,
+      // no sink-claim fence, snapshot pins aimed at it silently change,
+      // the stream marker dies with an overwrite — and ALTER ... RENAME/
+      // SET LOCATION desyncs the catalog entry from the manifest. Refuse
+      // with the engine verbs named; a written catalog table keeps the
+      // fallthrough and leaves index routing.
+      val ws = writes(other)
+      ws.collectFirst { case (verb, Warehouse(t)) =>
+        throw new UnsupportedOperationException(s"graft engine: $verb on colstore " +
+          s"table '$t' would mutate the manifest-backed store outside its versioning " +
+          "- use the engine's INSERT INTO / UPDATE / DELETE FROM / MERGE INTO / LOAD " +
+          "/ DROP TABLE forms")
+      }
+      ws.flatMap(w => nameParts(w._2).lastOption).foreach(dropRoutesOf)
+      Bridge.ofRows(spark, other)
+  }
 
-  private def query(stmt: String): DataFrame = {
-    stmt match {
-      case fallthroughMutation(verb, tbl) =>
-        // a MANIFEST-BACKED table mutated by plain Spark SQL would bypass
-        // versioning entirely: INSERT OVERWRITE (and the `INSERT INTO
-        // TABLE t` spelling the engine's INSERT regex doesn't capture)
-        // write files straight into the LIVE version directory — no
-        // version bump, no sink-claim fence, snapshot pins aimed at that
-        // directory silently change content, and the stream marker dies
-        // with the overwrite; ALTER ... RENAME/SET LOCATION desyncs the
-        // catalog entry from the manifest (after the next maintenance
-        // repoint, two names share one store and a COW sweep leaves the
-        // alias on a swept path that Spark reads as an EMPTY table).
-        // Refuse with the engine verbs named; plain catalog tables keep
-        // the fallthrough (with index invalidation, below).
-        if (cmds.resolveTable(tbl).isDefined) {
-          val v = verb.trim.replaceAll("\\s+", " ")
-            .toUpperCase(java.util.Locale.ROOT)
-          throw new UnsupportedOperationException(
-            s"graft engine: $v on colstore table '$tbl' would mutate the " +
-              "manifest-backed store outside its versioning - use the " +
-              "engine's INSERT INTO / UPDATE / DELETE FROM / MERGE INTO " +
-              "/ LOAD / DROP TABLE forms")
-        }
-        // a mutated INDEX table must leave the routing registry, or
-        // SELECTs on its base would keep being answered from the
-        // now-divergent bucketed copy (the catalog table itself stays —
-        // the user chose to mutate it)
-        val divergent = indexes.iterator.flatMap { case (b, m) =>
-          m.collect { case (c, idx) if idx.equalsIgnoreCase(tbl) => (b, c) }
-        }.toList
-        divergent.foreach { case (b, c) =>
-          indexes(b).remove(c)
-          if (indexes(b).isEmpty) { indexes.remove(b); () }
-        }
-        dropIndexesOf(tbl)
-      case _ => ()
+  /** A plan with no command or write statement in it. */
+  private def isQuery(plan: LogicalPlan): Boolean =
+    !plan.exists(p => p.isInstanceOf[Command] || p.isInstanceOf[ParsedStatement])
+
+  private def isDml(plan: LogicalPlan): Boolean = plan.isInstanceOf[UpdateTable] ||
+    plan.isInstanceOf[DeleteFromTable] || plan.isInstanceOf[MergeIntoTable]
+
+  /** A query, served from a bucketed index where one applies. */
+  private def query(plan: LogicalPlan): DataFrame =
+    Bridge.ofRows(spark, routeIndexes(plan).getOrElse(plan))
+
+  /** A table reference naming a warehouse table: no qualifier or this
+    * engine's database, and a name that resolves case-insensitively. */
+  private object Warehouse {
+    def unapply(ref: LogicalPlan): Option[String] = nameParts(ref) match {
+      case q :+ name if isLocalDb(q) => cmds.resolveTable(name)
+      case _ => None
     }
-    val head = stmt.trim.takeWhile(!_.isWhitespace).toUpperCase
-    if (indexes.isEmpty ||
-        !(head == "SELECT" || head == "WITH" || stmt.trim.startsWith("(")))
-      return spark.sql(stmt)
-    val parsed =
-      try parse(stmt)
-      catch { case scala.util.control.NonFatal(_) => return spark.sql(stmt) }
-    routeIndexes(parsed).map(Bridge.ofRows(spark, _))
-      .getOrElse(spark.sql(stmt))
   }
 
-  /** Spark's own parser: the one grammar of queries and of UPDATE, DELETE
-    * and MERGE. */
-  private def parse(stmt: String): LogicalPlan =
-    Bridge.sessionState(spark).sqlParser.parsePlan(stmt)
+  /** The name parts of a parsed table reference. */
+  private def nameParts(ref: LogicalPlan): Seq[String] = ref match {
+    case r: UnresolvedRelation => r.multipartIdentifier
+    case UnresolvedIdentifier(parts, _) => parts
+    case UnresolvedTable(parts, _, _) => parts
+    case UnresolvedTableOrView(parts, _, _) => parts
+    case _ => Nil
+  }
+
+  /** The writes Spark SQL would make in `plan`, as (form, table
+    * reference): INSERT OVERWRITE, INSERT ... PARTITION, a multi-table
+    * INSERT (a plain INSERT into a warehouse table never gets here),
+    * INSERT ... REPLACE WHERE, TRUNCATE TABLE, ALTER TABLE and [CREATE OR]
+    * REPLACE TABLE. */
+  private def writes(plan: LogicalPlan): Seq[(String, LogicalPlan)] = {
+    def replace(orCreate: Boolean) =
+      (if (orCreate) "CREATE OR " else "") + "REPLACE TABLE"
+    plan.collect {
+      case i: InsertIntoStatement =>
+        (if (i.overwrite) "INSERT OVERWRITE"
+         else if (i.partitionSpec.nonEmpty) "INSERT ... PARTITION"
+         else "multi-table INSERT", i.table)
+      case o: OverwriteByExpression => ("INSERT ... REPLACE WHERE", o.table)
+      case t @ UnresolvedTable(_, cmd, _)
+          if cmd.startsWith("ALTER TABLE") || cmd == "TRUNCATE TABLE" => (cmd, t)
+      case t @ UnresolvedTableOrView(_, cmd, _)
+          if cmd.startsWith("ALTER TABLE") => (cmd, t)
+      case r: ReplaceTable => (replace(r.orCreate), r.name)
+      case r: ReplaceTableAsSelect => (replace(r.orCreate), r.name)
+    }
+  }
+
+  /** A table written outside the engine leaves index routing: as a base,
+    * its indexes drop; as an index, it leaves the routing registry (the
+    * catalog table itself stays — the user chose to write it), so SELECTs
+    * on its base are no longer answered from a divergent copy. */
+  private def dropRoutesOf(tbl: String): Unit = {
+    indexes.values.foreach(_.filterInPlace((_, idx) => !idx.equalsIgnoreCase(tbl)))
+    indexes.filterInPlace((_, m) => m.nonEmpty)
+    dropIndexesOf(tbl)
+  }
+
+  /** Spark's own parser: the one grammar of every statement the engine
+    * verbs do not own. */
+  private def parse(stmt: String): LogicalPlan = Bridge.parsePlan(spark, stmt)
 
   /** Automatic index usage (the reference's intent for
     * `commands/CreateIndexCommand.java` feeding `plans/IndexScanNode.java`,
@@ -2131,11 +2131,12 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
     * resolving under the original name. The substitution is always
     * row-equivalent; the key-column check just keeps it to queries that can
     * benefit. The rewritten plan, or None when no relation was re-pointed;
-    * [[query]] runs it for a SELECT, [[dml]] for a MERGE source. */
+    * [[query]] runs it for a SELECT and an INSERT source, [[dml]] for a
+    * MERGE source. */
   private def routeIndexes(parsed: LogicalPlan): Option[LogicalPlan] = {
     import org.apache.spark.sql.catalyst.expressions.{BinaryComparison, Expression => CExpr}
     import org.apache.spark.sql.catalyst.plans.UsingJoin
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, UnresolvedWith}
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join}
     if (indexes.isEmpty) return None
     def attrs(e: CExpr): Seq[String] =
       e.collect { case a: UnresolvedAttribute => a.nameParts.last.toLowerCase }
@@ -2230,49 +2231,35 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
     (StructType(fields.toSeq), notNull.toSeq.distinct, pk.toSeq.distinct)
   }
 
-  /** Build the row batch for an engine-routed INSERT: VALUES via Spark's
-    * inline-table form, SELECT/WITH via [[query]]; positional columns cast
-    * to the table schema; a declared column list maps by name with NULLs
-    * for unlisted columns (reference InsertCommand semantics). */
-  private def insertRows(tbl: String, colList: Option[String],
-      body: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
+  /** INSERT into a warehouse table (reference InsertCommand.java:34-281).
+    * The source query gets a SELECT's index routing. Its columns map to
+    * the table by position, or by name through a column list or BY NAME
+    * (unlisted columns insert NULL), each cast to its column's type; the
+    * rows append as a new version. */
+  private def insert(i: InsertIntoStatement): DataFrame = {
+    val tbl = localName(nameParts(i.table), "INSERT")
     val target = cmds.table(tbl).schema
-    val src =
-      if (body.trim.toUpperCase.startsWith("VALUES"))
-        spark.sql(s"SELECT * FROM ${body.trim}")
-      else query(body.trim)
-    colList.map(_.trim).filter(_.nonEmpty) match {
-      case None =>
-        require(src.columns.length == target.length,
-          s"INSERT arity ${src.columns.length} != ${target.length} columns of $tbl")
-        src.select(src.columns.zip(target.fields).map { case (c, f) =>
-          col(s"`$c`").cast(f.dataType).as(f.name)
-        }: _*)
-      case Some(cl) =>
-        val listed = cl.split(",").map(_.trim.replaceAll("`", "")).toSeq
-        require(listed.length == src.columns.length,
-          s"INSERT column list has ${listed.length} names for " +
-            s"${src.columns.length} values")
-        // every listed name must be a real column, once — a misspelling
-        // must error, not silently land its value as NULL
-        val targetLower = target.fields.map(_.name.toLowerCase).toSet
-        val unknown = listed.filterNot(c => targetLower(c.toLowerCase))
-        require(unknown.isEmpty,
-          s"INSERT column(s) ${unknown.mkString(", ")} do not exist in $tbl")
-        val dups = listed.groupBy(_.toLowerCase).collect {
-          case (_, vs) if vs.sizeIs > 1 => vs.head
-        }
-        require(dups.isEmpty,
-          s"INSERT column(s) listed more than once: ${dups.mkString(", ")}")
-        val byLower = listed.map(_.toLowerCase).zip(src.columns).toMap
-        src.select(target.fields.map { f =>
-          byLower.get(f.name.toLowerCase) match {
-            case Some(c) => col(s"`$c`").cast(f.dataType).as(f.name)
-            case None => lit(null).cast(f.dataType).as(f.name)
-          }
-        }.toIndexedSeq: _*)
-    }
+    val src = query(i.query)
+    val listed =
+      if (i.byName) src.columns.toSeq
+      else if (i.userSpecifiedCols.nonEmpty) i.userSpecifiedCols
+      else target.fieldNames.toSeq
+    require(listed.length == src.columns.length,
+      s"INSERT into $tbl names ${listed.length} columns for " +
+        s"${src.columns.length} values")
+    // every listed name must be a real column, once — a misspelling
+    // must error, not silently land its value as NULL
+    val byLower = target.fieldNames.map(f => f.toLowerCase -> f).toMap
+    val names = listed.map(c => byLower.getOrElse(c.toLowerCase,
+      throw new IllegalArgumentException(s"INSERT column $c does not exist in $tbl")))
+    require(names.distinct == names, "INSERT column(s) listed more than " +
+      s"once: ${names.diff(names.distinct).distinct.mkString(", ")}")
+    val named = src.toDF(names: _*)
+    cmds.insertInto(tbl, named.select(target.fields.toIndexedSeq.map { f =>
+      val v = if (names.contains(f.name)) col(s"`${f.name}`") else lit(null)
+      v.cast(f.dataType).as(f.name)
+    }: _*), commitSection(dropRoutes = true))
+    status(s"inserted into $tbl")
   }
 
   /** UPDATE, DELETE and MERGE, and EXPLAIN of each, as Spark's parser
@@ -2281,13 +2268,7 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
     * published. Under EXPLAIN the rewrite frame is only built and printed
     * — EXPLAIN must not mutate, and for MERGE it skips the ambiguity
     * guard — as one row in one `plan` column, like Spark's own EXPLAIN. */
-  private def dml(stmt: String): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, MergeIntoTable, UpdateTable}
-    import org.apache.spark.sql.execution.command.ExplainCommand
-    val (plan, explain) = parse(stmt) match {
-      case ExplainCommand(p, _) => (p, true)
-      case p => (p, false)
-    }
+  private def dml(plan: LogicalPlan, explain: Boolean): DataFrame = {
     def verb(v: String) = if (explain) s"EXPLAIN $v" else v
     val commit = commitSection(dropRoutes = true)
     // the rewrite's kind, table, frame, publish step and status line
@@ -2296,8 +2277,7 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
         // reference: UpdateCommand.java
         val (tbl, alias) = dmlTarget(target, verb("UPDATE"))
         val sets = assigned(assignments, tbl, alias).toMap
-        val cond = condition.fold(org.apache.spark.sql.functions.lit(true))(
-          Bridge.column)
+        val cond = condition.fold(lit(true))(Bridge.column)
         ("UPDATE", tbl, () => cmds.updatePlan(tbl, cond, sets, alias),
           () => cmds.update(tbl, cond, sets, commit, alias), s"updated $tbl")
       case DeleteFromTable(target, condition) =>
@@ -2312,14 +2292,10 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
         val spec = mergeOf(m, verb("MERGE INTO"))
         ("MERGE", spec.name, () => cmds.mergePlan(spec),
           () => cmds.merge(spec, commit), s"merged into ${spec.name}")
-      case other => throw new IllegalArgumentException(
-        s"cannot run ${other.nodeName} as UPDATE, DELETE or MERGE")
     }
-    if (!explain) { publish(); status(done) }
-    else {
-      import spark.implicits._
-      Seq(s"COW rewrite of $tbl ($kind)\n" + cmds.explain(frame())).toDF("plan")
-    }
+    if (explain)
+      status(s"COW rewrite of $tbl ($kind)\n" + cmds.explain(frame()), "plan")
+    else { publish(); status(done) }
   }
 
   /** The warehouse table a DML statement writes, and the alias its
@@ -2327,23 +2303,22 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
     * statement gives none). */
   private def dmlTarget(target: LogicalPlan, verb: String): (String, String) = {
     val (parts, alias) = target match {
-      case SubqueryAlias(a, r: UnresolvedRelation) =>
-        (r.multipartIdentifier, Some(a.name))
+      case SubqueryAlias(a, r: UnresolvedRelation) => (r.multipartIdentifier, Some(a.name))
       case r: UnresolvedRelation => (r.multipartIdentifier, None)
       case other => throw new IllegalArgumentException(
         s"$verb: the target must be a table name, got ${other.nodeName}")
     }
-    val tbl = localName(parts.init.map(_ + ".").mkString, parts.last, verb)
+    val tbl = localName(parts, verb)
     (tbl, alias.getOrElse(tbl))
   }
 
   /** SET / INSERT assignments as target column -> value. A key may be
     * qualified only by the target's alias or name: a source column cannot
-    * be assigned. */
-  private def assigned(
-      assignments: Seq[org.apache.spark.sql.catalyst.plans.logical.Assignment],
-      tbl: String, alias: String): Seq[(String, Column)] =
-    assignments.map { a =>
+    * be assigned. A column assigned twice is refused by name, as Spark's
+    * analyzer refuses it. */
+  private def assigned(assignments: Seq[Assignment], tbl: String,
+      alias: String): Seq[(String, Column)] = {
+    val cols = assignments.map { a =>
       val c = a.key match {
         case UnresolvedAttribute(Seq(c)) => c
         case UnresolvedAttribute(Seq(q, c))
@@ -2353,6 +2328,11 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
       }
       c -> Bridge.column(a.value)
     }
+    val lower = cols.map(_._1.toLowerCase)
+    lower.diff(lower.distinct).headOption.foreach(c => throw new IllegalArgumentException(
+      s"column '$c' of $tbl is assigned more than once; the table is unchanged"))
+    cols
+  }
 
   /** A parsed MERGE as the merge kernel's input. The kernel runs one WHEN
     * MATCHED action (UPDATE SET, UPDATE SET * or DELETE) and one WHEN NOT
@@ -2361,8 +2341,7 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
     * refused by name before anything runs. `*` maps target columns from
     * the source by name. The source plan gets the index routing a SELECT
     * gets ([[routeIndexes]]). */
-  private def mergeOf(m: org.apache.spark.sql.catalyst.plans.logical.MergeIntoTable,
-      verb: String): commands.TableCommands.Merge = {
+  private def mergeOf(m: MergeIntoTable, verb: String): commands.TableCommands.Merge = {
     import org.apache.spark.sql.catalyst.plans.logical.{
       DeleteAction, InsertAction, InsertStarAction, MergeAction,
       UpdateAction, UpdateStarAction}
@@ -2382,9 +2361,8 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
       case r: UnresolvedRelation => (r, r.multipartIdentifier.last)
       case p => (p, "__graft_merge_source")
     }
-    val src = Bridge.ofRows(spark, routeIndexes(srcPlan).getOrElse(srcPlan))
-    val star = src.columns.toSeq.map(c =>
-      c -> org.apache.spark.sql.functions.col(s"`$sAlias`.`$c`"))
+    val src = query(srcPlan)
+    val star = src.columns.toSeq.map(c => c -> col(s"`$sAlias`.`$c`"))
     def cond(a: MergeAction) = a.condition.map(Bridge.column)
     val matched = m.matchedActions.headOption
     val sets = matched match {
@@ -2435,7 +2413,6 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
     * checkpoint replay heals). Explicit distributed passes, run only when
     * the user asks to VERIFY — the same pricing as the PK audit. */
   private def auditVectorIndex(): Unit = {
-    import org.apache.spark.sql.functions.col
     val codesT = operators.VectorIndex.tableName("codes")
     val assignT = operators.VectorIndex.tableName("assign")
     if (!cmds.tableExists(codesT) || !cmds.tableExists(assignT)) return
@@ -2476,7 +2453,6 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
     * gate admission — an orphan is the re-ingest/foreign-write
     * signature). */
   private def auditDedupIndex(): Unit = {
-    import org.apache.spark.sql.functions.col
     val bandsT = operators.DedupIndex.tableName("bands")
     val metaT = operators.DedupIndex.tableName("meta")
     if (!cmds.tableExists(bandsT)) return
@@ -2569,8 +2545,9 @@ class Engine(val spark: SparkSession, sfDir: String, warehouse: String) {
   private def registerTable(name: String): Unit =
     commands.TableCommands.registerCatalog(spark, name, cmds.dataPath(name))
 
-  private def status(msg: String): DataFrame = {
+  /** A one-row frame: a command's acknowledgement, or an EXPLAIN's plan. */
+  private def status(msg: String, column: String = "status"): DataFrame = {
     import spark.implicits._
-    Seq(msg).toDF("status")
+    Seq(msg).toDF(column)
   }
 }

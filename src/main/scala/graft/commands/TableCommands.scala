@@ -464,21 +464,26 @@ class TableCommands(spark: SparkSession, warehouse: String) {
     require(Files.isDirectory(Paths.get(dp)),
       s"CURRENT of $name names a missing version")
     val n = spark.read.parquet(dp).count()
-    // table-wide PRIMARY KEY + UNIQUE audits — the cross-batch half of
-    // checkBatch's PK/UNIQUE checks, one explicit distributed pass each,
+    // table-wide NOT NULL, PRIMARY KEY and UNIQUE audits — the table-wide
+    // half of the write-time checks, one explicit distributed pass each,
     // run only when the user asks to VERIFY
+    val nn = notNullCols(name)
     val pk = pkCols(name)
     val uq = uniqueKeys(name)
-    if (pk.nonEmpty || uq.nonEmpty) {
+    if (nn.nonEmpty || pk.nonEmpty || uq.nonEmpty) {
       val t = spark.read.parquet(dp)
       val byLower = t.columns.map(c => c.toLowerCase -> c).toMap
       // a CONSTRAINTS entry naming a column the data doesn't have is itself
       // an integrity failure — report it, never NoSuchElementException
-      val missing = (pk ++ uq.flatten).filterNot(byLower.contains)
+      val missing = (nn ++ pk ++ uq.flatten).filterNot(byLower.contains)
       if (missing.nonEmpty)
         throw new IllegalStateException(
           s"VERIFY $name: declared constraint column(s) " +
             s"${missing.mkString(", ")} absent from the table data")
+      val nulls = if (nn.isEmpty) 0L
+        else t.filter(nn.map(c => col(byLower(c)).isNull).reduce(_ || _)).count()
+      if (nulls > 0) throw new IllegalStateException(s"VERIFY $name: NOT NULL " +
+        s"(${nn.mkString(", ")}) violated — $nulls row(s) with a NULL")
       if (pk.nonEmpty) {
         val dups = t.groupBy(pk.map(c => col(byLower(c))): _*)
           .count().filter(col("count") > 1).count()
@@ -776,23 +781,24 @@ class TableCommands(spark: SparkSession, warehouse: String) {
       Files.writeString(constraintsFile(name), lines.mkString("\n"))
   }
 
-  /** Reject an insert batch that puts NULL into a declared NOT NULL column
-    * — one distributed pass over the batch, only when constraints exist. */
-  private def checkNotNull(name: String, rows: DataFrame): Unit = {
+  /** Reject the rows statement `what` writes to table `name` when one
+    * puts NULL into a declared NOT NULL column — one distributed pass over
+    * the rows, only when constraints exist. */
+  private def checkNotNull(name: String, rows: DataFrame,
+      what: String): Unit = {
     val nn = notNullCols(name)
     if (nn.nonEmpty) {
       val byLower = rows.columns.map(c => c.toLowerCase -> c).toMap
       val missing = nn.filterNot(byLower.contains)
       if (missing.nonEmpty)
         throw new IllegalArgumentException(
-          s"NOT NULL column(s) ${missing.mkString(", ")} absent from " +
-            s"insert into $name")
+          s"NOT NULL column(s) ${missing.mkString(", ")} absent from $what")
       val violated = rows
         .filter(nn.map(c => col(byLower(c)).isNull).reduce(_ || _))
         .limit(1).count() > 0
       if (violated)
         throw new IllegalArgumentException(
-          s"NOT NULL constraint violated on insert into $name " +
+          s"NOT NULL constraint violated on $what " +
             s"(declared: ${nn.mkString(", ")})")
     }
   }
@@ -811,7 +817,7 @@ class TableCommands(spark: SparkSession, warehouse: String) {
     *    columnar price, paid when asked rather than smuggled into every
     *    append. */
   private def checkBatch(name: String, rows: DataFrame): Unit = {
-    checkNotNull(name, rows) // evaluates `rows` once extra; command-path cost
+    checkNotNull(name, rows, s"insert into $name") // one pass over `rows`
     val byLower = rows.columns.map(c => c.toLowerCase -> c).toMap
     def repeats(key: Seq[String], keyed: DataFrame): Boolean =
       keyed.groupBy(key.map(c => col(byLower(c))): _*)
@@ -1099,8 +1105,16 @@ class TableCommands(spark: SparkSession, warehouse: String) {
     * `alias` names the target in `cond` and `sets` (`t.id`). */
   def update(name: String, cond: Column, sets: Map[String, Column],
       commit: TableCommands.Commit = TableCommands.bareCommit,
-      alias: String = ""): Unit =
-    publish(name, commit = commit)(write(updatePlan(name, cond, sets, alias)))
+      alias: String = ""): Unit = {
+    val frame = updatePlan(name, cond, sets, alias)
+    // a SET on a declared NOT NULL column: one pass over the rows it
+    // changes (a table declaring none pays nothing)
+    val nn = notNullCols(name)
+    if (sets.keys.exists(k => nn.contains(k.toLowerCase)))
+      checkNotNull(name, assign(aliased(name, alias)
+        .filter(coalesce(cond, lit(false))), lit(true), sets), s"UPDATE $name")
+    publish(name, commit = commit)(write(frame))
+  }
 
   /** The rewrite frame [[update]] would publish — shared with EXPLAIN
     * (reference `commands/ExplainCommand.java` covers DML too). */
@@ -1108,6 +1122,12 @@ class TableCommands(spark: SparkSession, warehouse: String) {
       alias: String = ""): DataFrame = {
     val cur = aliased(name, alias)
     requireColumns(name, "UPDATE", cur.columns, sets.keys)
+    assign(cur, cond, sets)
+  }
+
+  /** `cur` with each SET column replaced by its value where `cond` holds. */
+  private def assign(cur: DataFrame, cond: Column,
+      sets: Map[String, Column]): DataFrame = {
     val byLower = sets.map { case (k, v) => k.toLowerCase -> v }
     cur.select(cur.columns.map { c =>
       byLower.get(c.toLowerCase) match {
@@ -1172,7 +1192,7 @@ class TableCommands(spark: SparkSession, warehouse: String) {
     if (dup) throw new IllegalArgumentException(
       s"MERGE into ${m.name}: a target row matches more than one source row")
     val result = mergePlan(m)
-    checkNotNull(m.name, result)
+    checkNotNull(m.name, result, s"MERGE INTO ${m.name}")
     publish(m.name, commit = commit)(write(result))
   }
 

@@ -16,6 +16,12 @@ object Bridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
   def sessionState(s: SparkSession): SessionState =
     org.apache.spark.sql.classic.ClassicConversions.castToImpl(s).sessionState
+  /** `stmt` parsed by Spark's parser under `s`'s conf, as `s.sql` parses. */
+  def parsePlan(s: SparkSession, stmt: String)
+      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
+    val impl = org.apache.spark.sql.classic.ClassicConversions.castToImpl(s)
+    impl.withActive(impl.sessionState.sqlParser.parsePlan(stmt))
+  }
   def ofRows(s: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
       : org.apache.spark.sql.DataFrame =

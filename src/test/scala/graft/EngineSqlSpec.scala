@@ -675,6 +675,78 @@ class EngineSqlSpec extends AnyFunSuite {
     }
   }
 
+  test("INSERT, DROP TABLE and EXPLAIN read as Spark's parser reads them: " +
+      "every INSERT spelling publishes a version, Spark-only writes are " +
+      "refused by name, DROP TABLE ... PURGE frees the name; duplicate " +
+      "and NULL assignments are refused, VERIFY audits NOT NULL") {
+    engine.sql("DROP TABLE IF EXISTS pi_t")
+    engine.sql("CREATE TABLE pi_t (id INT NOT NULL, v STRING)")
+    def rows() = engine.sql("SELECT id, v FROM pi_t ORDER BY id, v").collect()
+      .map(r => (r.getInt(0), r.getString(1))).toSeq
+    def live() = engine.sql("SHOW VERSIONS ON pi_t").collect()
+      .collectFirst { case r if r.getBoolean(1) => r.getString(0) }.get
+    def appends(stmt: String, added: Seq[(Int, String)]): Unit = {
+      val (before, v0) = (rows(), live())
+      assert(engine.sql(stmt).head.getString(0) == "inserted into pi_t", stmt)
+      assert(live() != v0, s"no new version: $stmt")
+      assert(rows() == (before ++ added).sortBy(identity), stmt)
+    }
+    try {
+      engine.sql("INSERT INTO pi_t VALUES (1, 'a')")
+      appends("WITH s AS (SELECT 2 AS id, 'b' AS v) " +
+        "INSERT INTO pi_t SELECT * FROM s", Seq(2 -> "b"))
+      appends("INSERT INTO TABLE pi_t VALUES (3, 'c')", Seq(3 -> "c"))
+      appends("INSERT INTO pi_t (SELECT 4, 'd')", Seq(4 -> "d"))
+      appends("INSERT INTO pi_t BY NAME SELECT 'e' AS v, 5 AS id", Seq(5 -> "e"))
+      appends("INSERT INTO pi_t TABLE pi_t", rows())
+      val (full, v) = (rows(), live())
+      val nn = intercept[IllegalArgumentException](
+        engine.sql("FROM pi_t INSERT INTO pi_t SELECT NULL, 'nn'"))
+      assert(nn.getMessage.contains("NOT NULL"), nn.getMessage)
+      // writes only Spark's own path could make, each refused by its form
+      Seq("FROM pi_t INSERT INTO pi_t SELECT 8, 'h' " +
+          "INSERT INTO pi_t SELECT 9, 'i'" -> "multi-table INSERT",
+        "INSERT INTO pi_t REPLACE WHERE id = 1 SELECT 1, 'z'" ->
+          "INSERT ... REPLACE WHERE").foreach { case (stmt, form) =>
+        val e = intercept[UnsupportedOperationException](engine.sql(stmt))
+        assert(e.getMessage.contains(s"$form on colstore table 'pi_t'"),
+          s"$stmt -> ${e.getMessage}")
+      }
+      // EXPLAIN of an INSERT plans it and writes nothing
+      engine.sql("EXPLAIN WITH s AS (SELECT 7 AS id, 'g' AS v) " +
+        "INSERT INTO pi_t SELECT * FROM s").collect()
+      val merge = "MERGE INTO pi_t t USING (SELECT 1 AS id) s ON t.id = s.id "
+      Seq("UPDATE pi_t SET v = 'first', v = 'second' WHERE id = 1" -> "v",
+        merge + "WHEN MATCHED THEN UPDATE SET v = 'p', V = 'q'" -> "v",
+        merge + "WHEN NOT MATCHED THEN INSERT (id, id) VALUES (s.id, 7)" -> "id"
+      ).foreach { case (stmt, c) =>
+        val e = intercept[IllegalArgumentException](engine.sql(stmt))
+        assert(e.getMessage.contains(s"column '$c' of pi_t is assigned more " +
+          "than once"), s"$stmt -> ${e.getMessage}")
+      }
+      Seq("UPDATE pi_t SET id = NULL WHERE id = 1" -> "UPDATE pi_t",
+        merge + "WHEN MATCHED THEN UPDATE SET id = NULL" -> "MERGE INTO pi_t"
+      ).foreach { case (stmt, named) =>
+        val e = intercept[IllegalArgumentException](engine.sql(stmt))
+        assert(e.getMessage.contains(s"NOT NULL constraint violated on $named"),
+          s"$stmt -> ${e.getMessage}")
+      }
+      assert(rows() == full && live() == v, "a refused statement wrote")
+      // a NULL written behind the engine's back fails VERIFY's audit
+      import spark.implicits._
+      Seq[(Option[Int], String)]((None, "x")).toDF("id", "v").write
+        .mode("append").parquet(engine.storage.dataPath("pi_t"))
+      val audit = intercept[IllegalStateException](engine.sql("VERIFY pi_t"))
+      assert(audit.getMessage.contains("NOT NULL (id) violated"),
+        audit.getMessage)
+      // PURGE drops the warehouse table, so the name is free again
+      assert(engine.sql("DROP TABLE pi_t PURGE").head.getString(0) ==
+        "dropped pi_t")
+      engine.sql("CREATE TABLE pi_t (id INT)")
+      assert(engine.sql("SELECT COUNT(*) FROM pi_t").head.getLong(0) == 0L)
+    } finally engine.sql("DROP TABLE IF EXISTS pi_t")
+  }
+
   test("JSONL ingest: CREATE COLSTORE and LOAD accept .jsonl files") {
     val j1 = Files.createTempFile("graft_docs", ".jsonl")
     Files.writeString(j1,

@@ -139,9 +139,8 @@ class IndexRoutingSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_cat_t").toString
     try {
       // a catalog-managed table OUTSIDE the warehouse: the engine INSERT
-      // route must not claim it — the statement reaches spark.sql through
-      // the query fallthrough, whose fallthroughMutation guard owns the
-      // index invalidation
+      // route must not claim it — the statement runs as Spark SQL behind
+      // the engine's write guard, which owns the index invalidation
       spark.sql(s"CREATE TABLE cat_t (id INT, v STRING) USING parquet LOCATION '$dir'")
       spark.sql("INSERT INTO cat_t VALUES (1, 'a'), (2, 'b')")
       engine.sql("CREATE INDEX ON cat_t (id)")
@@ -172,10 +171,10 @@ class IndexRoutingSpec extends AnyFunSuite {
       // no version bump, no fence, snapshot pins silently changed
       Seq("INSERT OVERWRITE wm_t VALUES (9, 'z')",
         "INSERT OVERWRITE TABLE wm_t VALUES (9, 'z')",
-        "INSERT INTO TABLE wm_t VALUES (9, 'z')",
         "ALTER TABLE wm_t RENAME TO wm_renamed",
         "ALTER TABLE wm_t SET LOCATION '/tmp/elsewhere'",
-        "TRUNCATE TABLE wm_t").foreach { bad =>
+        "TRUNCATE TABLE wm_t",
+        "CREATE OR REPLACE TABLE wm_t (id INT) USING parquet").foreach { bad =>
         val e = intercept[UnsupportedOperationException](engine.sql(bad))
         assert(e.getMessage.contains("colstore table 'wm_t'"),
           s"'$bad' failed for the wrong reason: ${e.getMessage}")
@@ -184,6 +183,15 @@ class IndexRoutingSpec extends AnyFunSuite {
       assert(engine.sql("SELECT count(*) AS n FROM wm_t").head().getLong(0)
         == 2L)
       assert(!spark.catalog.tableExists("wm_renamed"))
+      // `INSERT INTO TABLE` is Spark's spelling of INSERT INTO: it appends
+      // through the engine as a new version
+      def live() = engine.sql("SHOW VERSIONS ON wm_t").collect()
+        .collectFirst { case r if r.getBoolean(1) => r.getString(0) }
+      val v0 = live()
+      engine.sql("INSERT INTO TABLE wm_t VALUES (9, 'z')")
+      assert(live() != v0, "INSERT INTO TABLE must publish a new version")
+      assert(engine.sql("SELECT count(*) AS n FROM wm_t").head().getLong(0)
+        == 3L)
       // a catalog table's INDEX mutated directly: the fallthrough runs
       // (the user chose to touch the bucketed copy) but routing must
       // deregister it — a SELECT on the base may no longer be answered
